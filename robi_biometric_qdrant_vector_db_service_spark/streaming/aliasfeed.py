@@ -29,7 +29,6 @@ to follow alias swaps live.
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
 
@@ -37,8 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._tmpdirs import tracked_mkdtemp
-
-_counter = itertools.count()
+from .drain import drain
 
 ALIAS_EVENT_SCHEMA = "change string, alias string, target string"
 
@@ -114,23 +112,10 @@ def alias_feed_stream(
             versions.append(int(m.group(1)))
         _emit_versions(registry, versions, since, sink)
 
-    name = f"alias_feed_{os.getpid()}_{next(_counter)}"
     stream = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 64)
         .load(os.path.join(registry.root, "alias_log_*.json"))
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tracked_mkdtemp(prefix="stream_alias_ckpt_")
-        )
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(stream, "stream_alias", foreach_batch=on_batch)
     return spark.read.parquet(sink).filter(F.col("version") > since)

@@ -30,7 +30,6 @@ one small JSON manifest per commit.
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
 
@@ -38,8 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._tmpdirs import tracked_mkdtemp
-
-_counter = itertools.count()
+from .drain import drain
 
 CHANGE_SCHEMA = (
     "change string, point_id string, user_id string, ts double, "
@@ -110,7 +108,6 @@ def changes_feed_stream(spark: SparkSession, store, *, since: int) -> DataFrame:
             versions.append(int(m.group(1)))
         _emit_versions(store, versions, since, sink)
 
-    name = f"cdc_feed_{os.getpid()}_{next(_counter)}"
     # one micro-batch may carry SEVERAL newly-visible manifests (r19: the
     # per-trigger file cap moved from 1 to 64) — the CDC granularity is
     # unchanged, because the reader diffs each version against its
@@ -123,25 +120,13 @@ def changes_feed_stream(spark: SparkSession, store, *, since: int) -> DataFrame:
         .option("maxFilesPerTrigger", 64)
         .load(os.path.join(store.root, "manifest_*.json"))
     )
-    from .stats import _state_partitions
-
-    # explicit TRACKED checkpoint dir (the ingest.py/serving.py hygiene
-    # discipline): without it Spark allocates an untracked temp checkpoint
-    # that is retained on query failure.  Shuffle partitions pin to the
-    # state-shard band while the drain runs: each per-version diff's
-    # full-outer join handles one commit's files, not a corpus
-    with _state_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", tracked_mkdtemp(prefix="stream_cdc_ckpt_")
-            )
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    # shuffle partitions pin to the state-shard band while the drain runs:
+    # each per-version diff's full-outer join handles one commit's files,
+    # not a corpus
+    drain(
+        stream,
+        "stream_cdc",
+        foreach_batch=on_batch,
+        conf={"spark.sql.shuffle.partitions": "8"},
+    )
     return spark.read.parquet(sink).filter(F.col("version") > since)

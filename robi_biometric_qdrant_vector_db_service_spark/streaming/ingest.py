@@ -19,13 +19,13 @@ HTTP and Qdrant flushes segments every second
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.store import POINT_SCHEMA, VectorStore
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
 
 _staged_points_cache: dict[str, tuple[str, int]] = {}
 
@@ -60,19 +60,11 @@ def store_ingest_stream(spark: SparkSession, sf_dir: str) -> tuple[VectorStore, 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         store.add_batch(batch_df, normalize=False)
 
-    q = (
+    drain(
         spark.readStream.schema(POINT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
-        .parquet(path)
-        .writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tracked_mkdtemp(prefix="stream_ingest_ckpt_")
-        )
-        .start()
+        .parquet(path),
+        "stream_ingest",
+        foreach_batch=_sink,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return store, store._current_version()

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .stats import EVENTS_SCHEMA, _staged_events_path, _state_partitions
-from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
+from .stats import EVENTS_SCHEMA, _staged_events_path
 
 
 def attribution_join_stream(
@@ -63,22 +63,13 @@ def attribution_join_stream(
             f"c_ts >= p_ts - INTERVAL {bound_minutes} MINUTES"
         ),
     )
-    with _state_partitions(spark, 4):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_join_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        joined,
+        "stream_join",
+        output_mode="append",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     t = spark.table(query_name)
     return t.groupBy("purchase_id").agg(
         F.count("*").cast("bigint").alias("n_clicks"),

@@ -27,15 +27,13 @@ partitions; the gate's output is a ~12-byte stats row per admitted clip.
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._tmpdirs import tracked_mkdtemp
-
-_counter = itertools.count()
+from .drain import drain
 
 _staged_wav_cache: dict[str, str] = {}
 
@@ -103,28 +101,12 @@ def media_gate_stream(
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    name = f"media_gate_{os.getpid()}_{next(_counter)}"
     stream = (
         spark.readStream.schema("doc_id bigint, blob binary")
         .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        # AvailableNow: plan the pending files up-front, drain them as
-        # maxFilesPerTrigger-sized micro-batches, then terminate — no
-        # post-drain polling (the serving.py discipline)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tracked_mkdtemp(prefix="stream_mediagate_ckpt_")
-        )
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(stream, "stream_mediagate", foreach_batch=on_batch)
     return spark.read.parquet(sink).select(
         "doc_id", "n_segments", "speech_blocks"
     )

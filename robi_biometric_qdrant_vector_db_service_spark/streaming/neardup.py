@@ -38,9 +38,7 @@ double-count.  The filter is also a partition-prune on the state scan.
 
 from __future__ import annotations
 
-import itertools
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,37 +46,9 @@ from pyspark.sql import functions as F
 from ..sources.catalog import load_table
 from .scrub import DOCS_SCHEMA
 from ._tmpdirs import tracked_mkdtemp
-
-
-@contextmanager
-def _gate_batch_conf(spark: SparkSession, n: int):
-    """Micro-batch plan posture for the incremental near-dup gates
-    (guide §2.1/§2.2): shuffle partitions pinned to the state-shard band
-    (the native streams' ``_state_partitions`` discipline — per-batch
-    shuffles carry |batch| + matched-bucket rows, not a core-count's
-    worth), and AQE partition COALESCING off — every post-shuffle
-    partition is already request-sized, so coalescing buys nothing while
-    each coalesce round inserts an extra re-optimization barrier into a
-    batch that runs ~10 tiny stages (measured on the embedding gate:
-    coalescing off is ~1–2 s/drain faster at identical results, and it
-    keeps the verify stage's n-way parallelism for the Arrow cosine /
-    jaccard kernels instead of folding it to 1–2 tasks by byte size).
-    AQE itself stays ON — it still picks broadcast joins from runtime
-    sizes (measured ~2 s faster than static planning here).  Confs clone
-    into the streaming query at start(); at scale n is sized to
-    sustained per-trigger throughput instead."""
-    prev_n = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_c = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_n)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_c)
+from .drain import drain
 
 _staged_cache: dict[str, str] = {}
-_counter = itertools.count()
 
 BANDS_SCHEMA = "doc_id bigint, band int, key string"
 SH_SCHEMA = "doc_id bigint, sh array<string>"
@@ -247,30 +217,32 @@ def neardup_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         _process_batch(batch, batch_id, bands_store, docs_store, pairs_sink)
 
-    name = f"neardup_{os.getpid()}_{next(_counter)}"
     stream = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
-    # foreachBatch-local plan posture — see _gate_batch_conf
-    with _gate_batch_conf(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(on_batch)
-            # AvailableNow: plan the pending files up-front, drain them as
-            # maxFilesPerTrigger-sized micro-batches (read limits are
-            # honored), then terminate — no processAllAvailable polling
-            # after the last batch (the serving.py discipline)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_neardup_ckpt_"),
-            )
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    # Micro-batch plan posture for the incremental near-dup gates (guide
+    # §2.1/§2.2), held for the whole drain so every foreachBatch job plans
+    # under it: shuffle partitions pinned to the state-shard band (per-batch
+    # shuffles carry |batch| + matched-bucket rows, not a core-count's
+    # worth), and AQE partition COALESCING off — every post-shuffle
+    # partition is already request-sized, so coalescing buys nothing while
+    # each coalesce round inserts an extra re-optimization barrier into a
+    # batch that runs ~10 tiny stages (measured on the embedding gate:
+    # coalescing off is ~1–2 s/drain faster at identical results, and it
+    # keeps the verify stage's n-way parallelism for the Arrow cosine /
+    # jaccard kernels instead of folding it to 1–2 tasks by byte size).
+    # AQE itself stays ON — it still picks broadcast joins from runtime
+    # sizes (measured ~2 s faster than static planning here).  At scale the
+    # partition count is sized to sustained per-trigger throughput instead.
+    drain(
+        stream,
+        "stream_neardup",
+        foreach_batch=on_batch,
+        conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        },
+    )
     return spark.read.parquet(pairs_sink).select("doc1", "doc2", "jaccard")

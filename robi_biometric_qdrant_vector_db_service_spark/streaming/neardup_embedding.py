@@ -38,7 +38,6 @@ the pair sink nor the band/vector stores can double-count.  The
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
 
 EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 BANDS_SCHEMA = "vec_id bigint, tbl int, bucket int"
@@ -53,7 +53,6 @@ VECS_SCHEMA = "vec_id bigint, embedding array<float>"
 PAIRS_SCHEMA = "v1 bigint, v2 bigint, cos_sim double"
 
 _staged_cache: dict[str, str] = {}
-_counter = itertools.count()
 
 
 def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
@@ -195,30 +194,19 @@ def embedding_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         _process_batch(batch, batch_id, bands_store, vecs_store, pairs_sink)
 
-    name = f"neardup_emb_{os.getpid()}_{next(_counter)}"
     stream = (
         spark.readStream.schema(EMB_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
-    # foreachBatch-local plan posture + AvailableNow drain — the same
-    # micro-batch fixed-cost discipline as the text twin (see
-    # neardup._gate_batch_conf)
-    from .neardup import _gate_batch_conf
-
-    with _gate_batch_conf(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(on_batch)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_neardup_emb_ckpt_"),
-            )
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    # the text twin's micro-batch plan posture (see neardup_pairs_stream)
+    drain(
+        stream,
+        "stream_neardup_emb",
+        foreach_batch=on_batch,
+        conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        },
+    )
     return spark.read.parquet(pairs_sink).select("v1", "v2", "cos_sim")

@@ -16,21 +16,18 @@ the stage is shuffle-free.
 
 from __future__ import annotations
 
-import itertools
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
 
 DOCS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
 
 _staged_docs_cache: dict[str, str] = {}
-_counter = itertools.count()
 
 
 def staged_documents_path(spark: SparkSession, sf_dir: str) -> str:
@@ -51,26 +48,11 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..workload_pipeline import pii_scrub_frame
 
     path = staged_documents_path(spark, sf_dir)
-    name = f"pii_scrub_{os.getpid()}_{next(_counter)}"
     stream = spark.readStream.schema(DOCS_SCHEMA).option(
         "maxFilesPerTrigger", 4
     ).parquet(path)
     flagged = pii_scrub_frame(stream, carry=("source",))
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tracked_mkdtemp(prefix="stream_scrub_ckpt_"),
-        )
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    name = drain(flagged, "stream_scrub", output_mode="append")
     return (
         spark.table(name)
         .groupBy("source")
@@ -90,26 +72,11 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..workload_text import gopher_frame
 
     path = staged_documents_path(spark, sf_dir)
-    name = f"quality_gate_{os.getpid()}_{next(_counter)}"
     stream = spark.readStream.schema(DOCS_SCHEMA).option(
         "maxFilesPerTrigger", 4
     ).parquet(path)
     passed = gopher_frame(stream)
-    q = (
-        passed.writeStream.outputMode("append")
-        .format("memory")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tracked_mkdtemp(prefix="stream_scrub_ckpt_"),
-        )
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    name = drain(passed, "stream_quality", output_mode="append")
     return (
         spark.table(name)
         .groupBy("lang")

@@ -22,13 +22,13 @@ Why this shape scales:
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.search import knn_search
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
 
 PROBE_SCHEMA = "q_id bigint, q_emb array<float>"
 
@@ -77,28 +77,14 @@ def search_serving_stream(
         res = knn_search(corpus, batch_df.select("q_id", "q_emb"), k=k)
         answers.extend(res.collect())
 
-    from .stats import _state_partitions
-
-    with _state_partitions(spark, 4):
-        q = (
-            spark.readStream.schema(PROBE_SCHEMA + ", batch int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .writeStream.foreachBatch(_serve)
-            # AvailableNow: plan the pending files up-front, drain them as
-            # maxFilesPerTrigger-sized micro-batches, then terminate —
-            # no processAllAvailable polling loop after the last batch
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_serving_ckpt_"),
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        spark.readStream.schema(PROBE_SCHEMA + ", batch int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path),
+        "stream_serving",
+        foreach_batch=_serve,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     return spark.createDataFrame(
         answers, schema="q_id bigint, vec_id bigint, rank int, score double"
     )

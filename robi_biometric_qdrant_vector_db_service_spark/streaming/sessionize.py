@@ -32,15 +32,15 @@ documented ``>=`` and was corrected with it.)
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from .stats import EVENTS_SCHEMA, _state_partitions
 from ._tmpdirs import tracked_mkdtemp
+from .drain import running
+from .stats import EVENTS_SCHEMA
 
 SESSION_GAP = "30 minutes"
 # longer than any fixture's event-time span, so no real event is ever
@@ -48,7 +48,6 @@ SESSION_GAP = "30 minutes"
 WATERMARK_DELAY_DAYS = 3650
 SENTINEL_USER = -1
 
-_counter = itertools.count()
 _staged_cache: dict[str, str] = {}
 
 
@@ -119,31 +118,25 @@ def sessionization_stream(
     # state-store commit on all 5 micro-batches (measured: 8 shards
     # 4.80 s, 4 shards 3.91 s, 2 shards 4.05 s — identical 95 465 rows).
     # At scale this is sized to sustained throughput instead.
-    with _state_partitions(spark, 4):
-        q = (
-            sess.writeStream.outputMode("append")
-            .format("memory")
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_sess_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
+    with running(
+        sess,
+        "stream_sess",
+        output_mode="append",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+        available_now=False,
+    ) as q:
+        q.processAllAvailable()  # phase A: all real events into state
+        sentinel_ts = F.lit(max_ts) + F.expr(
+            f"INTERVAL {WATERMARK_DELAY_DAYS} DAYS + INTERVAL 2 HOURS"
         )
-        try:
-            q.processAllAvailable()  # phase A: all real events into state
-            sentinel_ts = F.lit(max_ts) + F.expr(
-                f"INTERVAL {WATERMARK_DELAY_DAYS} DAYS + INTERVAL 2 HOURS"
-            )
-            spark.range(1).select(
-                F.lit(10**9).alias("event_id"),
-                sentinel_ts.alias("ts"),
-                F.lit(SENTINEL_USER).cast("bigint").alias("user_id"),
-                F.lit("__sentinel__").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit("").alias("props"),
-            ).write.mode("append").parquet(path)
-            q.processAllAvailable()  # phase B: watermark passes every close
-        finally:
-            q.stop()
+        spark.range(1).select(
+            F.lit(10**9).alias("event_id"),
+            sentinel_ts.alias("ts"),
+            F.lit(SENTINEL_USER).cast("bigint").alias("user_id"),
+            F.lit("__sentinel__").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit("").alias("props"),
+        ).write.mode("append").parquet(path)
+        q.processAllAvailable()  # phase B: watermark passes every close
     return spark.table(query_name).filter(F.col("user_id") != SENTINEL_USER)

@@ -28,8 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .stats import EVENTS_SCHEMA, _staged_events_path, _state_partitions
-from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
+from .stats import EVENTS_SCHEMA, _staged_events_path
 
 _CENT = Decimal("0.01")
 
@@ -76,22 +76,13 @@ def stateful_running_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _state_partitions(spark, 4):
-        q = (
-            updated.writeStream.outputMode("update")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_stateful_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        updated,
+        "stream_stateful",
+        output_mode="update",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     t = spark.table(query_name)
     return t.groupBy("event_type").agg(
         F.max("n_ops").cast("bigint").alias("n_ops"),

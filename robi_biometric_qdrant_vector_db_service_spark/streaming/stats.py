@@ -18,34 +18,17 @@ Delta — the aggregation plan is unchanged.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
+from .drain import drain
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Streaming state shards = shuffle partitions at query start, a
-    per-query property locked into the checkpoint.  Local bounded sources
-    need a handful, not the batch engine's 32 — state-store setup dominates
-    otherwise.  At scale this is sized to sustained throughput instead."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 _staged_cache: dict[str, str] = {}
@@ -73,22 +56,13 @@ def ops_stats_stream(spark: SparkSession, sf_dir: str, query_name: str) -> DataF
         F.count("*").cast("bigint").alias("n_ops"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    with _state_partitions(spark, 4):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_stats_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        agg,
+        "stream_stats",
+        output_mode="complete",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     return spark.table(query_name)
 
 
@@ -123,22 +97,13 @@ def dedup_events_stream(spark: SparkSession, sf_dir: str, query_name: str) -> Da
     # the dedup state rows and the sink rows both shrink to (id, type) —
     # event_id determines the row, so dropping payload columns is lossless
     deduped = stream.select("event_id", "event_type").dropDuplicates(["event_id"])
-    with _state_partitions(spark, 4):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_stats_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        deduped,
+        "stream_stats",
+        output_mode="append",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     t = spark.table(query_name)
     return t.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_events"),
@@ -161,22 +126,13 @@ def hourly_window_stream(
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("window.start").alias("hour"), "event_type", "n")
     )
-    with _state_partitions(spark, 4):
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_stats_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        agg,
+        "stream_stats",
+        output_mode="update",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     # update mode may emit a window several times; keep the latest value
     t = spark.table(query_name)
     return t.groupBy("hour", "event_type").agg(F.max("n").alias("n"))
@@ -202,22 +158,13 @@ def dedup_events_stream_watermarked(
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with _state_partitions(spark, 4):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="stream_stats_ckpt_"),
-            )
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        deduped,
+        "stream_stats",
+        output_mode="append",
+        query_name=query_name,
+        conf={"spark.sql.shuffle.partitions": "4"},
+    )
     t = spark.table(query_name)
     return t.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_events"),

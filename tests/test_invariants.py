@@ -775,3 +775,61 @@ def test_alias_registry_concurrent_writers_lose_no_ops(spark, tmp_path):
     assert not errors
     table = reg.aliases()
     assert len(table) == 40, f"lost writes: {sorted(table)}"
+
+
+def test_failed_segment_write_leaves_no_orphan_segment(spark, tmp_path):
+    """An overlapped segment write whose job raises must not leave its
+    partial ``seg_*`` dir behind: the failing write removes its own dir and
+    the successful sibling's is removed too, so every segment dir on disk
+    is referenced by the current manifest."""
+    import glob
+    import os
+
+    import pytest
+
+    store = _payload_store(spark, tmp_path, [("a", [1.0] * 4, "u1", 1.0, {})])
+    # one input partition: no exchange, so the UDF below raises inside the
+    # write task, after the job has created the segment dir
+    good = store._with_bucket(
+        spark.createDataFrame(
+            [("b", [1.0] * 4, "u2", 2.0, {})],
+            "point_id string, embedding array<double>, user_id string, "
+            "ts double, metadata map<string,string>",
+        ).coalesce(1)
+    )
+
+    def _boom(point_id):
+        raise RuntimeError("planted segment write failure")
+
+    bad = good.withColumn("point_id", F.udf(_boom, "string")("point_id"))
+    with pytest.raises(Exception, match="planted segment write failure"):
+        store._write_segments_overlapped([good, bad])
+    live = {
+        os.path.dirname(os.path.dirname(f))
+        for fs in store._read_manifest().values()
+        for f in fs
+    }
+    on_disk = set(glob.glob(os.path.join(store.root, "seg_*")))
+    assert on_disk <= live, sorted(on_disk - live)
+
+
+def test_manifest_memo_is_bounded_and_hands_out_copies(spark, tmp_path):
+    """The per-store manifest memo keeps a constant number of versions
+    however many commits a long-lived store takes (older versions still
+    read from disk), and file stats handed out are copies down to the
+    [min_ts, max_ts] pairs."""
+    from robi_biometric_qdrant_vector_db_service_spark.operators import store as store_mod
+
+    store = _payload_store(spark, tmp_path, [("a", [1.0] * 4, "u1", 5.0, {})])
+    v0_buckets = store._read_manifest(0)
+    for _ in range(3 * store_mod._MANIFEST_MEMO_VERSIONS):
+        store._publish_manifest(store._read_manifest())
+    assert len(store._manifest_mem) <= store_mod._MANIFEST_MEMO_VERSIONS
+    assert store._read_manifest(0) == v0_buckets
+    assert len(store._manifest_mem) <= store_mod._MANIFEST_MEMO_VERSIONS
+
+    stats = store._read_file_stats()
+    f = next(iter(stats))
+    before = list(stats[f])
+    stats[f][0] = -1.0
+    assert store._read_file_stats()[f] == before

@@ -45,6 +45,26 @@ def test_every_stream_start_declares_a_checkpoint_location():
     assert not offenders, offenders
 
 
+def test_streams_start_only_in_the_drain_helper():
+    """One stream start site: ``.writeStream`` appears only in
+    ``streaming/drain.py`` anywhere in the package, and no other streaming
+    module sets SQL conf — per-drain overrides go through the helper's
+    ``conf``, which is scoped to one drain and restored on failure."""
+    package = STREAMING_DIR.parent
+    writers = sorted(
+        p.relative_to(package).as_posix()
+        for p in package.rglob("*.py")
+        if ".writeStream" in p.read_text()
+    )
+    assert writers == ["streaming/drain.py"], writers
+    setters = sorted(
+        p.name
+        for p in STREAMING_DIR.glob("*.py")
+        if p.name != "drain.py" and ".conf.set(" in p.read_text()
+    )
+    assert not setters, setters
+
+
 def test_tracked_dirs_swept_at_interpreter_exit(tmp_path):
     """Allocate tracked dirs in a child interpreter, record their paths,
     and assert they are gone after a clean exit."""
