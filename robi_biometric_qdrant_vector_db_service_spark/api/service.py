@@ -161,62 +161,26 @@ class VectorService:
         # Pin ONE manifest snapshot per request (ADVICE r5): search and
         # payload enrichment must see the same corpus version, or a
         # concurrent add/delete on another HTTP thread can drop hits from
-        # the inner join or mix payloads from a newer version.
-        from ..operators.search import knn_search
+        # the inner join or mix payloads from a newer version.  A
+        # "quantization" of "int8" or "binary" serves the reference's
+        # configured quantized search (qdrant_client.py:129-138) over the
+        # same snapshot's at-rest companion columns.
+        from ..operators.store import search_corpus
 
-        version = self.store._current_version()
         quant = body.get("quantization")
-        if quant is not None:
-            # the reference's configured quantized search served over the
-            # wire (qdrant_client.py:129-138: INT8 scalar quantization,
-            # oversampling, rescore=True): stage 1 runs on the at-rest
-            # companion column of the SAME pinned snapshot, survivors
-            # rescore exactly; "binary" is the BQ tier
-            from pyspark.sql import functions as F
-
-            from ..operators import ann
-
-            corpus = self.store.read(
-                user_id=body.get("user_filter"),
-                version=version,
-                with_index=True,
-            )
-            oversample = int(body.get("oversample", 3))
-            if quant == "int8":
-                src = corpus.select(
-                    F.col("point_id").alias("vec_id"), "embedding", "e8"
-                )
-                hits = ann.int8_rescore_topk(
-                    src, probe, k=k, oversample=oversample
-                )
-            elif quant == "binary":
-                src = corpus.select(
-                    F.col("point_id").alias("vec_id"), "embedding", "bq_code"
-                )
-                hits = ann.bq_hamming_topk(
-                    src, probe, k=k, oversample=oversample, dims=None
-                )
-            else:
-                raise ValueError(
-                    f"quantization must be 'int8', 'binary' or omitted, "
-                    f"got {quant!r}"
-                )
-            hits = hits.withColumnRenamed("vec_id", "point_id")
-            if body.get("threshold") is not None:
-                hits = hits.filter(
-                    F.col("score") >= float(body["threshold"])
-                )
-        else:
-            corpus = self.store.read(
-                user_id=body.get("user_filter"), version=version
-            )
-            hits = knn_search(
-                corpus,
-                probe,
-                k,
-                score_threshold=body.get("threshold"),
-                corpus_id="point_id",
-            )
+        corpus = self.store.read(
+            user_id=body.get("user_filter"),
+            version=self.store._current_version(),
+            with_index=quant is not None,
+        )
+        hits = search_corpus(
+            corpus,
+            probe,
+            k,
+            score_threshold=body.get("threshold"),
+            quantization=quant,
+            oversample=int(body.get("oversample", 3)),
+        )
         # enrich hits with payload columns, as the reference's results carry
         # (id, score, user_id, metadata, timestamp)
         rows = (

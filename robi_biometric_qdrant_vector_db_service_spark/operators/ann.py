@@ -223,39 +223,23 @@ INT8_QUANT_EXPR = (
 
 
 def _rescore_survivors(
-    corpus: DataFrame, survivors: DataFrame, k: int, cache=None
+    corpus: DataFrame, survivors: DataFrame, k: int
 ) -> DataFrame:
-    """Shared stage 2 of the companion-column rescore family: fetch the
-    surviving ids' FULL vectors, rescore with exact cosine, final
-    (score DESC, vec_id) ranking.  ``survivors``: (q_id, q_emb, vec_id)
-    — ``queries × oversample × k`` rows, request-sized by construction.
+    """The one exact stage 2 of the two-stage rescore family (INT8,
+    matryoshka and BQ here, PQ-ADC and IVFPQ in operators.pq): each
+    operator owns only its stage 1, which yields ``survivors``
+    (q_id, q_emb, vec_id) — ``queries × oversample × k`` rows,
+    request-sized by construction.  They broadcast onto the float column
+    ``corpus.select("vec_id", "embedding")``, are rescored with exact
+    cosine, and are ranked by (score DESC, vec_id), the reference's
+    rescore=True step (qdrant_client.py:129-138).
 
-    With ``cache`` (e.g. ``lambda df: track_scratch(df.persist())``) the
-    fetch is BY ID, the way the reference's serving flow reads the
-    full-precision vectors of stage-1 survivors (qdrant_client.py's
-    rescore=True path): stage 1 materializes once, its ids come back to
-    the driver (one request-sized collect — k·oversample·|queries| ids,
-    the points-API shape, NOT a data collect), and the stage-2 scan
-    carries them as an IN predicate — PushedFilters on the float-column
-    scan, so at rest the fetch skips every row group/page without a
-    survivor instead of streaming the corpus through the join.  The
-    survivor frame itself (ids + broadcast q_emb) joins from the cache,
-    never recomputed.
-
-    Without ``cache`` (direct operator calls), stage 2 stays the
-    single-plan broadcast join-back — same results, no materialization
-    to manage."""
-    if cache is not None:
-        surv = cache(survivors)
-        ids = sorted({r[0] for r in surv.select("vec_id").collect()})
-        fetch = corpus.filter(F.col("vec_id").isin(ids)).select(
-            "vec_id", "embedding"
-        )
-        survivors = surv
-    else:
-        fetch = corpus.select("vec_id", "embedding")
-    rescored = fetch.join(F.broadcast(survivors), "vec_id").withColumn(
-        "score", F.expr(cosine_sql("embedding", "q_emb"))
+    One lazy plan: building it starts no Spark job, and both stages run
+    only when the caller collects (tests/test_rescore_path.py)."""
+    rescored = (
+        corpus.select("vec_id", "embedding")
+        .join(F.broadcast(survivors), "vec_id")
+        .withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
     )
     w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
     return (
@@ -263,6 +247,16 @@ def _rescore_survivors(
         .filter(F.col("rank") <= k)
         .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
     )
+
+
+def _companion(corpus: DataFrame, name: str, derive: str) -> DataFrame:
+    """Stage 1's input column: the MATERIALIZED companion ``name`` when
+    the corpus carries it (stage 1 then scans only (vec_id, companion) —
+    ReadSchema excludes ``embedding``, pinned in tests/test_plans.py),
+    else ``derive`` folded into the scan projection.  Both give the same
+    values, so both feed the same stage 2."""
+    col = F.col(name) if name in corpus.columns else F.expr(derive)
+    return corpus.select("vec_id", col.alias(name))
 
 
 def int8_rescore_topk(
@@ -270,50 +264,31 @@ def int8_rescore_topk(
     probes: DataFrame,
     k: int = 10,
     oversample: int = 3,
-    *,
-    cache=None,
 ) -> DataFrame:
     """O4 scalar quantization + rescore (qdrant_client.py:129-138):
-    stage 1 ranks by the exact-integer INT8 dot product, stage 2 rescores
-    the surviving ``oversample × k`` with full-precision cosine.
+    stage 1 ranks by the exact-integer INT8 dot product, stage 2
+    (``_rescore_survivors``) rescores the surviving ``oversample × k``
+    with full-precision cosine.
 
-    When the corpus carries a MATERIALIZED ``e8`` companion column
-    (written by VectorStore at ingest, or the staged rescore layout in
-    workload_ann), stage 1 scans ONLY (vec_id, e8) — the 4× at-rest
-    scan-byte win is in the plan (ReadSchema excludes ``embedding``,
-    pinned in tests/test_plans.py) — and survivors join back to the float
-    column for the exact rescore.  Without the companion the quantization
-    folds into the scan projection (same results, single-scan plan).
+    Stage 1 reads the ``e8`` companion column when the corpus carries it
+    MATERIALIZED (written by VectorStore at ingest, or the staged rescore
+    layout in workload_ann) — the 4× at-rest scan-byte win — and
+    otherwise quantizes ``embedding`` in the scan projection.
 
     Returns (q_id, vec_id, rank, score) — final ranking by exact score.
     """
-    qq = INT8_QUANT_EXPR.format(col="q_emb")
-    p8 = probes.withColumn("p8", F.expr(qq))
+    p8 = probes.withColumn("p8", F.expr(INT8_QUANT_EXPR.format(col="q_emb")))
     int_dot = "aggregate(zip_with(e8, p8, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
     w1 = Window.partitionBy("q_id").orderBy(F.desc("iscore"), F.col("vec_id"))
-    if "e8" in corpus.columns:
-        pairs = corpus.select("vec_id", "e8").crossJoin(F.broadcast(p8))
-        survivors = (
-            pairs.withColumn("iscore", F.expr(int_dot))
-            .withColumn("irank", F.row_number().over(w1))
-            .filter(F.col("irank") <= oversample * k)
-            .select("q_id", "q_emb", "vec_id")
-        )
-        return _rescore_survivors(corpus, survivors, k, cache=cache)
-    qc = INT8_QUANT_EXPR.format(col="embedding")
-    c8 = corpus.withColumn("e8", F.expr(qc))
-    pairs = c8.crossJoin(F.broadcast(p8))
-    stage1 = pairs.withColumn("iscore", F.expr(int_dot))
-    survivors = stage1.withColumn("irank", F.row_number().over(w1)).filter(
-        F.col("irank") <= oversample * k
+    survivors = (
+        _companion(corpus, "e8", INT8_QUANT_EXPR.format(col="embedding"))
+        .crossJoin(F.broadcast(p8))
+        .withColumn("iscore", F.expr(int_dot))
+        .withColumn("irank", F.row_number().over(w1))
+        .filter(F.col("irank") <= oversample * k)
+        .select("q_id", "q_emb", "vec_id")
     )
-    rescored = survivors.withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _rescore_survivors(corpus, survivors, k)
 
 
 def matryoshka_rescore_topk(
@@ -322,26 +297,23 @@ def matryoshka_rescore_topk(
     k: int = 10,
     prefix_dims: int = 16,
     oversample: int = 3,
-    *,
-    cache=None,
 ) -> DataFrame:
     """Matryoshka (MRL) truncated-dimension search: stage 1 ranks by
     cosine over only the FIRST ``prefix_dims`` dimensions of both sides
     (matryoshka-trained embeddings front-load information, so a short
-    prefix is a usable coarse score), stage 2 rescores the surviving
-    ``oversample × k`` candidates with full-dimension cosine.
+    prefix is a usable coarse score), stage 2 (``_rescore_survivors``)
+    rescores the surviving ``oversample × k`` candidates with
+    full-dimension cosine.
 
     This is the quantization-free member of the rescore family
-    (INT8 / BQ / PQ-ADC above): instead of narrowing the VALUE width it
+    (INT8 / BQ / PQ-ADC): instead of narrowing the VALUE width it
     narrows the DIMENSION count — at rest the prefix is a separate
-    ``dims/prefix_dims``-times-smaller column, and when the corpus
-    carries it materialized (``e_pre{prefix_dims}``, written by
-    VectorStore at ingest or the staged rescore layout in workload_ann)
-    stage 1 scans ONLY that column (ReadSchema excludes ``embedding``,
-    pinned in tests/test_plans.py) — the same scan-byte win the
-    quantized tiers get, with no codebook to train or drift.  Without
-    the companion the slice folds into the scan projection (same
-    results, single-scan plan).
+    ``dims/prefix_dims``-times-smaller column.  Stage 1 reads it when
+    the corpus carries it materialized (``e_pre{prefix_dims}``, written
+    by VectorStore at ingest or the staged rescore layout in
+    workload_ann) — the same scan-byte win the quantized tiers get, with
+    no codebook to train or drift — and otherwise slices ``embedding``
+    in the scan projection.
 
     Determinism: both stages are double-precision folds over the same
     float32 inputs (the slice changes which elements are summed, not how
@@ -355,34 +327,18 @@ def matryoshka_rescore_topk(
         raise ValueError(
             f"matryoshka_rescore_topk: prefix_dims must be >= 1, got {prefix_dims}"
         )
+    companion = f"e_pre{prefix_dims}"
     pp = probes.withColumn("p_pre", F.expr(f"slice(q_emb, 1, {prefix_dims})"))
     w1 = Window.partitionBy("q_id").orderBy(F.desc("pscore"), F.col("vec_id"))
-    companion = f"e_pre{prefix_dims}"
-    if companion in corpus.columns:
-        pairs = (
-            corpus.select("vec_id", F.col(companion).alias("e_pre"))
-            .crossJoin(F.broadcast(pp))
-        )
-        survivors = (
-            pairs.withColumn("pscore", F.expr(cosine_sql("e_pre", "p_pre")))
-            .withColumn("prank", F.row_number().over(w1))
-            .filter(F.col("prank") <= oversample * k)
-            .select("q_id", "q_emb", "vec_id")
-        )
-        return _rescore_survivors(corpus, survivors, k, cache=cache)
-    cp = corpus.withColumn("e_pre", F.expr(f"slice(embedding, 1, {prefix_dims})"))
-    pairs = cp.crossJoin(F.broadcast(pp))
-    stage1 = pairs.withColumn("pscore", F.expr(cosine_sql("e_pre", "p_pre")))
-    survivors = stage1.withColumn("prank", F.row_number().over(w1)).filter(
-        F.col("prank") <= oversample * k
+    survivors = (
+        _companion(corpus, companion, f"slice(embedding, 1, {prefix_dims})")
+        .crossJoin(F.broadcast(pp))
+        .withColumn("pscore", F.expr(cosine_sql(companion, "p_pre")))
+        .withColumn("prank", F.row_number().over(w1))
+        .filter(F.col("prank") <= oversample * k)
+        .select("q_id", "q_emb", "vec_id")
     )
-    rescored = survivors.withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _rescore_survivors(corpus, survivors, k)
 
 
 # --------------------------------------------------------------------------
@@ -435,23 +391,20 @@ def bq_hamming_topk(
     *,
     oversample: int = 4,
     dims: int | None = 64,
-    cache=None,
 ) -> DataFrame:
     """O4 binary quantization + oversampled exact rescore: stage 1 ranks
     candidates by the HAMMING distance between sign-bit codes (popcount
     of XOR — integer-exact on both engines, so survivors are
-    deterministic with the (hamming, vec_id) tiebreak), stage 2 rescores
-    the surviving ``oversample × k`` with full-precision cosine.
+    deterministic with the (hamming, vec_id) tiebreak), stage 2
+    (``_rescore_survivors``) rescores the surviving ``oversample × k``
+    with full-precision cosine.
 
-    Plan shape: probe codes broadcast; with a MATERIALIZED ``bq{dims}``
-    companion column (written by VectorStore at ingest or the staged
-    rescore layout in workload_ann) stage 1 scans ONLY (vec_id, code) —
-    1 BIGINT word per 32 dims, the 32× at-rest scan-byte win, ReadSchema
-    excluding ``embedding`` pinned in tests/test_plans.py — and
-    survivors join back for the exact rescore.  Without the companion
-    the pack folds into the scan projection (same results, single-scan
-    plan).  The two ranking windows are the only shuffles either way,
-    same as ``int8_rescore_topk``.
+    Plan shape: probe codes broadcast; stage 1 reads the ``bq{dims}``
+    companion column when the corpus carries it MATERIALIZED (written by
+    VectorStore at ingest or the staged rescore layout in workload_ann)
+    — 1 BIGINT word per 32 dims, the 32× at-rest scan-byte win — and
+    otherwise packs ``embedding`` in the scan projection.  The two
+    ranking windows are the only shuffles, same as ``int8_rescore_topk``.
 
     ``dims=None`` switches to the dim-agnostic pack (word count from
     ``size(q_emb)`` at run time) and the store's ``bq_code`` companion
@@ -460,48 +413,28 @@ def bq_hamming_topk(
 
     Returns (q_id, vec_id, rank, score) — final ranking by exact score.
     """
-    q_pack = (
-        bq_words_dynamic_expr("q_emb")
-        if dims is None
-        else bq_words_expr("q_emb", dims)
-    )
-    p = probes.withColumn("q_code", F.expr(q_pack))
+
+    def pack(col: str) -> str:
+        if dims is None:
+            return bq_words_dynamic_expr(col)
+        return bq_words_expr(col, dims)
+
+    companion = "bq_code" if dims is None else f"bq{dims}"
+    p = probes.withColumn("q_code", F.expr(pack("q_emb")))
     hamming = (
-        "aggregate(zip_with(c_code, q_code, (a, b) -> bit_count(a ^ b)), "
+        f"aggregate(zip_with({companion}, q_code, (a, b) -> bit_count(a ^ b)), "
         "0, (acc, v) -> acc + v)"
     )
     w1 = Window.partitionBy("q_id").orderBy(F.asc("hamming"), F.col("vec_id"))
-    companion = "bq_code" if dims is None else f"bq{dims}"
-    if companion in corpus.columns:
-        pairs = (
-            corpus.select("vec_id", F.col(companion).alias("c_code"))
-            .crossJoin(F.broadcast(p))
-        )
-        survivors = (
-            pairs.withColumn("hamming", F.expr(hamming))
-            .withColumn("hrank", F.row_number().over(w1))
-            .filter(F.col("hrank") <= oversample * k)
-            .select("q_id", "q_emb", "vec_id")
-        )
-        return _rescore_survivors(corpus, survivors, k, cache=cache)
-    c_pack = (
-        bq_words_dynamic_expr("embedding")
-        if dims is None
-        else bq_words_expr("embedding", dims)
+    survivors = (
+        _companion(corpus, companion, pack("embedding"))
+        .crossJoin(F.broadcast(p))
+        .withColumn("hamming", F.expr(hamming))
+        .withColumn("hrank", F.row_number().over(w1))
+        .filter(F.col("hrank") <= oversample * k)
+        .select("q_id", "q_emb", "vec_id")
     )
-    c = corpus.withColumn("c_code", F.expr(c_pack))
-    pairs = c.crossJoin(F.broadcast(p))
-    stage1 = pairs.withColumn("hamming", F.expr(hamming))
-    survivors = stage1.withColumn("hrank", F.row_number().over(w1)).filter(
-        F.col("hrank") <= oversample * k
-    )
-    rescored = survivors.withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _rescore_survivors(corpus, survivors, k)
 
 
 def bitext_margin_pairs(

@@ -20,8 +20,9 @@ Batch-Spark shape (everything declarative, no Python in the hot path):
   dot products is built as a nested array and broadcast; the scan-side
   expression is ``Σ_j lut[j][code_j]`` — a codegen'd ``aggregate`` over
   the m-byte code column, never touching the float vectors.  Top
-  ``oversample × k`` by ADC score, then exact cosine rescore (the
-  reference's own oversample-rescore discipline).
+  ``oversample × k`` by ADC score, then the rescore family's shared exact
+  cosine stage 2 (``ann._rescore_survivors``, the reference's own
+  oversample-rescore discipline).
 
 Approximation contract: vectors are L2-normalized before encoding, so the
 ADC score estimates cosine; recall-vs-exact is asserted in
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sql, l2_normalize_sql
+from .ann import _rescore_survivors, label_centroids
 
 _DEC12 = "decimal(28,12)"
 
@@ -208,21 +210,9 @@ def pq_adc_topk(
         stage1.withColumn("arank", F.row_number().over(w1))
         .filter(F.col("arank") <= oversample * k)
         .select("q_id", "vec_id")
+        .join(F.broadcast(probes.select("q_id", "q_emb")), "q_id")
     )
-
-    # exact rescore only for survivors: join back to the float vectors
-    qe = probes.select("q_id", "q_emb")
-    rescored = (
-        survivors.join(corpus.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qe), "q_id")
-        .withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _rescore_survivors(corpus, survivors, k)
 
 
 def ivfpq_topk(
@@ -261,13 +251,13 @@ def ivfpq_topk(
        per-candidate score is an exact DECIMAL sum (order-independent →
        deterministic under any partitioning);
     3. exact cosine rescore of the ``oversample × k`` survivors against the
-       float vectors — only oversample×k×Q rows ever touch full vectors.
+       float vectors (``ann._rescore_survivors``, the family's one stage 2)
+       — only oversample×k×Q rows ever touch full vectors.
 
-    One q_id shuffle serves the ADC aggregate and both ranking windows
-    (subset satisfaction).  Returns (q_id, vec_id, rank, score).
+    One q_id shuffle serves the ADC aggregate and the ADC ranking window
+    (subset satisfaction); the exact ranking window shuffles only the
+    request-sized rescored rows.  Returns (q_id, vec_id, rank, score).
     """
-    from .ann import label_centroids
-
     if coarse is None:
         coarse = label_centroids(corpus).select(
             F.col(cell_col).alias("cell"), "centroid"
@@ -316,17 +306,8 @@ def ivfpq_topk(
         adc.withColumn("arank", F.row_number().over(w1))
         .filter(F.col("arank") <= oversample * k)
         .select("q_id", "vec_id")
+        .join(F.broadcast(probes.select("q_id", "q_emb")), "q_id")
     )
 
     # stage 3 — exact rescore of survivors only
-    rescored = (
-        survivors.join(corpus.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(probes.select("q_id", "q_emb")), "q_id")
-        .withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _rescore_survivors(corpus, survivors, k)

@@ -159,6 +159,64 @@ def _bucket_col(n_buckets: int):
     ).otherwise(bucket)
 
 
+def search_corpus(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    *,
+    score_threshold: float | None = None,
+    quantization: str | None = None,
+    oversample: int = 3,
+) -> DataFrame:
+    """Search one store snapshot — the single search dispatch behind
+    ``VectorStore.search`` and the HTTP facade, which passes its
+    version-pinned ``read`` so payload enrichment joins the same
+    snapshot.  ``corpus`` is a ``VectorStore.read`` frame (read
+    ``with_index=True`` for quantized search), ``queries`` is
+    (q_id, q_emb); returns (q_id, point_id, rank, score).
+
+    Without ``quantization`` this is exact cosine top-k.  With it, the
+    two-stage rescore over the MATERIALIZED companion columns every
+    segment carries (qdrant_client.py:129-138 configures exactly this:
+    INT8 scalar quantization, ``oversampling`` 3.0, ``rescore`` True):
+    ``"int8"`` prescreens by integer dot product over the at-rest ``e8``
+    column, ``"binary"`` by Hamming distance over ``bq_code``; both
+    rescore the ``oversample × k`` survivors with exact cosine
+    (``ann._rescore_survivors``), and stage 1 never reads the float
+    vectors (ReadSchema pinned in tests/test_plans.py).
+    ``score_threshold`` applies to the exact score, as in Qdrant."""
+    from . import ann
+    from .search import knn_search
+
+    if quantization is None:
+        return knn_search(
+            corpus,
+            queries,
+            k,
+            score_threshold=score_threshold,
+            corpus_id="point_id",
+        )
+    if quantization == "int8":
+        src = corpus.select(F.col("point_id").alias("vec_id"), "embedding", "e8")
+        out = ann.int8_rescore_topk(src, queries, k=k, oversample=oversample)
+    elif quantization == "binary":
+        src = corpus.select(
+            F.col("point_id").alias("vec_id"), "embedding", "bq_code"
+        )
+        out = ann.bq_hamming_topk(
+            src, queries, k=k, oversample=oversample, dims=None
+        )
+    else:
+        raise ValueError(
+            f"quantization must be 'int8', 'binary' or None, got "
+            f"{quantization!r}"
+        )
+    out = out.withColumnRenamed("vec_id", "point_id")
+    if score_threshold is not None:
+        out = out.filter(F.col("score") >= score_threshold)
+    return out
+
+
 class VectorStore:
     """Batch analogue of QdrantVectorStore (src/core/qdrant_client.py:33-520).
 
@@ -1445,69 +1503,34 @@ class VectorStore:
         shard_selector: list[str] | None = None,
         quantization: str | None = None,
         oversample: int = 3,
-        cache=None,
     ) -> DataFrame:
         """The reference's ``POST /vectors/search`` end-to-end over the
-        store (qdrant_client.py:311-405): optional user filter (resolved to
-        one bucket's files by the manifest, O1), cosine top-k with
-        threshold, result keyed by ``point_id``.  ``queries``: (q_id, q_emb).
+        store (qdrant_client.py:311-405): ``read`` the current snapshot,
+        then ``search_corpus`` over it.  ``queries``: (q_id, q_emb).
 
-        ``shard_selector`` is Qdrant's multitenant ``shard_key_selector``:
-        the search fans out to ONLY the named tenants' shards (here: the
-        manifest buckets their keys hash to — other buckets' files never
-        reach the scan), the 100 TB posture where a tenant query costs the
-        tenant's data, not the corpus.
-
-        ``quantization`` enables the two-stage rescore serving path over
-        the MATERIALIZED companion columns every segment carries
-        (qdrant_client.py:129-138 configures exactly this: INT8 scalar
-        quantization, ``oversampling`` 3.0, ``rescore`` True):
-        ``"int8"`` prescreens by integer dot product over the at-rest
-        ``e8`` column, ``"binary"`` by Hamming distance over ``bq_code``;
-        both rescore the ``oversample × k`` survivors with exact cosine,
-        and stage 1 never reads the float vectors (ReadSchema pinned in
-        tests/test_plans.py).  ``score_threshold`` applies to the exact
-        rescored score, as in Qdrant."""
-        from . import ann
-        from .search import knn_search
-
+        ``user_filter`` resolves to one bucket's files by the manifest
+        (O1).  ``shard_selector`` is Qdrant's multitenant
+        ``shard_key_selector``: the search fans out to ONLY the named
+        tenants' shards (here: the manifest buckets their keys hash to —
+        other buckets' files never reach the scan), the 100 TB posture
+        where a tenant query costs the tenant's data, not the corpus.
+        ``quantization``, ``oversample`` and ``score_threshold`` are
+        ``search_corpus``'s."""
         if user_filter is not None and shard_selector is not None:
             raise ValueError("pass user_filter or shard_selector, not both")
-        if quantization is None:
-            corpus = self.read(user_id=user_filter, user_ids=shard_selector)
-            return knn_search(
-                corpus,
-                queries,
-                k,
-                score_threshold=score_threshold,
-                corpus_id="point_id",
-            )
         corpus = self.read(
-            user_id=user_filter, user_ids=shard_selector, with_index=True
+            user_id=user_filter,
+            user_ids=shard_selector,
+            with_index=quantization is not None,
         )
-        if quantization == "int8":
-            src = corpus.select(
-                F.col("point_id").alias("vec_id"), "embedding", "e8"
-            )
-            out = ann.int8_rescore_topk(
-                src, queries, k=k, oversample=oversample, cache=cache
-            )
-        elif quantization == "binary":
-            src = corpus.select(
-                F.col("point_id").alias("vec_id"), "embedding", "bq_code"
-            )
-            out = ann.bq_hamming_topk(
-                src, queries, k=k, oversample=oversample, dims=None, cache=cache
-            )
-        else:
-            raise ValueError(
-                f"quantization must be 'int8', 'binary' or None, got "
-                f"{quantization!r}"
-            )
-        out = out.withColumnRenamed("vec_id", "point_id")
-        if score_threshold is not None:
-            out = out.filter(F.col("score") >= score_threshold)
-        return out
+        return search_corpus(
+            corpus,
+            queries,
+            k,
+            score_threshold=score_threshold,
+            quantization=quantization,
+            oversample=oversample,
+        )
 
     # -- A1/A3 stats --------------------------------------------------------
 

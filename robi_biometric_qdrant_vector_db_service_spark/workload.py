@@ -30,6 +30,7 @@ from .functions.vector import cosine_sql, norm_sql
 from .operators import search as S
 from .operators.payload_index import _CJK_CHAR_CLASS
 from .sources.catalog import load_table
+from .streaming._tmpdirs import tracked_mkdtemp
 
 # Number of probe vectors used by the vector-query fixtures (the reference's
 # "request batch"): small by construction, broadcast to the corpus side.
@@ -1053,8 +1054,6 @@ def _fresh_store(spark: SparkSession, sf_dir: str, tag: str):
     zero-copy manifest clone (operators.store.VectorStore.clone), so its
     mutations write only their own segments — both faster per query and a
     direct exercise of the snapshot-isolation the segment model provides."""
-    import tempfile
-
     from .operators.store import VectorStore
 
     if sf_dir not in _base_store_cache:
@@ -1066,11 +1065,11 @@ def _fresh_store(spark: SparkSession, sf_dir: str, tag: str):
             (F.lit(1000.0) + F.col("vec_id")).alias("ts"),
             F.create_map().cast("map<string,string>").alias("metadata"),
         )
-        root = tempfile.mkdtemp(prefix="vstore_base_")
+        root = tracked_mkdtemp("vstore_base_")
         VectorStore.create(spark, root, points)
         _base_store_cache[sf_dir] = root
     base = VectorStore(spark, _base_store_cache[sf_dir])
-    return base.clone(tempfile.mkdtemp(prefix=f"vstore_{tag}_"))
+    return base.clone(tracked_mkdtemp(f"vstore_{tag}_"))
 
 
 def _prepare_base_store(spark: SparkSession, sf_dir: str) -> None:
@@ -1175,8 +1174,6 @@ def set_payload_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle describes exactly these 60 rows, and ids 0..59 already
     exist in the corpus clone (an ``add_batch`` there would double them
     and every mutation count — the round-9 regression)."""
-    import tempfile
-
     from .operators.store import VectorStore
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1190,7 +1187,7 @@ def set_payload_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("seq"), F.col("vec_id").cast("string"),
         ).alias("metadata"),
     )
-    store = VectorStore.create(spark, tempfile.mkdtemp(prefix="vstore_setpl_"), pts)
+    store = VectorStore.create(spark, tracked_mkdtemp("vstore_setpl_"), pts)
     n_set = store.set_payload(
         [str(i) for i in range(10)], {"tier": "gold", "reviewed": "1"}
     )
@@ -1239,8 +1236,6 @@ def update_vectors_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     (normalized-reversed for the 10, raw seed for the rest) via one
     element + the norm.  Empty-store seed discipline (the r9 lesson):
     the oracle describes exactly these 60 rows."""
-    import tempfile
-
     from .operators.store import VectorStore
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1251,7 +1246,7 @@ def update_vectors_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1000.0) + F.col("vec_id")).alias("ts"),
         F.create_map(F.lit("seq"), F.col("vec_id").cast("string")).alias("metadata"),
     )
-    store = VectorStore.create(spark, tempfile.mkdtemp(prefix="vstore_updvec_"), pts)
+    store = VectorStore.create(spark, tracked_mkdtemp("vstore_updvec_"), pts)
     updates = (
         emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20))
         .select(
@@ -1283,8 +1278,6 @@ def _blue_green_stores(spark: SparkSession, sf_dir: str):
     blue/green deployment; the query under test is the SWAP + read, not
     the reindex).  Each invocation still gets its own alias registry."""
     if sf_dir not in _blue_green_cache:
-        import tempfile
-
         from .operators.store import VectorStore
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1299,8 +1292,8 @@ def _blue_green_stores(spark: SparkSession, sf_dir: str):
             )
 
         _blue_green_cache[sf_dir] = (
-            VectorStore.create(spark, tempfile.mkdtemp(prefix="vstore_blue_"), pts(10, "blue")),
-            VectorStore.create(spark, tempfile.mkdtemp(prefix="vstore_green_"), pts(60, "green")),
+            VectorStore.create(spark, tracked_mkdtemp("vstore_blue_"), pts(10, "blue")),
+            VectorStore.create(spark, tracked_mkdtemp("vstore_green_"), pts(60, "green")),
         )
     return _blue_green_cache[sf_dir]
 
@@ -1327,12 +1320,10 @@ def alias_blue_green_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     goes through ``resolve()`` AFTER the swap, so the oracle describes
     exactly the green collection: all 60 points, gen=green — any blue
     row (10 points, gen=blue) surviving the swap fails the hash."""
-    import tempfile
-
     from .operators.store import AliasRegistry
 
     blue, green = _blue_green_stores(spark, sf_dir)
-    reg = AliasRegistry(spark, tempfile.mkdtemp(prefix="aliases_"))
+    reg = AliasRegistry(spark, tracked_mkdtemp("aliases_"))
     reg.update_aliases([("create", "prod", blue.root)])
     assert reg.aliases() == {"prod": blue.root}
     reg.update_aliases([("create", "prod", green.root)])  # re-point IS the swap
@@ -1350,11 +1341,10 @@ def _alias_scripted_registry(spark: SparkSession):
     member: it bumps the log version but nets zero change rows — the alias
     plane's compaction-silence contract."""
     import os
-    import tempfile
 
     from .operators.store import AliasRegistry, VectorStore
 
-    root = tempfile.mkdtemp(prefix="aliasfeed_")
+    root = tracked_mkdtemp("aliasfeed_")
     blue = VectorStore.create(spark, os.path.join(root, "blue"))
     green = VectorStore.create(spark, os.path.join(root, "green"))
     reg = AliasRegistry(spark, os.path.join(root, "registry"))
@@ -1485,8 +1475,6 @@ def points_update_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins, now including each survivor's vector (element + norm:
     reversed-normalized for 3–7, upsert-normalized for 0–2, raw seed
     for the rest)."""
-    import tempfile
-
     from .operators.store import VectorStore
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1500,7 +1488,7 @@ def points_update_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("seq"), F.col("vec_id").cast("string"),
         ).alias("metadata"),
     )
-    store = VectorStore.create(spark, tempfile.mkdtemp(prefix="vstore_batch_"), pts)
+    store = VectorStore.create(spark, tracked_mkdtemp("vstore_batch_"), pts)
     moved = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").cast("string").alias("point_id"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("embedding"),
@@ -1611,13 +1599,11 @@ def snapshot_restore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle describes the snapshotted version exactly; pinning against
     post-snapshot source mutations is pytest-covered
     (tests/test_invariants.py)."""
-    import tempfile
-
     from .operators.store import VectorStore
 
     _, green = _blue_green_stores(spark, sf_dir)
-    snap = green.snapshot(tempfile.mkdtemp(prefix="snap_"))
-    restored = VectorStore.restore(spark, snap, tempfile.mkdtemp(prefix="restored_"))
+    snap = green.snapshot(tracked_mkdtemp("snap_"))
+    restored = VectorStore.restore(spark, snap, tracked_mkdtemp("restored_"))
     return restored.read().select(
         "point_id", F.element_at("metadata", "gen").alias("gen")
     )

@@ -16,6 +16,7 @@ from .functions.textconst import dcos as _dcos
 from .operators import ann
 from .plans.strategy import smart_search
 from .sources.catalog import load_table
+from .streaming._tmpdirs import tracked_mkdtemp
 
 # duck_kmeans_cents_cte is defined ABOVE the registry-root import:
 # workload_dedup's SemDeDup oracle calls it at registration time, which
@@ -66,16 +67,8 @@ from .workload import (  # noqa: E402
     _fresh_store,
     _probes,
     register,
-    track_scratch,
 )
 
-
-def _stage_cache(df: DataFrame) -> DataFrame:
-    """Per-invocation materialization hook for the rescore family's
-    stage-1 survivors: persisted inside the timed region, released by the
-    next query invocation (the ``track_scratch`` discipline) — never a
-    cross-run cache."""
-    return track_scratch(df.persist())
 
 _DUCK_Q = f"SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}"
 
@@ -134,9 +127,7 @@ def _cell_partitioned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here the label coarse code) so a probe's cell list prunes whole
     partition directories at scan time — staged once per process."""
     if sf_dir not in _cell_layout_cache:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="ivf_cells_")
+        out = tracked_mkdtemp("ivf_cells_")
         load_table(spark, sf_dir, "embeddings").write.mode("overwrite").partitionBy(
             "label"
         ).parquet(out)
@@ -215,9 +206,7 @@ def _companion_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``VectorStore._write_segment`` writes the same columns on every
     ingest/rewrite so collection data has them from birth."""
     if sf_dir not in _companion_layout_cache:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="rescore_companions_")
+        out = tracked_mkdtemp("rescore_companions_")
         emb = load_table(spark, sf_dir, "embeddings")
         emb.select(
             "vec_id",
@@ -287,9 +276,7 @@ def int8_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 4× at-rest win, pinned in tests/test_plans.py); the oracle
     re-derives the identical quantization inline."""
     corpus = _companion_corpus(spark, sf_dir)
-    return ann.int8_rescore_topk(
-        corpus, _probes(spark, sf_dir), k=10, oversample=3, cache=_stage_cache
-    )
+    return ann.int8_rescore_topk(corpus, _probes(spark, sf_dir), k=10, oversample=3)
 
 
 def _duck_mrl_sql(k: int = 10, prefix_dims: int = 16, oversample: int = 3) -> str:
@@ -343,7 +330,6 @@ def matryoshka_rescore_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         prefix_dims=16,
         oversample=3,
-        cache=_stage_cache,
     )
 
 
@@ -428,8 +414,6 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     from .operators.pq import pq_codebooks, pq_encode
 
     if sf_dir not in _ivfpq_cache:
-        import tempfile
-
         corpus = load_table(spark, sf_dir, "embeddings")
         coarse = (
             ann.label_centroids(corpus)
@@ -440,7 +424,7 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
         cents0_df = spark.createDataFrame(
             cents0, schema="sub int, code int, centroid array<double>"
         )
-        out = tempfile.mkdtemp(prefix="ivfpq_codes_")
+        out = tracked_mkdtemp("ivfpq_codes_")
         pq_encode(corpus, cents0_df, m=8, dim=64).join(
             corpus.select("vec_id", F.col("label").alias("cell")), "vec_id"
         ).write.mode("overwrite").parquet(out)
@@ -905,9 +889,7 @@ def bq_hamming_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_plans.py) — so the 100 TB prescreen scans codes, not
     vectors."""
     corpus = _companion_corpus(spark, sf_dir)
-    return ann.bq_hamming_topk(
-        corpus, _probes(spark, sf_dir), k=10, oversample=4, cache=_stage_cache
-    )
+    return ann.bq_hamming_topk(corpus, _probes(spark, sf_dir), k=10, oversample=4)
 
 
 BITEXT_SRC_LABELS = 5   # labels 0-4 -> "source language" pool
@@ -969,11 +951,7 @@ def store_quantized_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection data written by the store itself."""
     store = _fresh_store(spark, sf_dir, "qsearch")
     return store.search(
-        _probes(spark, sf_dir),
-        k=10,
-        quantization="int8",
-        oversample=3,
-        cache=_stage_cache,
+        _probes(spark, sf_dir), k=10, quantization="int8", oversample=3
     )
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .functions.vector import cosine_sql
 from .sources.catalog import load_table
+from .streaming._tmpdirs import tracked_mkdtemp
 
 P = 2147483647  # 2^31-1; keeps a*h+b inside signed 64-bit on both engines
 N_HASHES = 16
@@ -187,9 +188,7 @@ def staged_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tokenizing the corpus per query.  Built lazily on first use; bench
     warmup stages it out-of-band (PREPARE)."""
     if sf_dir not in _shingle_idx_cache:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="shingle_idx_")
+        out = tracked_mkdtemp("shingle_idx_")
         docs = load_table(spark, sf_dir, "documents")
         capped_shingle_index(docs).write.mode("overwrite").parquet(out)
         _shingle_idx_cache[sf_dir] = out

@@ -13,13 +13,13 @@ from __future__ import annotations
 import itertools
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.multimodal import decode_features, to_blob_table
 from .sources.catalog import load_table
+from .streaming._tmpdirs import tracked_mkdtemp
 from .workload import PREPARE, register, track_scratch
 
 
@@ -57,7 +57,7 @@ def _npy_export(sf_dir: str) -> str:
         vec_ids = tbl.column("vec_id").to_pylist()
         labels = tbl.column("label").to_pylist()
 
-        tmp = tempfile.mkdtemp(prefix="npy_migration_")
+        tmp = tracked_mkdtemp("npy_migration_")
         np.save(os.path.join(tmp, "vectors.npy"), mat)
         meta = [
             {"user_id": f"u{label}", "test_id": int(vid)}
@@ -91,7 +91,7 @@ def npy_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         os.path.join(tmp, "vectors.npy"),
         os.path.join(tmp, "metadata.json"),
-        tempfile.mkdtemp(prefix="npy_store_"),
+        tracked_mkdtemp("npy_store_"),
     )
     assert report["verify_success"], report
     return store.read().groupBy("user_id").agg(
@@ -117,7 +117,7 @@ def ingest_bulk_100k(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit read verifies row count and uuid uniqueness."""
     from .operators.store import VectorStore
 
-    store = VectorStore.create(spark, tempfile.mkdtemp(prefix="ingest100k_"))
+    store = VectorStore.create(spark, tracked_mkdtemp("ingest100k_"))
     batch = (
         spark.range(100_000)
         .select(

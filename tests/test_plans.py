@@ -942,8 +942,8 @@ def test_new_media_and_mining_plan_shapes(spark):
     - scene-cut and VAD segmentation shuffle ONCE (the doc_id window —
       inherent to ordering a doc's frames/blocks) and never exchange the
       decoded media;
-    - matryoshka rescore broadcasts the probe side and reuses the q_id
-      partitioning across both ranking windows (one shuffle total);
+    - matryoshka rescore broadcasts the probe side and shuffles only for
+      its two q_id ranking windows;
     - bitext mining broadcasts the target pool for candidate generation
       and never builds an unbroadcast cartesian product."""
     import re
@@ -971,20 +971,11 @@ def test_new_media_and_mining_plan_shapes(spark):
     assert "BroadcastExchange" in scene, scene
     vad = _plan(audio_vad_segments(spark, SF_SMOKE))
     assert shuffles(vad) == 1, vad
-    # ONE live shuffle since the r19 fetch-by-id stage 2: the returned
-    # plan is the stage-2 job only — the cached stage-1 survivors (their
-    # ranking window already ran inside the survivor materialization)
-    # broadcast onto the id-pruned float fetch, leaving just the final
-    # ranking window.  Count exchanges in the LIVE tree only: the
-    # materialized InMemoryRelation embeds its own (already-executed)
-    # stage-1 plan dump, whose exchanges are history, not this job's.
-    # (See test_rescore_stage1_scans_companion_only for the stage-1 pin
-    # and the stage-2 PushedFilters pin.)
+    # the stage-1 and exact ranking windows are the only shuffles (see
+    # test_rescore_stage1_scans_companion_only for the full plan pins)
     mrl = _plan(matryoshka_rescore_topk_q(spark, SF_SMOKE))
-    live = mrl.split("== Final Plan ==")[0]
-    assert len(re.findall(r"(?<!Broadcast)Exchange \(\d+\)", live)) == 1, mrl
-    assert "BroadcastNestedLoopJoin" in mrl or "BroadcastExchange" in mrl, mrl
-    assert "InMemoryTableScan" in mrl, mrl
+    assert shuffles(mrl) == 2, mrl
+    assert "BroadcastExchange" in mrl, mrl
     bitext = _plan(bitext_margin_pairs_q(spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" in bitext, bitext
     assert "CartesianProduct" not in bitext, bitext
@@ -996,24 +987,24 @@ def test_rescore_stage1_scans_companion_only(spark):
     (a) Stage 1 (r17 VERDICT item 1): over the companion layout, the
     prescreen of INT8 / matryoshka / BQ scans ONLY (vec_id, companion) —
     ReadSchema EXCLUDES ``embedding`` (4×/4×/32× fewer scan bytes at 64
-    dims).  Pinned on the direct operator plan (``cache=None`` — the
-    single-plan shape, where both stages are visible in one explain).
+    dims).  Pinned on the direct operator plan.
 
-    (b) Stage 2 (r19, VERDICT r18 item 5): the registered queries run the
-    fetch-by-id shape — stage-1 survivors materialize once
-    (InMemoryTableScan in the final plan, never recomputed) and their ids
-    push into the float-column fetch as an IN predicate (PushedFilters on
-    the stage-2 scan), so at rest the exact rescore reads the survivors'
-    row groups, not the corpus."""
+    (b) One stage 2: the four registry rows over companion data run the
+    single lazy plan of ``ann._rescore_survivors`` — the request-sized
+    survivors broadcast onto the float column, no materialized survivors
+    (no InMemoryTableScan), no survivor-id IN pushdown, no unbroadcast
+    cartesian product, stage 1 still blind to ``embedding``, and exactly
+    two shuffles: the stage-1 and the exact ranking windows, both on
+    q_id."""
     import re
 
     from robi_biometric_qdrant_vector_db_service_spark.operators import ann
-    from robi_biometric_qdrant_vector_db_service_spark.workload import _probes
+    from robi_biometric_qdrant_vector_db_service_spark.workload import (
+        REGISTRY,
+        _probes,
+    )
     from robi_biometric_qdrant_vector_db_service_spark.workload_ann import (
         _companion_corpus,
-        bq_hamming_rescore,
-        int8_rescore_topk,
-        matryoshka_rescore_topk_q,
     )
 
     corpus = _companion_corpus(spark, SF_SMOKE)
@@ -1038,27 +1029,25 @@ def test_rescore_stage1_scans_companion_only(spark):
         for s in companion_scans:
             assert "embedding" not in s, (companion, s)
 
-    for fn in (int8_rescore_topk, matryoshka_rescore_topk_q, bq_hamming_rescore):
-        plan = _plan(fn(spark, SF_SMOKE))
-        # survivors come from the cache, not a recompute
-        assert "InMemoryTableScan" in plan, plan
-        # the float fetch is id-pruned AT THE SCAN: its PushedFilters
-        # carry the survivor-id predicate (In(...) below the parquet
-        # in-filter threshold, else the equivalent range rewrite)
-        scans = re.findall(
-            r"PushedFilters: \[[^\n]*\][^\n]*", plan
-        ) or re.findall(r"PushedFilters: \[[^\n]*", plan)
-        pushed = [
-            s
-            for s in scans
-            if "vec_id" in s and ("In(" in s or "GreaterThan" in s or "IsNotNull" in s)
-        ]
-        assert pushed, plan
-        # stage 1 already ran — no companion column in the final plan's
-        # parquet scans (the only corpus scan left reads the floats)
+    for name, companion in [
+        ("int8_rescore_topk", "e8"),
+        ("matryoshka_rescore_topk", "e_pre16"),
+        ("bq_hamming_rescore", "bq64"),
+        ("store_quantized_search", "e8"),
+    ]:
+        plan = _plan(REGISTRY[name].run(spark, SF_SMOKE))
+        assert "InMemoryTableScan" not in plan, (name, plan)
+        assert not re.search(
+            r"In\((vec_id|point_id)|(vec_id|point_id)#\d+L? IN \(", plan
+        ), (name, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
         schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
-        for s in schemas:
-            assert "embedding" in s or "q_emb" in s or "vec_id" in s, s
+        companion_scans = [s for s in schemas if companion in s]
+        assert companion_scans, (name, plan)
+        for s in companion_scans:
+            assert "embedding" not in s, (name, s)
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 2, (name, plan)
+        assert len(re.findall(r"hashpartitioning\(q_id#", plan)) == 2, (name, plan)
 
 
 def test_store_quantized_search_stage1_never_reads_vectors(spark, tmp_path):

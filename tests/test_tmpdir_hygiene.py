@@ -1,7 +1,8 @@
-"""Streaming temp-directory hygiene (r15 VERDICT item 6): every streaming
-fixture directory — staging caches, per-run hard-link dirs, state stores,
-checkpoints — must be swept when the process exits, and no streaming
-module may allocate an untracked ``tempfile.mkdtemp``.
+"""Temp-directory hygiene (r15 VERDICT item 6): every fixture directory —
+streaming staging caches, per-run hard-link dirs, state stores,
+checkpoints, registry store clones — must be swept when the process
+exits, and no package module may allocate an untracked
+``tempfile.mkdtemp``.
 """
 
 from __future__ import annotations
@@ -18,14 +19,17 @@ STREAMING_DIR = (
 )
 
 
-def test_no_untracked_mkdtemp_in_streaming_sources():
+def test_no_untracked_mkdtemp_in_package_sources():
+    """Every package module — streaming stages, registry fixtures and
+    their per-call store clones alike — allocates temp dirs through
+    ``tracked_mkdtemp``, so none outlives the process."""
+    package = STREAMING_DIR.parent
     offenders = []
-    for p in STREAMING_DIR.glob("*.py"):
-        if p.name == "_tmpdirs.py":
+    for p in package.rglob("*.py"):
+        if p == STREAMING_DIR / "_tmpdirs.py":
             continue  # the tracker itself owns the one real mkdtemp call
-        src = p.read_text()
-        if "tempfile.mkdtemp(" in src:
-            offenders.append(p.name)
+        if "tempfile.mkdtemp(" in p.read_text():
+            offenders.append(p.relative_to(package).as_posix())
     assert not offenders, offenders
 
 
