@@ -47,6 +47,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from ..session import local_frame
+
 PREFIX = "/api/v1"
 
 
@@ -101,9 +103,10 @@ class VectorService:
             )
             for r in rows
         ]
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             data,
-            schema="point_id string, embedding array<double>, user_id string, "
+            "point_id string, embedding array<double>, user_id string, "
             "metadata map<string,string>",
         )
         return df, [d[0] for d in data]
@@ -154,9 +157,10 @@ class VectorService:
     def search(self, body: dict) -> dict:
         t0 = time.perf_counter()
         k = int(body.get("k", 10))
-        probe = self.spark.createDataFrame(
+        probe = local_frame(
+            self.spark,
             [(0, [float(x) for x in body["embedding"]])],
-            schema="q_id bigint, q_emb array<double>",
+            "q_id bigint, q_emb array<double>",
         )
         # Pin ONE manifest snapshot per request (ADVICE r5): search and
         # payload enrichment must see the same corpus version, or a

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sql, dot_sql, norm_sql
+from ..session import local_frame
 
 _DEC12 = "decimal(28,12)"
 
@@ -97,8 +98,8 @@ def kmeans_centroids(
         # between iterations (as MLlib's KMeans does) so iteration i+1's
         # plan starts from a literal, not a re-execution of iterations
         # 1..i (lineage otherwise makes total work quadratic in iters).
-        cents = spark.createDataFrame(
-            cents.collect(), schema="cell int, centroid array<double>"
+        cents = local_frame(
+            spark, cents.collect(), "cell int, centroid array<double>"
         )
     return cents
 

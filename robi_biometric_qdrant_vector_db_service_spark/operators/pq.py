@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sql, l2_normalize_sql
+from ..session import local_frame
 from .ann import _rescore_survivors, label_centroids
 
 _DEC12 = "decimal(28,12)"
@@ -109,8 +110,8 @@ def pq_codebooks(
         )
         # pin model state driver-side between iterations (MLlib pattern;
         # lineage would otherwise re-run earlier iterations)
-        cents = spark.createDataFrame(
-            cents.collect(), schema="sub int, code int, centroid array<double>"
+        cents = local_frame(
+            spark, cents.collect(), "sub int, code int, centroid array<double>"
         )
     return cents
 

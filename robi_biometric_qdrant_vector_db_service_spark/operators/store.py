@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import l2_normalize_sql
+from ..session import local_frame
 
 POINT_SCHEMA = (
     "point_id string, embedding array<double>, user_id string, ts double, "
@@ -430,7 +431,7 @@ class VectorStore:
 
     def _read_files(self, files: list[str]) -> DataFrame:
         if not files:
-            return self.spark.createDataFrame([], _FULL_SCHEMA)
+            return local_frame(self.spark, [], _FULL_SCHEMA)
         # explicit schema: skips footer inference; ubucket is a data column,
         # so an explicit file list needs no partition discovery
         return self.spark.read.schema(_FULL_SCHEMA).parquet(*files)
@@ -825,7 +826,7 @@ class VectorStore:
     # (OptimizeIn turns it into one InSet; parquet prunes on it) with
     # request-proportional plan size.  Past it — a caller-supplied bulk
     # list, not the points-API shape — the list goes back to the
-    # createDataFrame + broadcast-join path, which degrades gracefully
+    # ``_ids_frame`` + broadcast-join path, which degrades gracefully
     # instead of bloating plan serialization/analysis (ADVICE r18).
     _IN_LIST_MAX = 10_000
 
@@ -841,9 +842,10 @@ class VectorStore:
         return F.col("point_id").isin(sorted({str(i) for i in point_ids}))
 
     def _ids_frame(self, point_ids: list[str]) -> DataFrame:
-        """Deduped id list as a 1-column DataFrame — the over-threshold
-        fallback for bulk id sets."""
-        return self.spark.createDataFrame(
+        """Deduped id list as a 1-column ``local_frame`` — the
+        over-threshold fallback for bulk id sets."""
+        return local_frame(
+            self.spark,
             [(i,) for i in sorted({str(i) for i in point_ids})],
             "point_id string",
         )
@@ -1661,8 +1663,8 @@ class AliasRegistry:
         alias table is bounded driver state by construction, so the diff
         is a driver JSON walk, not a Spark job)."""
         to = self.current_version() if to is None else to
-        return self.spark.createDataFrame(
-            self.alias_diff(since, to), self.ALIAS_CHANGE_SCHEMA
+        return local_frame(
+            self.spark, self.alias_diff(since, to), self.ALIAS_CHANGE_SCHEMA
         )
 
     def update_aliases(self, ops: list[tuple]) -> dict[str, str]:

@@ -73,6 +73,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # instants, not TIMESTAMP_NTZ — time arithmetic (unix_micros, windows)
     # and the UTC-naive DuckDB oracle both assume instants
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # a hot hit returns before any read: spark.read.parquet infers the
+    # schema from the footers, one Spark job per call
+    key = (sf_dir, name)
+    hot = name in _HOT_TABLES and _hot_enabled()
+    if hot and key in _hot_cache:
+        return _hot_cache[key]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _TS_NANOS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
@@ -84,14 +90,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # a plan was already cached: session tz is UTC, so the cast
             # preserves the stored wall-clock values as UTC instants
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    if name in _HOT_TABLES and _hot_enabled():
-        key = (sf_dir, name)
-        if key not in _hot_cache:
-            n = spark.sparkContext.defaultParallelism
-            hot = df.repartition(n).persist()
-            hot.count()  # materialize eagerly: load cost is paid once, here
-            _hot_cache[key] = hot
-        return _hot_cache[key]
+    if hot:
+        df = df.repartition(spark.sparkContext.defaultParallelism).persist()
+        df.count()  # materialize eagerly: load cost is paid once, here
+        _hot_cache[key] = df
     return df
 
 

@@ -35,6 +35,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._tmpdirs import tracked_mkdtemp
 from .drain import drain
 
@@ -57,16 +58,10 @@ def _emit_versions(registry, versions: list[int], since: int, sink: str) -> None
             (change, alias, target)
             for _v, change, alias, target in registry.alias_diff(v - 1, v)
         ]
-        # single-slice parallelize, NOT createDataFrame(list): the latter
-        # spreads driver-local rows over defaultParallelism partitions, and
-        # a downstream coalesce(1) then evaluates all 32 Python-RDD
-        # partitions sequentially inside one task (~4.5s of Python-worker
-        # round-trips per 1-row version write — measured r17); one slice
-        # makes the whole emit one short task (~0.3s)
-        spark = registry.spark
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), ALIAS_EVENT_SCHEMA
-        ).write.mode("overwrite").parquet(
+        # the diff is a few driver-held rows: a LocalRelation, written as
+        # one file by one short JVM task
+        frame = local_frame(registry.spark, rows, ALIAS_EVENT_SCHEMA)
+        frame.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(sink, f"version={v}")
         )
 
@@ -93,9 +88,9 @@ def alias_feed_stream(
     sink = tracked_mkdtemp(prefix=f"stream_alias_{os.getpid()}_")
     # seed partition: fixed schema for the final read even if no version
     # past `since` ever commits (and zero-row versions write empty dirs)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), ALIAS_EVENT_SCHEMA
-    ).write.mode("overwrite").parquet(os.path.join(sink, f"version={since}"))
+    local_frame(spark, [], ALIAS_EVENT_SCHEMA).write.mode("overwrite").parquet(
+        os.path.join(sink, f"version={since}")
+    )
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         files = [

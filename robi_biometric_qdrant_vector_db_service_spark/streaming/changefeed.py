@@ -36,6 +36,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._tmpdirs import tracked_mkdtemp
 from .drain import drain
 
@@ -89,7 +90,7 @@ def changes_feed_stream(spark: SparkSession, store, *, since: int) -> DataFrame:
     sink = tracked_mkdtemp(prefix=f"stream_cdc_{os.getpid()}_")
     # seed partition: fixed schema for the final read even if no version
     # past `since` ever commits
-    spark.createDataFrame([], CHANGE_SCHEMA).write.mode("overwrite").parquet(
+    local_frame(spark, [], CHANGE_SCHEMA).write.mode("overwrite").parquet(
         os.path.join(sink, f"version={since}")
     )
 

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._tmpdirs import tracked_mkdtemp
 from .drain import drain
 
@@ -86,12 +87,10 @@ def media_gate_stream(
     path = staged_wav_path(spark, sf_dir)
     sink = tracked_mkdtemp(prefix=f"stream_mediagate_{os.getpid()}_")
     # seed partition: fixed schema for the final read even if every clip
-    # is rejected.  Single-slice parallelize, NOT createDataFrame(list):
-    # the latter spreads the empty frame over defaultParallelism Python-RDD
-    # partitions (~32 empty tasks per drain — the aliasfeed emit fix).
-    spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), GATE_STATS_SCHEMA
-    ).write.mode("overwrite").parquet(os.path.join(sink, "batch=-1"))
+    # is rejected (an empty LocalRelation writes one schema-only file)
+    local_frame(spark, [], GATE_STATS_SCHEMA).write.mode("overwrite").parquet(
+        os.path.join(sink, "batch=-1")
+    )
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         admitted = media_gate_batch_stats(batch, block_sec=block_sec).filter(

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.catalog import load_table
 from .scrub import DOCS_SCHEMA
 from ._tmpdirs import tracked_mkdtemp
@@ -200,7 +201,7 @@ def _seed_state(spark: SparkSession, run: str) -> tuple[str, str, str]:
         (docs_store, SH_SCHEMA),
         (pairs_sink, PAIRS_SCHEMA),
     ):
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
+        local_frame(spark, [], schema).write.mode("overwrite").parquet(
             os.path.join(store, "batch=-1")
         )
     return bands_store, docs_store, pairs_sink

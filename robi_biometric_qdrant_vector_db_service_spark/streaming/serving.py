@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.search import knn_search
+from ..session import local_frame
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
 from .drain import drain
@@ -85,6 +86,6 @@ def search_serving_stream(
         foreach_batch=_serve,
         conf={"spark.sql.shuffle.partitions": "4"},
     )
-    return spark.createDataFrame(
-        answers, schema="q_id bigint, vec_id bigint, rank int, score double"
+    return local_frame(
+        spark, answers, "q_id bigint, vec_id bigint, rank int, score double"
     )

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.catalog import load_table
 from ._tmpdirs import tracked_mkdtemp
 from .drain import running
@@ -91,7 +92,8 @@ def sessionization_stream(
     if max_ts is None:
         # zero events => zero sessions; a NULL-timestamped sentinel would
         # crash the stream, and there is no state to flush anyway
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "user_id bigint, session_start timestamp, n_events bigint, "
             "total_value double",

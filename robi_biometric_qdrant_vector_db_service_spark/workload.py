@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from .functions.vector import cosine_sql, norm_sql
 from .operators import search as S
 from .operators.payload_index import _CJK_CHAR_CLASS
+from .session import local_frame
 from .sources.catalog import load_table
 from .streaming._tmpdirs import tracked_mkdtemp
 
@@ -450,8 +451,8 @@ LIMIT 10
 def multi_vector_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, sf_dir, "embeddings")
     probes = _probes(spark, sf_dir, 3)
-    weights = spark.createDataFrame(
-        [(int(q), w) for q, w in FUSION_WEIGHTS], "q_id int, weight string"
+    weights = local_frame(
+        spark, [(int(q), w) for q, w in FUSION_WEIGHTS], "q_id int, weight string"
     ).withColumn("weight", F.col("weight").cast("decimal(4,2)"))
     wq = probes.join(F.broadcast(weights), "q_id")
     hits = S.knn_search(corpus, wq.select("q_id", "q_emb"), k=20)
@@ -1254,8 +1255,10 @@ def update_vectors_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.reverse("embedding").alias("embedding"),
         )
         .unionByName(
-            spark.createDataFrame(
-                [("999999", [0.0] * 8)], "point_id string, embedding array<double>"
+            local_frame(
+                spark,
+                [("999999", [0.0] * 8)],
+                "point_id string, embedding array<double>",
             )
         )
     )
@@ -1501,8 +1504,10 @@ def points_update_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.reverse("embedding").alias("embedding"),
         )
         .unionByName(
-            spark.createDataFrame(
-                [("999999", [0.0] * 8)], "point_id string, embedding array<double>"
+            local_frame(
+                spark,
+                [("999999", [0.0] * 8)],
+                "point_id string, embedding array<double>",
             )
         )
     )
@@ -1545,7 +1550,7 @@ def add_batch_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = 64
     rows = [([2.0 if j == i else 0.0 for j in range(dim)],) for i in range(10)]
     batch = (
-        spark.createDataFrame(rows, "embedding array<double>")
+        local_frame(spark, rows, "embedding array<double>")
         .withColumn("user_id", F.lit("new_user"))
     )
     store.add_batch(batch)
@@ -2779,8 +2784,8 @@ def recommend_by_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 recommend: average_vector strategy from example point ids, examples
     excluded from the hits (public Qdrant recommend API)."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    examples = spark.createDataFrame(
-        RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
+    examples = local_frame(
+        spark, RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
     )
     return S.recommend(corpus, examples, k=10)
 
@@ -2841,8 +2846,8 @@ def recommend_groups_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups per request by best hit, 2 hits each.  A pure composition of
     ``recommend_probes`` and ``search_groups`` (one q_id shuffle)."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    examples = spark.createDataFrame(
-        RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
+    examples = local_frame(
+        spark, RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
     )
     return S.recommend_groups(corpus, examples, n_groups=4, group_size=2)
 
@@ -2896,8 +2901,8 @@ def recommend_best_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact (greatest of identical doubles ≡ the oracle's MAX), so the
     whole ranking pins bit-for-bit against the SQL restatement."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    examples = spark.createDataFrame(
-        RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
+    examples = local_frame(
+        spark, RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
     )
     return S.recommend_best_score(corpus, examples, k=10)
 
@@ -2943,8 +2948,8 @@ def recommend_sum_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast array fold (engine) are the same exact number in any
     order — the ranking pins bit-for-bit."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    examples = spark.createDataFrame(
-        RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
+    examples = local_frame(
+        spark, RECOMMEND_EXAMPLES, "q_id int, vec_id bigint, polarity string"
     )
     return S.recommend_sum_scores(corpus, examples, k=10)
 
@@ -3102,8 +3107,8 @@ def context_pairs_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,12) (order-independent), so the score hashes identically
     under any partitioning."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    context = spark.createDataFrame(
-        DISCOVER_CONTEXT, "q_id bigint, pos_id bigint, neg_id bigint"
+    context = local_frame(
+        spark, DISCOVER_CONTEXT, "q_id bigint, pos_id bigint, neg_id bigint"
     )
     return S.context_search(corpus, context, k=10)
 
@@ -3593,8 +3598,8 @@ def discover_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each pair's bisecting hyperplane (public Qdrant discover API)."""
     corpus = load_table(spark, sf_dir, "embeddings")
     targets = _probes(spark, sf_dir, 2)
-    context = spark.createDataFrame(
-        DISCOVER_CONTEXT, "q_id bigint, pos_id bigint, neg_id bigint"
+    context = local_frame(
+        spark, DISCOVER_CONTEXT, "q_id bigint, pos_id bigint, neg_id bigint"
     )
     return S.discover(corpus, targets, context, k=10)
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from .functions.textconst import dcos as _dcos
 from .operators import ann
 from .plans.strategy import smart_search
+from .session import local_frame
 from .sources.catalog import load_table
 from .streaming._tmpdirs import tracked_mkdtemp
 
@@ -397,8 +398,8 @@ def _kmeans_cents(spark: SparkSession, sf_dir: str, *, k: int = 8) -> DataFrame:
     if (sf_dir, k) not in _kmeans_codebook_cache:
         corpus = load_table(spark, sf_dir, "embeddings")
         _kmeans_codebook_cache[(sf_dir, k)] = ann.kmeans_centroids(corpus, k=k).collect()
-    return spark.createDataFrame(
-        _kmeans_codebook_cache[(sf_dir, k)], schema="cell int, centroid array<double>"
+    return local_frame(
+        spark, _kmeans_codebook_cache[(sf_dir, k)], "cell int, centroid array<double>"
     )
 
 
@@ -421,8 +422,8 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
             .collect()
         )
         cents0 = pq_codebooks(corpus, m=8, ksub=16, dim=64, iters=0).collect()
-        cents0_df = spark.createDataFrame(
-            cents0, schema="sub int, code int, centroid array<double>"
+        cents0_df = local_frame(
+            spark, cents0, "sub int, code int, centroid array<double>"
         )
         out = tracked_mkdtemp("ivfpq_codes_")
         pq_encode(corpus, cents0_df, m=8, dim=64).join(
@@ -431,8 +432,8 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
         _ivfpq_cache[sf_dir] = (coarse, cents0, out)
     coarse, cents0, out = _ivfpq_cache[sf_dir]
     return (
-        spark.createDataFrame(coarse, schema="cell int, centroid array<double>"),
-        spark.createDataFrame(cents0, schema="sub int, code int, centroid array<double>"),
+        local_frame(spark, coarse, "cell int, centroid array<double>"),
+        local_frame(spark, cents0, "sub int, code int, centroid array<double>"),
         spark.read.parquet(out),
     )
 

@@ -33,6 +33,7 @@ import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .session import local_frame
 from .sources.catalog import load_table
 from .workload import PREPARE, register
 from .functions.textconst import (
@@ -1112,7 +1113,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side (the kmeans-codebook discipline) so the per-doc weight
     # join starts from a literal and the corpus-scale per_doc reduction
     # is computed ONCE, not re-derived per plan branch.
-    lr = spark.createDataFrame(lr.collect(), "b bigint, logratio decimal(18,6)")
+    lr = local_frame(spark, lr.collect(), "b bigint, logratio decimal(18,6)")
     return (
         per_doc.join(F.broadcast(lr), "b")
         .groupBy("doc_id")
@@ -1230,8 +1231,10 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rate table IS the mixture config (one row per domain) — pin it
     # driver-side so the acceptance pass and the final report both start
     # from the literal instead of re-deriving the per-source aggregation
-    rates = spark.createDataFrame(
-        rates.collect(), "source string, n_docs bigint, n_tokens bigint, rate double"
+    rates = local_frame(
+        spark,
+        rates.collect(),
+        "source string, n_docs bigint, n_tokens bigint, rate double",
     )
     u = (
         F.expr(
@@ -1352,8 +1355,8 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     escape instead of filter)."""
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(word_vocab(docs), BPE_MERGES)
-    return spark.createDataFrame(
-        merges, "step int, merged string, n bigint, n_tokens bigint"
+    return local_frame(
+        spark, merges, "step int, merged string, n bigint, n_tokens bigint"
     )
 
 

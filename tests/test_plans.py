@@ -363,7 +363,10 @@ def test_hot_cache_preserves_results(spark, monkeypatch):
     """The opt-in memory-resident hot store (SPARK_GRAFT_HOT_CACHE=1) must
     return byte-identical results while serving from an InMemory scan —
     order-independence of every aggregate is what makes the repartitioned
-    cache safe."""
+    cache safe.  A second load of a cached table returns the cached frame
+    before any read, so it starts no schema-inference job."""
+    import uuid
+
     import robi_biometric_qdrant_vector_db_service_spark.sources.catalog as cat
 
     cold = (
@@ -376,6 +379,13 @@ def test_hot_cache_preserves_results(spark, monkeypatch):
     try:
         hot_df = cat.load_table(spark, SF_SMOKE, "lineitem")
         assert "InMemoryTableScan" in _plan(hot_df.groupBy("l_returnflag").count())
+        sc, group = spark.sparkContext, f"hot-hit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "hot-cache hit")
+        try:
+            assert cat.load_table(spark, SF_SMOKE, "lineitem") is hot_df
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         hot = (
             hot_df.groupBy("l_returnflag")
             .agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("q"))

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -24,10 +23,10 @@ from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
-def npy_fixture():
+def npy_fixture(tmp_path_factory):
     rng = np.random.default_rng(42)
     mat = rng.standard_normal((20, 8)).astype(np.float32)
-    tmp = tempfile.mkdtemp(prefix="npy_test_")
+    tmp = str(tmp_path_factory.mktemp("npy_test"))
     path = os.path.join(tmp, "vectors.npy")
     np.save(path, mat)
     return tmp, path, mat
@@ -81,12 +80,12 @@ def test_migration_truncates_and_verifies(spark, npy_fixture):
     assert all(abs(r["n"] - 1.0) < 1e-9 for r in norms)
 
 
-def test_migration_multi_shard_global_offsets(spark):
+def test_migration_multi_shard_global_offsets(spark, tmp_path):
     """With a DIRECTORY of .npy shards, file-relative row indices must map
     to disjoint global ids (shards ordered by name, prefix-summed counts) —
     a bare row_idx join would fan out and collide point_ids."""
     rng = np.random.default_rng(7)
-    tmp = tempfile.mkdtemp(prefix="npy_shards_")
+    tmp = str(tmp_path)
     a = rng.standard_normal((6, 4)).astype(np.float32)
     b = rng.standard_normal((4, 4)).astype(np.float32)
     np.save(os.path.join(tmp, "part-000.npy"), a)
@@ -108,7 +107,7 @@ def test_migration_multi_shard_global_offsets(spark):
         assert r["metadata"]["gidx"] == r["point_id"]
 
 
-def test_npy_shard_counts_from_headers(spark):
+def test_npy_shard_counts_from_headers(spark, tmp_path):
     """The migration's global-offset pass reads shard sizes from the npy
     HEADERS (a metadata pass), which must agree exactly with a full decode
     — including npy format v2 headers (large/oddly-padded header blocks)."""
@@ -120,7 +119,7 @@ def test_npy_shard_counts_from_headers(spark):
     )
 
     rng = np.random.default_rng(19)
-    tmp = tempfile.mkdtemp(prefix="npy_hdr_")
+    tmp = str(tmp_path)
     # "part 004": binaryFile path strings are NOT percent-encoded (Hadoop
     # Path.toString), so a URI-unsafe shard name must still header-read
     sizes = {"part-000.npy": 6, "part-001.npy": 4, "part-002.npy": 9,
@@ -155,9 +154,9 @@ def test_npy_shard_counts_from_headers(spark):
     assert {os.path.basename(r["src_file"]): r["count"] for r in decoded} == sizes
 
 
-def test_metadata_jsonl_distributed_shape(spark):
+def test_metadata_jsonl_distributed_shape(spark, tmp_path):
     """JSONL metadata (the splittable scale shape) with explicit row_idx."""
-    tmp = tempfile.mkdtemp(prefix="meta_jsonl_")
+    tmp = str(tmp_path)
     p = os.path.join(tmp, "meta.jsonl")
     with open(p, "w") as f:
         for i in range(6):
@@ -186,11 +185,11 @@ def _flat_index_bytes(mat: np.ndarray, fourcc: bytes = b"IxFI") -> bytes:
     )
 
 
-def test_faiss_flat_index_roundtrip(spark, npy_fixture):
+def test_faiss_flat_index_roundtrip(spark, npy_fixture, tmp_path):
     """IndexFlat bytes decode without faiss and must equal the .npy path
     for the same matrix (VERDICT r3 item 6)."""
     _, _, mat = npy_fixture
-    tmp = tempfile.mkdtemp(prefix="faiss_test_")
+    tmp = str(tmp_path)
     with open(os.path.join(tmp, "vectors.index"), "wb") as f:
         f.write(_flat_index_bytes(mat, b"IxFI"))
     rows = read_faiss_vectors(spark, tmp).orderBy("row_idx").collect()
@@ -267,7 +266,7 @@ def _ivfflat_index_bytes(
     return out
 
 
-def test_faiss_ivfflat_index_roundtrip(spark, npy_fixture):
+def test_faiss_ivfflat_index_roundtrip(spark, npy_fixture, tmp_path):
     """IndexIVFFlat bytes decode without faiss (VERDICT r5 item 8): the
     inverted-list codes ARE raw float32 vectors, so reconstruction must
     equal the .npy path for the same matrix, with stored ids preserved."""
@@ -287,7 +286,7 @@ def test_faiss_ivfflat_index_roundtrip(spark, npy_fixture):
     # the distributed reader path: same tmpdir shape as the flat test,
     # including add_with_ids-style non-sequential ids surviving as row_idx
     custom_ids = [100 + 2 * i for i in range(n)]
-    tmp = tempfile.mkdtemp(prefix="faiss_ivf_test_")
+    tmp = str(tmp_path)
     with open(os.path.join(tmp, "vectors.index"), "wb") as f:
         f.write(_ivfflat_index_bytes(mat, assignment, ids=custom_ids))
     rows = read_faiss_vectors(spark, tmp).orderBy("row_idx").collect()
@@ -366,7 +365,7 @@ def _idmap_index_bytes(mat: np.ndarray, ids: list[int]) -> bytes:
     )
 
 
-def test_faiss_hnswflat_and_idmap_decode(spark, npy_fixture):
+def test_faiss_hnswflat_and_idmap_decode(spark, npy_fixture, tmp_path):
     """IndexHNSWFlat keeps raw vectors in its nested flat storage, and
     IndexIDMap wraps a flat index plus an id vector — both decode without
     faiss.  The HNSW scalar block between the graph arrays and the storage
@@ -389,7 +388,7 @@ def test_faiss_hnswflat_and_idmap_decode(spark, npy_fixture):
     assert np.array_equal(vecs, mat)
 
     # distributed reader: both formats land with the right row_idx
-    tmp = tempfile.mkdtemp(prefix="faiss_mixed_test_")
+    tmp = str(tmp_path)
     with open(os.path.join(tmp, "hnsw.index"), "wb") as f:
         f.write(_hnswflat_index_bytes(mat))
     with open(os.path.join(tmp, "idmap.index"), "wb") as f:
@@ -770,7 +769,7 @@ def _binary_ivf_index_bytes(
     return out
 
 
-def test_faiss_binary_flat_roundtrip(spark):
+def test_faiss_binary_flat_roundtrip(spark, tmp_path):
     """IndexBinaryFlat bytes decode without faiss to the unpacked 0/1
     float matrix (Hamming ≡ Manhattan on the unpacked form), including a
     non-byte-aligned dimension whose pad bits must be dropped."""
@@ -788,7 +787,7 @@ def test_faiss_binary_flat_roundtrip(spark):
     got13 = parse_faiss_binary_flat_index(_binary_flat_index_bytes(bits13))
     assert got13.shape == (5, 13) and np.array_equal(got13, bits13)
     # the Spark read path dispatches by fourcc like any other index file
-    tmp = tempfile.mkdtemp(prefix="faiss_bin_")
+    tmp = str(tmp_path)
     with open(os.path.join(tmp, "codes.index"), "wb") as f:
         f.write(_binary_flat_index_bytes(bits))
     rows = read_faiss_vectors(spark, tmp).orderBy("row_idx").collect()
@@ -1254,7 +1253,7 @@ def test_fs_and_path_one_client_per_authority():
     assert len(FakePafs.calls) == 1
 
 
-def test_npy_header_over_4k_still_counts(spark):
+def test_npy_header_over_4k_still_counts(spark, tmp_path):
     """An npy v1 header larger than the 4 KiB first ranged read (legal —
     HEADER_LEN is 16-bit) must still header-count correctly: the read
     grows to the declared length instead of failing on a truncated
@@ -1264,7 +1263,7 @@ def test_npy_header_over_4k_still_counts(spark):
         read_npy_shard_counts,
     )
 
-    tmp = tempfile.mkdtemp(prefix="npy_bighdr_")
+    tmp = str(tmp_path)
     mat = np.arange(12, dtype=np.float32).reshape(3, 4)
     header = (
         "{'descr': '<f4', 'fortran_order': False, 'shape': (3, 4), }"
@@ -1344,7 +1343,7 @@ def _random_orthogonal(d: int, seed: int = 7) -> np.ndarray:
     return q.astype(np.float32)
 
 
-def test_faiss_pretransform_opq_rotation_roundtrip(spark):
+def test_faiss_pretransform_opq_rotation_roundtrip(spark, tmp_path):
     """An OPQ-style orthonormal rotation (serialized via the generic LTra
     branch, exactly how faiss writes OPQMatrix) wrapping IndexFlat must
     reconstruct the ORIGINAL-space vectors, matching faiss.read_index +
@@ -1365,7 +1364,7 @@ def test_faiss_pretransform_opq_rotation_roundtrip(spark):
     assert np.array_equal(idx, np.arange(n))
     np.testing.assert_allclose(arr, X, atol=1e-5)
 
-    tmp = tempfile.mkdtemp(prefix="faiss_pt_")
+    tmp = str(tmp_path)
     with open(os.path.join(tmp, "opq.index"), "wb") as f:
         f.write(blob)
     rows = read_faiss_vectors(spark, tmp).orderBy("row_idx").collect()

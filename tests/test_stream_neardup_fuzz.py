@@ -16,7 +16,6 @@ whose members share several batches must still be emitted exactly once
 from __future__ import annotations
 
 import hashlib
-import tempfile
 from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import given, settings
@@ -80,9 +79,9 @@ def ref_pairs(texts: list[str]) -> set[tuple]:
     n_files=st.sampled_from([1, 3, 5]),
 )
 def test_stream_gate_equals_hashlib_reference_and_emits_once(
-    spark, texts, n_files
+    spark, tmp_path_factory, texts, n_files
 ):
-    sf_dir = tempfile.mkdtemp(prefix="neardup_fuzz_sf_")
+    sf_dir = str(tmp_path_factory.mktemp("neardup_fuzz_sf"))
     rows = [(i, t, "en", "src", len(t)) for i, t in enumerate(texts)]
     (
         spark.createDataFrame(rows, DOCS_SCHEMA)

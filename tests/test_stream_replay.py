@@ -16,7 +16,6 @@ the snapshots are unchanged.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -49,7 +48,7 @@ def _run_replay_scenarios(spark, process, stores, batches):
     assert _snap(spark, *stores) == want
 
 
-def test_text_neardup_replay_idempotent(spark):
+def test_text_neardup_replay_idempotent(spark, tmp_path):
     from robi_biometric_qdrant_vector_db_service_spark.streaming.neardup import (
         _process_batch,
         _seed_state,
@@ -58,7 +57,7 @@ def test_text_neardup_replay_idempotent(spark):
         load_table,
     )
 
-    run = tempfile.mkdtemp(prefix="replay_text_")
+    run = str(tmp_path)
     stores = _seed_state(spark, run)
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     batches = [
@@ -67,7 +66,7 @@ def test_text_neardup_replay_idempotent(spark):
     _run_replay_scenarios(spark, _process_batch, stores, batches)
 
 
-def test_embedding_neardup_replay_idempotent(spark):
+def test_embedding_neardup_replay_idempotent(spark, tmp_path):
     from robi_biometric_qdrant_vector_db_service_spark.streaming.neardup_embedding import (  # noqa: E501
         _process_batch,
         _seed_state,
@@ -76,7 +75,7 @@ def test_embedding_neardup_replay_idempotent(spark):
         load_table,
     )
 
-    run = tempfile.mkdtemp(prefix="replay_emb_")
+    run = str(tmp_path)
     stores = _seed_state(spark, run)
     vecs = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
     batches = [
@@ -102,7 +101,9 @@ from hypothesis import strategies as st
     survive=st.sets(st.integers(0, 2)),
     seed=st.integers(0, 2**16),
 )
-def test_text_replay_converges_from_any_crash_subset(spark, survive, seed):
+def test_text_replay_converges_from_any_crash_subset(
+    spark, tmp_path_factory, survive, seed
+):
     import numpy as np
 
     from robi_biometric_qdrant_vector_db_service_spark.streaming.neardup import (
@@ -120,7 +121,7 @@ def test_text_replay_converges_from_any_crash_subset(spark, survive, seed):
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    run = tempfile.mkdtemp(prefix="replay_fuzz_")
+    run = str(tmp_path_factory.mktemp("replay_fuzz"))
     stores = _seed_state(spark, run)
     batches = [
         docs.filter(F.col("doc_id") % 2 == i).localCheckpoint() for i in (0, 1)
@@ -137,7 +138,7 @@ def test_text_replay_converges_from_any_crash_subset(spark, survive, seed):
     assert _snap(spark, *stores) == want
 
 
-def test_changefeed_replay_idempotent_and_equals_batch(spark):
+def test_changefeed_replay_idempotent_and_equals_batch(spark, tmp_path):
     """The streaming CDC tail: (a) the drained feed equals the union of
     batch single-version diffs, (b) re-emitting any version (foreachBatch
     retry) leaves the sink byte-identical, (c) versions at or before the
@@ -152,7 +153,7 @@ def test_changefeed_replay_idempotent_and_equals_batch(spark):
         changes_feed_stream,
     )
 
-    root = tempfile.mkdtemp(prefix="cdc_replay_store_")
+    root = str(tmp_path)
     store = VectorStore(spark, root, n_buckets=2)
     store._publish_manifest({})  # genesis
     base = spark.createDataFrame(
@@ -201,7 +202,9 @@ def test_changefeed_replay_idempotent_and_equals_batch(spark):
     cut=st.integers(0, 2),
     seed=st.integers(0, 2**31 - 1),
 )
-def test_changefeed_union_equals_batch_from_any_anchor(spark, ops, cut, seed):
+def test_changefeed_union_equals_batch_from_any_anchor(
+    spark, tmp_path_factory, ops, cut, seed
+):
     """Model fuzz of the per-commit emitter: arbitrary mutation sequences,
     arbitrary anchor version, arbitrary version->batch groupings — the
     emitted union must equal the batch single-version diffs past the
@@ -217,7 +220,7 @@ def test_changefeed_union_equals_batch_from_any_anchor(spark, ops, cut, seed):
     )
 
     rng = __import__("numpy").random.default_rng(seed)
-    root = tempfile.mkdtemp(prefix="cdc_model_store_")
+    root = str(tmp_path_factory.mktemp("cdc_model_store"))
     store = VectorStore(spark, root, n_buckets=2)
     store._publish_manifest({})
     schema = (
@@ -245,7 +248,7 @@ def test_changefeed_union_equals_batch_from_any_anchor(spark, ops, cut, seed):
     v_hi = store._current_version()
     anchor = min(cut, v_hi)
 
-    sink = tempfile.mkdtemp(prefix="cdc_model_sink_")
+    sink = str(tmp_path_factory.mktemp("cdc_model_sink"))
     spark.createDataFrame([], CHANGE_SCHEMA).write.mode("overwrite").parquet(
         os.path.join(sink, f"version={anchor}")
     )
@@ -321,13 +324,14 @@ def test_aliasfeed_replay_idempotent_and_equals_batch(spark):
 @settings(max_examples=5, deadline=None)
 @given(script=st.lists(st.integers(0, 4), min_size=1, max_size=8),
        anchor=st.integers(0, 2))
-def test_aliasfeed_union_equals_batch_from_any_anchor(spark, script, anchor):
+def test_aliasfeed_union_equals_batch_from_any_anchor(
+    spark, tmp_path_factory, script, anchor
+):
     """Model fuzz of the alias emitter: arbitrary valid op sequences,
     arbitrary anchor, arbitrary version->emit groupings — the emitted
     union equals the batch diffs past the anchor, and replaying the
     whole history through alias_diff reconstructs the final table."""
     import os
-    import tempfile as _tf
 
     from robi_biometric_qdrant_vector_db_service_spark.operators.store import (
         AliasRegistry,
@@ -338,7 +342,7 @@ def test_aliasfeed_union_equals_batch_from_any_anchor(spark, script, anchor):
         _emit_versions,
     )
 
-    root = _tf.mkdtemp(prefix="alias_model_")
+    root = str(tmp_path_factory.mktemp("alias_model"))
     stores = [
         VectorStore.create(spark, os.path.join(root, n)).root
         for n in ("s0", "s1")
@@ -372,7 +376,7 @@ def test_aliasfeed_union_equals_batch_from_any_anchor(spark, script, anchor):
     assert v_hi == applied
     a = min(anchor, v_hi)
 
-    sink = _tf.mkdtemp(prefix="alias_model_sink_")
+    sink = str(tmp_path_factory.mktemp("alias_model_sink"))
     spark.createDataFrame([], ALIAS_EVENT_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(sink, f"version={a}"))

@@ -1,7 +1,7 @@
 """Temp-directory hygiene (r15 VERDICT item 6): every fixture directory —
 streaming staging caches, per-run hard-link dirs, state stores,
 checkpoints, registry store clones — must be swept when the process
-exits, and no package module may allocate an untracked
+exits, and no package module or test may allocate an untracked
 ``tempfile.mkdtemp``.
 """
 
@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -22,14 +23,18 @@ STREAMING_DIR = (
 def test_no_untracked_mkdtemp_in_package_sources():
     """Every package module — streaming stages, registry fixtures and
     their per-call store clones alike — allocates temp dirs through
-    ``tracked_mkdtemp``, so none outlives the process."""
-    package = STREAMING_DIR.parent
+    ``tracked_mkdtemp``, and every test through pytest's ``tmp_path`` /
+    ``tmp_path_factory``, so none outlives its owner (a bare mkdtemp in a
+    hypothesis test leaks one dir per example)."""
+    repo = STREAMING_DIR.parents[1]
+    bare = re.compile(r"\bmkdtemp\(")  # not tracked_mkdtemp(
     offenders = []
-    for p in package.rglob("*.py"):
-        if p == STREAMING_DIR / "_tmpdirs.py":
-            continue  # the tracker itself owns the one real mkdtemp call
-        if "tempfile.mkdtemp(" in p.read_text():
-            offenders.append(p.relative_to(package).as_posix())
+    for root in (STREAMING_DIR.parent, repo / "tests"):
+        for p in root.rglob("*.py"):
+            if p == STREAMING_DIR / "_tmpdirs.py":
+                continue  # the tracker itself owns the one real mkdtemp call
+            if bare.search(p.read_text()):
+                offenders.append(p.relative_to(repo).as_posix())
     assert not offenders, offenders
 
 
