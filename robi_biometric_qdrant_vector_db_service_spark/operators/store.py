@@ -60,6 +60,7 @@ import threading
 import uuid
 import zlib
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +97,12 @@ def _empty_meta():
     mutation.  A function (not a module constant) because Column
     construction needs a live SparkContext."""
     return F.create_map().cast("map<string,string>")
+
+
+def _payload_map(payload: dict):
+    """A payload dict as a literal ``map<string,string>`` Column, values
+    coerced to string."""
+    return F.create_map(*[F.lit(str(x)) for k, v in payload.items() for x in (k, v)])
 
 
 def _num_input_partitions(df: DataFrame) -> int:
@@ -735,92 +742,10 @@ class VectorStore:
         as their own segment, and every other bucket's files carry over by
         reference.  Rows with NULL point_id get a fresh uuid (via
         ``_defaults``) and therefore append as new points."""
-        up = self._with_bucket(self._defaults(updates, normalize=normalize))
-        manifest = self._read_manifest()
-        current = self._read_files([f for fs in manifest.values() for f in fs])
-        ids = up.select("point_id")
-        touched = [
-            r["ubucket"]
-            for r in current.join(F.broadcast(ids), "point_id", "left_semi")
-            .select("ubucket")
-            .distinct()
-            .collect()
-        ]
-        new_stats: dict[str, list[float]] = {}
-        if touched:
-            survivors = self._read_files(
-                [f for b in touched for f in manifest.get(b, [])]
-            ).join(F.broadcast(ids), "point_id", "left_anti")
-            # the survivor rewrite and the update-batch append are
-            # independent jobs into separate segment dirs — overlap them
-            # (guide §2.6); the manifest merges both results afterwards
-            (rewritten, r_stats, _), (appended, a_stats, n) = (
-                self._write_segments_overlapped([survivors, up])
-            )
-            new_stats.update(r_stats)
-            for b in touched:
-                manifest[b] = rewritten.get(b, [])
-        else:
-            appended, a_stats, n = self._write_segment(up)
-        new_stats.update(a_stats)
-        for b, fs in appended.items():
-            manifest[b] = manifest.get(b, []) + fs
-        self._publish_manifest(manifest, new_stats)
-        return n
+        return self._apply_upsert_group([updates], normalize=normalize)[0]
 
     # -- payload mutation (Qdrant points API: set_payload / delete_payload /
     #    clear_payload) ----------------------------------------------------
-
-    def _mutate_matched(self, point_ids: list[str], new_metadata) -> int:
-        """Shared tail of the payload-mutation APIs: locate the buckets
-        holding the matched ids with one pruned semi-join scan (the
-        delete_by_id discipline), then rewrite ONLY those buckets, with
-        matched rows taking ``new_metadata`` (a Column over the current
-        row) and every other row carried through byte-identical.  Returns
-        the exact matched count.
-
-        Duplicate ids in ``point_ids`` are deduped up front — the rewrite
-        joins the current rows against the id set, and a duplicated id
-        would otherwise emit the matched point twice into the rewritten
-        bucket (silent store corruption; the count, from a semi-join,
-        would not even flag it)."""
-        manifest = self._read_manifest()
-        current = self._read_files([f for fs in manifest.values() for f in fs])
-        if len(point_ids) <= self._IN_LIST_MAX:
-            match = self._id_pred(point_ids)
-            locate = current.filter(match)
-
-            def _transform(df: DataFrame) -> DataFrame:
-                return df.withColumn(
-                    "metadata",
-                    F.when(match, new_metadata).otherwise(F.col("metadata")),
-                )
-
-        else:  # bulk list: broadcast-join flag (ADVICE r18 threshold)
-            flags = F.broadcast(
-                self._ids_frame(point_ids).withColumn("__m", F.lit(True))
-            )
-            locate = current.join(flags, "point_id", "left_semi")
-
-            def _transform(df: DataFrame) -> DataFrame:
-                return (
-                    df.join(flags, "point_id", "left")
-                    .withColumn(
-                        "metadata",
-                        F.when(
-                            F.coalesce(F.col("__m"), F.lit(False)), new_metadata
-                        ).otherwise(F.col("metadata")),
-                    )
-                    .drop("__m")
-                )
-
-        touched_counts = {
-            r["ubucket"]: r["n"]
-            for r in locate.groupBy("ubucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return self._delete_rewrite(manifest, touched_counts, _transform)
 
     # IN-predicate ceiling: up to here an id list inlines into the plan
     # (OptimizeIn turns it into one InSet; parquet prunes on it) with
@@ -836,9 +761,10 @@ class VectorStore:
         parallelize-and-broadcast job per mutation — the old per-call
         ``createDataFrame`` + ``F.broadcast`` locate/flag joins each paid
         a broadcast-build job (~0.3 s) before any data moved.  The list is
-        deduped (the ``_mutate_matched`` duplicate discipline); the driver
-        already held it, so plan size is linear in the request either
-        way.  Callers guard with ``_IN_LIST_MAX`` before using this."""
+        deduped: a duplicated id must never emit a matched point twice;
+        the driver already held it, so plan size is linear in the request
+        either way.  Callers guard with ``_IN_LIST_MAX`` before using
+        this."""
         return F.col("point_id").isin(sorted({str(i) for i in point_ids}))
 
     def _ids_frame(self, point_ids: list[str]) -> DataFrame:
@@ -851,16 +777,16 @@ class VectorStore:
         )
 
     @staticmethod
-    def _without_keys(keys: list[str], meta=None):
-        """``metadata`` (or the given metadata Column — the coalesced batch
-        path threads an intermediate state through) minus the given
-        top-level keys, as a Column.  Built from native Column functions
-        (lambda over Columns, literal key array) — no SQL-string
-        interpolation, so keys containing quotes or backslashes round-trip
-        exactly and caller strings never reach the SQL parser."""
+    def _without_keys(keys: list[str], meta):
+        """The metadata Column ``meta`` (the rewrite group's threaded
+        per-row state) minus the given top-level keys.  Built from native
+        Column functions (lambda over Columns, literal key array) — no
+        SQL-string interpolation, so keys containing quotes or backslashes
+        round-trip exactly and caller strings never reach the SQL
+        parser."""
         key_arr = F.array(*[F.lit(str(k)) for k in keys])
         return F.map_filter(
-            F.coalesce(F.col("metadata") if meta is None else meta, _empty_meta()),
+            F.coalesce(meta, _empty_meta()),
             lambda k, _v: ~F.array_contains(key_arr, k),
         )
 
@@ -871,36 +797,25 @@ class VectorStore:
         top-level key).  Values coerce to string (the store's schemaless
         ``map<string,string>`` payload, the reference's metadata shape,
         qdrant_client.py:209-213).  Bucket-selective rewrite; exact count."""
-        if not payload:
-            raise ValueError("set_payload requires at least one key")
-        new_pairs = F.create_map(
-            *[F.lit(str(x)) for k, v in payload.items() for x in (k, v)]
-        )
-        new_map = F.map_concat(self._without_keys(list(payload)), new_pairs)
-        return self._mutate_matched(point_ids, new_map)
+        return self._apply_rewrite_group([("set_payload", point_ids, payload)])[0]
 
     def overwrite_payload(self, point_ids: list[str], payload: dict) -> int:
         """Qdrant ``overwrite_payload`` (points API ``PUT /points/payload``):
         REPLACE the matched points' whole metadata map with ``payload`` —
         keys not in the request are dropped (the PUT sibling of
         ``set_payload``'s POST merge)."""
-        if not payload:
-            raise ValueError("overwrite_payload requires at least one key")
-        new_map = F.create_map(
-            *[F.lit(str(x)) for k, v in payload.items() for x in (k, v)]
-        )
-        return self._mutate_matched(point_ids, new_map)
+        return self._apply_rewrite_group(
+            [("overwrite_payload", point_ids, payload)]
+        )[0]
 
     def delete_payload(self, point_ids: list[str], keys: list[str]) -> int:
         """Qdrant ``delete_payload``: drop the given keys from the matched
         points' metadata; absent keys are a no-op (Qdrant ignores them)."""
-        if not keys:
-            raise ValueError("delete_payload requires at least one key")
-        return self._mutate_matched(point_ids, self._without_keys(keys))
+        return self._apply_rewrite_group([("delete_payload", point_ids, keys)])[0]
 
     def clear_payload(self, point_ids: list[str]) -> int:
         """Qdrant ``clear_payload``: empty the matched points' metadata."""
-        return self._mutate_matched(point_ids, _empty_meta())
+        return self._apply_rewrite_group([("clear_payload", point_ids)])[0]
 
     # -- vector mutation (Qdrant points API: update_vectors /
     #    delete_vectors) ----------------------------------------------------
@@ -917,37 +832,10 @@ class VectorStore:
         dedupe silently), duplicated vector updates would be
         order-nondeterministic.  Vectors L2-normalize at write by default,
         matching ingest (qdrant_client.py:269).  Bucket-selective rewrite
-        located by one pruned semi-join scan; exact count."""
-        new = points.select(
-            F.col("point_id").cast("string").alias("point_id"),
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("__new_emb"),
-        )
-        if normalize:
-            new = new.withColumn("__new_emb", F.expr(l2_normalize_sql("__new_emb")))
-        if new.groupBy("point_id").count().filter("count > 1").limit(1).count():
-            raise ValueError("update_vectors: duplicate point_id in request")
-        manifest = self._read_manifest()
-        current = self._read_files([f for fs in manifest.values() for f in fs])
-        touched_counts = {
-            r["ubucket"]: r["n"]
-            for r in current.join(
-                F.broadcast(new.select("point_id")), "point_id", "left_semi"
-            )
-            .groupBy("ubucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-
-        def _transform(df: DataFrame) -> DataFrame:
-            return (
-                df.join(F.broadcast(new), "point_id", "left")
-                .withColumn(
-                    "embedding", F.coalesce(F.col("__new_emb"), F.col("embedding"))
-                )
-                .drop("__new_emb")
-            )
-
-        return self._delete_rewrite(manifest, touched_counts, _transform)
+        located by one pruned scan; exact count."""
+        return self._apply_rewrite_group(
+            [("update_vectors", points)], normalize=normalize
+        )[0]
 
     def delete_vectors(self, point_ids: list[str], vector_names: list[str]) -> int:
         """Qdrant ``delete_vectors`` (``POST /points/vectors/delete``)
@@ -970,10 +858,9 @@ class VectorStore:
     # op's id set, the row's CURRENT metadata/embedding) — a consecutive
     # run of them composes into ONE bucket rewrite with the per-row state
     # threaded op-by-op, so sequential consistency holds with one commit.
-    # update_vectors joined the family in r15 (its id set is the request
-    # batch's point_ids; the new embeddings broadcast-join in);
-    # delete_where joined later in r15 under the immutable-predicate guard
-    # (_composable_rewrite_op below).
+    # An update_vectors op's id set is its batch's point_ids (the new
+    # embeddings broadcast-join in); delete_where composes under the
+    # immutable-predicate guard (_composable_rewrite_op below).
     _REWRITE_TAGS = frozenset(
         ("delete", "set_payload", "overwrite_payload", "delete_payload",
          "clear_payload", "update_vectors")
@@ -983,7 +870,7 @@ class VectorStore:
     # references neither composes into the group (its matches are then a
     # pure function of immutable row state + upstream liveness).  The
     # word-level scan is conservative: a false hit (the word inside a
-    # string literal) merely falls back to the always-correct solo commit.
+    # string literal) merely makes the op a group of its own.
     _MUTABLE_COLS_RE = re.compile(r"(?i)\b(metadata|embedding)\b")
 
     def _composable_rewrite_op(self, op: tuple) -> bool:
@@ -993,7 +880,7 @@ class VectorStore:
             op[1]
         )
 
-    def apply_batch(self, ops: list[tuple], *, coalesce: bool = True) -> list[int]:
+    def apply_batch(self, ops: list[tuple]) -> list[int]:
         """Qdrant's points batch-update API (``batch_update_points`` /
         ``POST /collections/{c}/points/batch``): an ORDERED sequence of
         write operations applied with Qdrant's sequential-consistency
@@ -1012,254 +899,215 @@ class VectorStore:
         Returns the per-op affected counts, positionally.  Unknown tags
         fail before ANY op runs — a malformed batch must not half-apply.
 
-        COMMIT COALESCING (default on): a consecutive run of id-keyed
-        rewrite ops (delete / set_payload / overwrite_payload /
-        delete_payload / clear_payload / update_vectors — the last joined
-        the family in r15: its id set is the batch's point_ids, its new
-        embeddings broadcast-join into the same composed rewrite) commits
-        ONE manifest version via a single composed bucket rewrite —
-        per-row liveness, metadata and embedding are threaded through the
-        run in op order, so overlapping id sets keep exact sequential
-        semantics and per-op matched counts (a payload or vector op after
-        a delete in the same run never counts the deleted row).  A
-        consecutive run of upserts whose EXPLICIT point_ids are pairwise
-        disjoint across batches likewise merges into one locate + rewrite
-        + append + commit (overlapping runs fall back to sequential — the
-        later upsert must replace the earlier's row).  ``delete_where``
-        joins the rewrite run when its predicate references only
-        IMMUTABLE columns (point_id / user_id / ts — no ``metadata`` or
-        ``embedding`` token): such a match set is a pure function of row
-        identity and upstream liveness, so its flag is the predicate
-        evaluated in-row, gated on ``alive``.  A predicate over mutable
-        columns would need re-binding against the threaded meta/vector
-        state, so it commits solo (the always-correct fallback — also
-        taken on any conservative token false-positive).  With
-        ``coalesce=True``
-        the manifest log records one version per commit GROUP rather than
-        per op (the only observable difference — time travel lands on
-        group boundaries); per-op ``UpdateResult`` counts are exact either
-        way, and ``coalesce=False`` restores the one-version-per-op log.
-        At 100 TB the coalesced run reads and rewrites each touched bucket
-        once instead of once per op — commit cost per GROUP, data cost
-        still pruned-bucket-only."""
-        dispatch = {
-            "upsert": self.upsert,
-            "delete": self.delete_by_id,
-            "delete_where": self.delete_where,
-            "set_payload": self.set_payload,
-            "overwrite_payload": self.overwrite_payload,
-            "delete_payload": self.delete_payload,
-            "clear_payload": self.clear_payload,
-            "update_vectors": self.update_vectors,
-        }
-        bad = [op[0] for op in ops if op[0] not in dispatch]
+        The ops commit in GROUPS, one manifest version per group, through
+        the same two functions every single-op method calls with a group
+        of one:
+
+        - a consecutive run of id-keyed rewrite ops (every tag but
+          ``upsert``; ``delete_where`` only when its predicate references
+          the immutable columns point_id / user_id / ts alone) is one
+          ``_apply_rewrite_group``;
+        - a ``delete_where`` whose predicate names ``metadata`` or
+          ``embedding`` must observe the preceding ops' writes, so it is
+          a group of its own (also on a conservative token false hit);
+        - a consecutive run of upserts is one ``_apply_upsert_group``.
+
+        Per-op counts are exact and sequential semantics hold inside each
+        group; the only observable difference from one commit per op is
+        that time travel lands on group boundaries.  At 100 TB a group
+        reads and rewrites each touched bucket once instead of once per
+        op — commit cost per group, data cost still pruned-bucket-only."""
+        valid = self._REWRITE_TAGS | {"upsert", "delete_where"}
+        bad = [op[0] for op in ops if op[0] not in valid]
         if bad:
             raise ValueError(
                 f"apply_batch: unknown operation tags {bad}; "
-                f"valid: {sorted(dispatch)}"
+                f"valid: {sorted(valid)}"
             )
-        if not coalesce:
-            return [dispatch[op[0]](*op[1:]) for op in ops]
-
         results: list[int] = []
         i = 0
         while i < len(ops):
-            tag = ops[i][0]
-            if self._composable_rewrite_op(ops[i]):
-                j = i
-                while j < len(ops) and self._composable_rewrite_op(ops[j]):
-                    j += 1
-                group = ops[i:j]
-                if len(group) == 1:
-                    results.append(dispatch[tag](*group[0][1:]))
-                else:
-                    results.extend(self._apply_rewrite_group(group))
-                i = j
-            elif tag == "upsert":
-                j = i
+            j = i + 1
+            if ops[i][0] == "upsert":
                 while j < len(ops) and ops[j][0] == "upsert":
                     j += 1
-                batches = [op[1] for op in ops[i:j]]
-                if len(batches) == 1:
-                    results.append(self.upsert(batches[0]))
-                else:
-                    results.extend(self._apply_upsert_group(batches))
-                i = j
+                results.extend(self._apply_upsert_group([op[1] for op in ops[i:j]]))
             else:
-                results.append(dispatch[tag](*ops[i][1:]))
-                i += 1
+                if self._composable_rewrite_op(ops[i]):
+                    while j < len(ops) and self._composable_rewrite_op(ops[j]):
+                        j += 1
+                results.extend(self._apply_rewrite_group(ops[i:j]))
+            i = j
         return results
 
-    def _rewrite_group_state(
-        self, df: DataFrame, ops: list[tuple], flag_cols=None
-    ):
-        """Thread the composed per-row state of an id-keyed rewrite run
-        over ``df`` (already joined against the per-op ``__f{k}`` match
-        flags, and — for ``update_vectors`` ops — the per-op ``__e{k}``
-        new-embedding columns): returns (matched_k Columns, final
+    @staticmethod
+    def _op_flag(k: int, op: tuple, flag_cols: dict):
+        """Op ``k``'s raw match flag over a row (NULL = no match): a
+        ``delete_where``'s predicate, a request-sized id list's in-row IN
+        predicate (``flag_cols``), else the ``__f{k}`` column of the flag
+        join."""
+        if op[0] == "delete_where":
+            return F.expr(op[1]).cast("boolean")
+        return flag_cols.get(k, F.col(f"__f{k}"))
+
+    def _rewrite_group_state(self, ops: list[tuple], flag_cols: dict):
+        """Thread the composed per-row state of a rewrite group, as
+        Columns over rows already joined against the flag frame (the
+        per-op ``__f{k}`` match flags and, for ``update_vectors`` ops, the
+        ``__e{k}`` new embeddings): returns (matched_k Columns, final
         liveness, final metadata, final embedding).  Unmatched rows carry
         their metadata and embedding through byte-identical (NULL stays
-        NULL — the single-op contract).  ``flag_cols`` (op index → match
-        Column) overrides the ``__f{k}`` join flags for ops whose match is
-        a plain in-row predicate (the ``_id_pred`` IN lists) — those ops
-        never joined anything."""
+        NULL).  A ``delete_where`` reads the row's stored columns:
+        ``apply_batch`` lets it follow other ops only when it names no
+        mutable column, so the stored values are the current ones; NULL
+        keeps the row."""
         alive = F.lit(True)
         meta = F.col("metadata")
         emb = F.col("embedding")
         matched = []
         for k, op in enumerate(ops):
             tag = op[0]
-            if tag == "delete_where":
-                # immutable-predicate guard (apply_batch) means the match
-                # is row-state-independent of earlier meta/vector ops;
-                # NULL keeps the row, exactly like the solo path
-                m = alive & F.coalesce(
-                    F.expr(op[1]).cast("boolean"), F.lit(False)
-                )
-                matched.append(m)
-                alive = alive & ~m
-                continue
-            flag = (
-                flag_cols[k]
-                if flag_cols is not None and k in flag_cols
-                else F.col(f"__f{k}")
-            )
-            m = alive & F.coalesce(flag, F.lit(False))
+            m = alive & F.coalesce(self._op_flag(k, op, flag_cols), F.lit(False))
             matched.append(m)
-            if tag == "delete":
+            if tag in ("delete", "delete_where"):
                 alive = alive & ~m
             elif tag == "update_vectors":
-                emb = F.when(m, F.col(f"__e{k}")).otherwise(emb)
+                # a NULL request vector leaves the stored one in place
+                emb = F.when(m, F.coalesce(F.col(f"__e{k}"), emb)).otherwise(emb)
             elif tag == "set_payload":
-                new_pairs = F.create_map(
-                    *[F.lit(str(x)) for kk, v in op[2].items() for x in (kk, v)]
-                )
-                meta = F.when(
-                    m, F.map_concat(self._without_keys(list(op[2]), meta), new_pairs)
-                ).otherwise(meta)
-            elif tag == "overwrite_payload":
                 meta = F.when(
                     m,
-                    F.create_map(
-                        *[F.lit(str(x)) for kk, v in op[2].items() for x in (kk, v)]
+                    F.map_concat(
+                        self._without_keys(list(op[2]), meta), _payload_map(op[2])
                     ),
                 ).otherwise(meta)
+            elif tag == "overwrite_payload":
+                meta = F.when(m, _payload_map(op[2])).otherwise(meta)
             elif tag == "delete_payload":
                 meta = F.when(m, self._without_keys(op[2], meta)).otherwise(meta)
             elif tag == "clear_payload":
                 meta = F.when(m, _empty_meta()).otherwise(meta)
-            else:  # pragma: no cover — guarded by _REWRITE_TAGS
+            else:  # pragma: no cover — guarded by apply_batch
                 raise AssertionError(tag)
         return matched, alive, meta, emb
 
-    def _apply_rewrite_group(self, ops: list[tuple]) -> list[int]:
-        """A consecutive run of id-keyed rewrite ops as ONE locate scan +
-        ONE bucket rewrite + ONE manifest commit, with exact per-op
-        counts.  Validates every op up front (the group must not
-        half-apply), computes driver-side per-point match flags from the
-        Python id lists (deduped — the ``_mutate_matched`` discipline;
-        an ``update_vectors`` op's ids come from its request-sized batch,
-        its new embeddings stay distributed and join in by broadcast;
-        an immutable-predicate ``delete_where`` contributes no probe at
-        all — its flag is the predicate evaluated in-row), and threads
-        liveness/metadata/embedding per row in op order, so overlapping
-        id sets reproduce sequential semantics exactly."""
+    def _apply_rewrite_group(
+        self, ops: list[tuple], *, normalize: bool = True
+    ) -> list[int]:
+        """The one implementation of every id-keyed and predicate write: a
+        group of rewrite ops (``apply_batch``'s tags but ``upsert``) as
+        ONE locate scan + ONE bucket rewrite + ONE manifest commit, with
+        exact per-op counts.  Each single-op method is the group of one.
+
+        Every op is validated up front (the group must not half-apply).
+        Match flags come from the driver-held id lists: a request-sized
+        list is an in-row IN predicate, a bulk one (over
+        ``_IN_LIST_MAX``) joins in as a deduped probe frame.  An
+        ``update_vectors`` op's ids come from its batch, whose new
+        embeddings (L2-normalized when ``normalize``) stay distributed
+        and join in by broadcast; a ``delete_where`` contributes its
+        predicate, evaluated in-row.  The locate scan first keeps only
+        rows that some op's raw flag selects, so an IN list or predicate
+        reaches the parquet scan as a pushed filter.  Liveness, metadata
+        and embedding thread per row in op order, so overlapping id sets
+        reproduce sequential semantics exactly."""
         for op in ops:
-            if op[0] in ("set_payload", "overwrite_payload") and not op[2]:
+            if (
+                op[0] in ("set_payload", "overwrite_payload", "delete_payload")
+                and not op[2]
+            ):
                 raise ValueError(f"{op[0]} requires at least one key")
-            if op[0] == "delete_payload" and not op[2]:
-                raise ValueError("delete_payload requires at least one key")
-        uv_batches: dict[int, DataFrame] = {}
         flag_cols: dict[int, "F.Column"] = {}
         probes = []
-        id_ks = []
         for k, op in enumerate(ops):
             if op[0] == "delete_where":
                 continue  # predicate flag, no id probe
             if op[0] == "update_vectors":
-                new = op[1].select(
+                probe = op[1].select(
                     F.col("point_id").cast("string").alias("point_id"),
                     F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias(
                         f"__e{k}"
                     ),
                 )
-                new = new.withColumn(f"__e{k}", F.expr(l2_normalize_sql(f"__e{k}")))
-                uv_batches[k] = new.persist()
-                ids_df = new.select("point_id")
+                if normalize:
+                    probe = probe.withColumn(
+                        f"__e{k}", F.expr(l2_normalize_sql(f"__e{k}"))
+                    )
             elif len(op[1]) <= self._IN_LIST_MAX:
                 # driver-held id list: an in-row IN predicate, no probe
                 # frame, no flag join (the _id_pred discipline)
                 flag_cols[k] = self._id_pred(op[1])
                 continue
             else:  # bulk list: join-probe flag (ADVICE r18 threshold)
-                ids_df = self._ids_frame(op[1])
-            id_ks.append(k)
-            probes.append(ids_df.withColumn("__op_k", F.lit(k)))
-        # flags as a UNION of per-op id frames folded by one request-sized
-        # aggregate (r14 ADVICE) — driver payload is linear in Σ|ids|, not
-        # |union| x n_ops, and update_vectors ids never leave the cluster.
-        # Per-op row counts ride the same aggregate so ALL update_vectors
-        # duplicate-id checks cost one action, and the persisted flags
-        # serve both passes without recomputing the union.
-        flags_cached = None
+                probe = self._ids_frame(op[1])
+            probes.append(
+                probe.withColumns({f"__f{k}": F.lit(True), "__op_k": F.lit(k)})
+            )
+        flags = None
         if probes:
-            probe = probes[0]
-            for p in probes[1:]:
-                probe = probe.unionByName(p)
-            flags_cached = probe.groupBy("point_id").agg(
-                *[
-                    F.max(F.when(F.col("__op_k") == k, F.lit(True))).alias(f"__f{k}")
-                    for k in id_ks
-                ],
-                *[
-                    F.count(F.when(F.col("__op_k") == k, F.lit(1))).alias(f"__c{k}")
-                    for k in uv_batches
-                ],
-            ).persist()
-        try:
-            if uv_batches:
-                dup_pred = " OR ".join(f"__c{k} > 1" for k in uv_batches)
-                if flags_cached.filter(dup_pred).limit(1).count():
-                    raise ValueError(
-                        "update_vectors: duplicate point_id in request"
-                    )
-            manifest = self._read_manifest()
-            current = self._read_files([f for fs in manifest.values() for f in fs])
-            if flags_cached is not None:
-                flags = flags_cached.drop(*[f"__c{k}" for k in uv_batches])
-                joined = current.join(F.broadcast(flags), "point_id", "left")
-            else:  # predicate/IN-only group: no id probes, no flag join
-                joined = current
-            matched, _, _, _ = self._rewrite_group_state(joined, ops, flag_cols)
-            per_bucket = (
-                joined.groupBy("ubucket")
+            union = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), probes
+            )
+            # bulk id frames are deduped, so one action checks every
+            # update_vectors batch for duplicate ids
+            if any(op[0] == "update_vectors" for op in ops) and (
+                union.groupBy("point_id", "__op_k")
+                .count()
+                .filter("count > 1")
+                .limit(1)
+                .count()
+            ):
+                raise ValueError("update_vectors: duplicate point_id in request")
+            union = union.drop("__op_k")
+            # one deduped probe is its own flag frame; several fold into
+            # one row per point_id by a request-sized aggregate (r14
+            # ADVICE) — driver payload is linear in Σ|ids|, not |union| x
+            # n_ops — persisted because the locate scan and the rewrite
+            # both join it.  update_vectors batches are never collected
+            # into Python: their new embeddings ride the flag frame.
+            flags = (
+                probes[0].drop("__op_k")
+                if len(probes) == 1
+                else union.groupBy("point_id")
                 .agg(
                     *[
-                        F.sum(m.cast("int")).alias(f"n{k}")
-                        for k, m in enumerate(matched)
+                        (F.max(c) if c.startswith("__f") else F.first(c, True))
+                        .alias(c)
+                        for c in union.columns
+                        if c != "point_id"
                     ]
                 )
-                .collect()
+                .persist()
             )
+
+        def _flagged(df: DataFrame) -> DataFrame:
+            # predicate/IN-only groups have no probe: no flag join
+            if flags is None:
+                return df
+            return df.join(F.broadcast(flags), "point_id", "left")
+
+        matched, alive, meta, emb = self._rewrite_group_state(ops, flag_cols)
+        try:
+            manifest = self._read_manifest()
+            joined = _flagged(
+                self._read_files([f for fs in manifest.values() for f in fs])
+            )
+            # a row no op's raw flag selects matches no op, and a row one
+            # selects matches at least its first selecting op (nothing
+            # before it deleted the row), so every bucket left after
+            # filtering on the flags' OR is touched; the filter also
+            # pushes IN lists and predicates to the scan
+            selected = reduce(
+                lambda a, b: a | b,
+                [self._op_flag(k, op, flag_cols) for k, op in enumerate(ops)],
+            )
+            sums = [F.sum(m.cast("int")).alias(f"n{k}") for k, m in enumerate(matched)]
+            per_bucket = joined.filter(selected).groupBy("ubucket").agg(*sums).collect()
             counts = [sum(r[f"n{k}"] for r in per_bucket) for k in range(len(ops))]
-            touched = [
-                r["ubucket"]
-                for r in per_bucket
-                if any(r[f"n{k}"] for k in range(len(ops)))
-            ]
+            touched = [r["ubucket"] for r in per_bucket]
             if touched:
-                df = self._read_files(
-                    [f for b in touched for f in manifest.get(b, [])]
-                )
-                dj = (
-                    df.join(F.broadcast(flags), "point_id", "left")
-                    if flags_cached is not None
-                    else df
-                )
-                for k, new in uv_batches.items():
-                    dj = dj.join(F.broadcast(new), "point_id", "left")
-                _, alive, meta, emb = self._rewrite_group_state(
-                    dj, ops, flag_cols
+                dj = _flagged(
+                    self._read_files([f for b in touched for f in manifest.get(b, [])])
                 )
                 survivors = (
                     dj.filter(alive)
@@ -1275,21 +1123,24 @@ class VectorStore:
                     manifest[b] = rewritten.get(b, [])
                 self._publish_manifest(manifest, stats)
         finally:
-            if flags_cached is not None:
-                flags_cached.unpersist()
-            for new in uv_batches.values():
-                new.unpersist()
+            if flags is not None:
+                flags.unpersist()
         return counts
 
-    def _apply_upsert_group(self, batches: list[DataFrame]) -> list[int]:
-        """A consecutive run of upserts whose EXPLICIT point_ids are
-        pairwise disjoint ACROSS batches, as one merged locate + rewrite +
-        append + commit (disjoint upserts commute, so the merged final
-        state equals the sequential one).  One distributed overlap probe
-        gates the merge; any cross-batch id overlap falls back to the
-        sequential per-op path (the later op must observe the earlier's
-        write).  NULL / absent ids take fresh uuids and never overlap.
-        Per-op counts = each batch's written rows, exactly as sequential."""
+    def _apply_upsert_group(
+        self, batches: list[DataFrame], *, normalize: bool = True
+    ) -> list[int]:
+        """The one implementation of upsert: a run of upsert batches as
+        one locate + bucket rewrite + append + commit (``upsert`` is the
+        run of one).  Batches whose EXPLICIT point_ids overlap ACROSS
+        batches cannot merge — the later must replace the earlier's row —
+        so one distributed overlap probe gates a run of two or more, and
+        an overlapping run commits batch by batch.  Disjoint upserts
+        commute, so the merged final state equals the sequential one;
+        NULL / absent ids take fresh uuids and never overlap.  Per-op
+        counts are each batch's written rows: a run of one takes its
+        count from the append's footers, a longer run from one count job
+        over the tagged union."""
         explicit = [
             b.select(F.col("point_id").cast("string").alias("point_id")).filter(
                 F.col("point_id").isNotNull()
@@ -1298,9 +1149,10 @@ class VectorStore:
             if "point_id" in b.columns
         ]
         if len(explicit) >= 2:
-            probe = explicit[0].withColumn("__op_k", F.lit(0))
-            for k, e in enumerate(explicit[1:], start=1):
-                probe = probe.unionByName(e.withColumn("__op_k", F.lit(k)))
+            probe = reduce(
+                DataFrame.unionByName,
+                [e.withColumn("__op_k", F.lit(k)) for k, e in enumerate(explicit)],
+            )
             overlapping = (
                 probe.groupBy("point_id")
                 .agg(F.countDistinct("__op_k").alias("d"))
@@ -1309,16 +1161,17 @@ class VectorStore:
                 .count()
             )
             if overlapping:
-                return [self.upsert(b) for b in batches]
-        prepped = [
-            self._with_bucket(self._defaults(b, normalize=True)).withColumn(
-                "__op_k", F.lit(k)
-            )
-            for k, b in enumerate(batches)
-        ]
-        combined = prepped[0]
-        for p in prepped[1:]:
-            combined = combined.unionByName(p)
+                return [self.upsert(b, normalize=normalize) for b in batches]
+        combined = reduce(
+            DataFrame.unionByName,
+            [
+                self._with_bucket(self._defaults(b, normalize=normalize)).withColumn(
+                    "__op_k", F.lit(k)
+                )
+                for k, b in enumerate(batches)
+            ],
+        )
+        appended_rows = combined.drop("__op_k")
         manifest = self._read_manifest()
         current = self._read_files([f for fs in manifest.values() for f in fs])
         ids = combined.select("point_id")
@@ -1334,69 +1187,40 @@ class VectorStore:
             survivors = self._read_files(
                 [f for b in touched for f in manifest.get(b, [])]
             ).join(F.broadcast(ids), "point_id", "left_anti")
-            # independent jobs into separate segment dirs (guide §2.6)
-            (rewritten, r_stats, _), (appended, a_stats, _) = (
-                self._write_segments_overlapped(
-                    [survivors, combined.drop("__op_k")]
-                )
+            # the survivor rewrite and the append are independent jobs
+            # into separate segment dirs — overlap them (guide §2.6); the
+            # manifest merges both results afterwards
+            (rewritten, r_stats, _), (appended, a_stats, n) = (
+                self._write_segments_overlapped([survivors, appended_rows])
             )
             new_stats.update(r_stats)
             for b in touched:
                 manifest[b] = rewritten.get(b, [])
         else:
-            appended, a_stats, _ = self._write_segment(combined.drop("__op_k"))
-        per_op = {
-            r["__op_k"]: r["n"]
-            for r in combined.groupBy("__op_k").agg(F.count("*").alias("n")).collect()
-        }
+            appended, a_stats, n = self._write_segment(appended_rows)
+        if len(batches) == 1:
+            counts = [n]
+        else:
+            per_op = {
+                r["__op_k"]: r["n"]
+                for r in combined.groupBy("__op_k")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
+            counts = [per_op.get(k, 0) for k in range(len(batches))]
         new_stats.update(a_stats)
         for b, fs in appended.items():
             manifest[b] = manifest.get(b, []) + fs
         self._publish_manifest(manifest, new_stats)
-        return [per_op.get(k, 0) for k in range(len(batches))]
+        return counts
 
     # -- S6/S7 deletes ------------------------------------------------------
 
-    def _delete_rewrite(self, manifest, touched_counts: dict[int, int], keep_filter) -> int:
-        """Shared tail of both delete paths: rewrite only the touched
-        buckets, keep everything else by reference.  ``touched_counts``
-        (bucket → matched rows) comes from the same single pruned scan that
-        located the buckets — no before/after full counts."""
-        touched = [b for b, c in touched_counts.items() if c > 0]
-        if touched:
-            bucket_files = [f for b in touched for f in manifest.get(b, [])]
-            survivors = keep_filter(self._read_files(bucket_files))
-            rewritten, stats, _ = self._write_segment(survivors)
-            for b in touched:
-                manifest[b] = rewritten.get(b, [])
-            self._publish_manifest(manifest, stats)
-        return sum(touched_counts.values())
-
     def delete_by_id(self, point_ids: list[str]) -> int:
-        """S6 (qdrant_client.py:407-432).  One semi-join scan yields both the
-        exact deleted count AND the touched buckets; only those buckets are
-        rewritten."""
-        manifest = self._read_manifest()
-        current = self._read_files([f for fs in manifest.values() for f in fs])
-        if len(point_ids) <= self._IN_LIST_MAX:
-            match = self._id_pred(point_ids)
-            locate = current.filter(match)
-            # coalesce keeps a NULL point_id like the anti-join did (store
-            # rows never have one — ingest uuids — but byte-parity is free)
-            keep = lambda df: df.filter(~F.coalesce(match, F.lit(False)))  # noqa: E731
-        else:  # bulk list: broadcast semi/anti joins (ADVICE r18 threshold)
-            ids_df = self._ids_frame(point_ids)
-            locate = current.join(F.broadcast(ids_df), "point_id", "left_semi")
-            keep = lambda df: df.join(  # noqa: E731
-                F.broadcast(ids_df), "point_id", "left_anti"
-            )
-        touched_counts = {
-            r["ubucket"]: r["n"]
-            for r in locate.groupBy("ubucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return self._delete_rewrite(manifest, touched_counts, keep)
+        """S6 (qdrant_client.py:407-432).  One pruned scan yields both the
+        exact deleted count AND the touched buckets; only those buckets
+        are rewritten."""
+        return self._apply_rewrite_group([("delete", point_ids)])[0]
 
     def delete_where(self, predicate: str) -> int:
         """S7 delete-by-predicate (qdrant_client.py:434-469) with an EXACT
@@ -1408,20 +1232,7 @@ class VectorStore:
         rewrite agree).  The locate scan counts matches per bucket reading
         only the predicate's columns + ``ubucket`` (parquet column
         pruning); only matching buckets are rewritten."""
-        manifest = self._read_manifest()
-        current = self._read_files([f for fs in manifest.values() for f in fs])
-        touched_counts = {
-            r["ubucket"]: r["n"]
-            for r in current.filter(predicate)
-            .groupBy("ubucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return self._delete_rewrite(
-            manifest,
-            touched_counts,
-            lambda df: df.filter(f"NOT coalesce(({predicate}), false)"),
-        )
+        return self._apply_rewrite_group([("delete_where", predicate)])[0]
 
     def delete_user(self, user_id: str) -> int:
         """The reference's exact S7 shape — ``delete_user_vectors(user_id)``
@@ -1432,15 +1243,15 @@ class VectorStore:
         rewrites 1/n_buckets of it, nothing else."""
         manifest = self._read_manifest()
         b = _py_bucket(user_id, self.n_buckets)
-        bucket_files = manifest.get(b, [])
-        n = (
-            self._read_files(bucket_files)
-            .filter(F.col("user_id") == user_id)
-            .count()
-        )
-        return self._delete_rewrite(
-            manifest, {b: n}, lambda df: df.filter(F.col("user_id") != user_id)
-        )
+        bucket = self._read_files(manifest.get(b, []))
+        n = bucket.filter(F.col("user_id") == user_id).count()
+        if n:
+            rewritten, stats, _ = self._write_segment(
+                bucket.filter(F.col("user_id") != user_id)
+            )
+            manifest[b] = rewritten.get(b, [])
+            self._publish_manifest(manifest, stats)
+        return n
 
     # -- O7 optimizer: segment merge ----------------------------------------
 

@@ -1470,12 +1470,14 @@ def points_update_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the upsert wipes ids 0–4's payloads (and moves them to user 'moved',
     normalizing at write), THEN set_payload puts ``tier=gold`` on ids 0–9
     (so the wiped rows end with exactly one key), THEN update_vectors
-    (in the SAME coalesced rewrite run since r15) overwrites ids 3–8's
-    vectors with their normalized reverses — id 8 still live, so it
-    counts — THEN the delete removes ids 8–12 (two freshly gilded rows
-    and one freshly re-vectored row among them), THEN clear_payload
-    empties ids 13–15.  Any reordering changes the final state the
-    oracle pins, now including each survivor's vector (element + norm:
+    overwrites ids 3–8's vectors with their normalized reverses — id 8
+    still live, so it counts — THEN the delete removes ids 8–12 (two
+    freshly gilded rows and one freshly re-vectored row among them),
+    THEN clear_payload empties ids 13–15.  The batch commits as two
+    groups: the upsert, then the four rewrite ops as one composed bucket
+    rewrite — the same group functions every single-op store method
+    runs.  Any reordering changes the final state the oracle pins,
+    including each survivor's vector (element + norm:
     reversed-normalized for 3–7, upsert-normalized for 0–2, raw seed
     for the rest)."""
     from .operators.store import VectorStore

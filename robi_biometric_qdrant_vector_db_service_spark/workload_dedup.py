@@ -23,7 +23,6 @@ Recall@10 vs ground truth (PERFORMANCE_OPTIMIZATION_GUIDE.md:88).
 
 from __future__ import annotations
 
-import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,13 +50,6 @@ HAMMING_T = 3  # Manku WWW'07 operating point: k=3 over 64 bits, 4 bands
 SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = 16
 COSINE_T = 0.4
-# LSH candidate-pair sets broadcast in the verify joins only below this
-# many pairs (~2 small ints + overhead each → tens of MB at the cap);
-# above it the equi-join shuffles — the plans/strategy.py gating pattern.
-# Since r8 the MinHash verify join defaults to AQE-decided broadcast
-# (measured faster, same safety — BENCH_NOTES_r08.md); the explicit gate
-# stays available via SPARK_GRAFT_MINHASH_COUNT_GATE=1.
-CAND_BROADCAST_MAX = 1_000_000
 
 _rng = random.Random(42)
 MINHASH_AB = [(_rng.randrange(1, P), _rng.randrange(0, P)) for _ in range(N_HASHES)]
@@ -389,25 +381,13 @@ def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # cand is collision-bounded but grows with corpus dup-density (~248k
-    # pairs already at sf0.1).  Two scale-safe shapes for the verify join:
-    # letting AQE's runtime shuffle statistics convert the post-shuffle
-    # join to broadcast-hash (no extra count job; above the threshold it
-    # stays a shuffle join — decided from ACTUAL sizes, the same safety
-    # the count gate bought), or the explicit count gate (persist + count,
-    # then broadcast iff under CAND_BROADCAST_MAX — the strategy.py
-    # pattern, kept behind the env knob).  Measured head-to-head at sf0.1
-    # (BENCH_NOTES_r08.md): AQE wins both interleaved min-of-3 pairs
-    # (2.43/2.12s vs 2.89/2.45s, identical 256-row output, verify join
-    # runs as BroadcastHashJoin) — the gate's count job was pure overhead,
-    # so AQE is the default.  cand_plan appears ONCE in the final plan
-    # (the i1→i2 join chain), so banding still runs exactly once without
-    # the persist.
-    if os.environ.get("SPARK_GRAFT_MINHASH_COUNT_GATE", "0") == "1":
-        cand = track_scratch(cand_plan.persist())
-        n_cand = cand.count()  # doubles as materialization
-        cand_side = F.broadcast(cand) if n_cand <= CAND_BROADCAST_MAX else cand
-    else:
-        cand_side = cand_plan  # AQE decides broadcast-vs-shuffle at runtime
+    # pairs already at sf0.1).  AQE's runtime shuffle statistics convert
+    # the post-shuffle verify join to broadcast-hash when cand is small
+    # and keep it a shuffle join above the threshold — decided from
+    # ACTUAL sizes, with no count job (BENCH_NOTES_r08.md measured it
+    # faster than a persist + count + broadcast gate at sf0.1).  cand_plan
+    # appears ONCE in the final plan (the i1→i2 join chain), so banding
+    # runs exactly once without a persist.
     # verify: intersection size by counting shared shingles (equi-joins
     # against the exploded, frequency-capped shingle index — stop-shingles
     # would contribute |posting|² join rows and no signal; the stop-set is
@@ -424,7 +404,7 @@ def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     i1 = kept.select(F.col("doc_id").alias("doc1"), "shingle")
     i2 = kept.select(F.col("doc_id").alias("doc2"), "shingle")
     inter = (
-        cand_side
+        cand_plan
         .join(i1, "doc1")
         .join(i2, ["doc2", "shingle"])
         .groupBy("doc1", "doc2")

@@ -535,8 +535,7 @@ def test_apply_batch_coalesces_commit_counts(spark, tmp_path):
       benched consequence);
     - a run of upserts with disjoint explicit ids publishes exactly one;
     - a run of upserts with OVERLAPPING ids falls back to one version per
-      op (the later op must observe the earlier's write);
-    - coalesce=False restores one version per op for the rewrite run."""
+      op (the later op must observe the earlier's write)."""
     store = _payload_store(
         spark,
         tmp_path,
@@ -571,13 +570,6 @@ def test_apply_batch_coalesces_commit_counts(spark, tmp_path):
     assert store._current_version() == v2 + 2  # overlap: sequential
     assert [r["user_id"] for r in store.read().filter("point_id = 'z'")
             .collect()] == ["u2"]  # the LATER upsert won
-
-    v3 = store._current_version()
-    assert store.apply_batch(
-        [("set_payload", ["a"], {"k": "v"}), ("clear_payload", ["a"])],
-        coalesce=False,
-    ) == [1, 1]
-    assert store._current_version() == v3 + 2  # opt-out: one per op
 
     # delete_where with an IMMUTABLE-column predicate composes into the
     # rewrite run (one commit for all three ops, exact counts)

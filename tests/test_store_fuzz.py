@@ -232,25 +232,25 @@ def _read_state(store):
 @given(initial=_rows, ops=st.lists(_batchable_op, min_size=2, max_size=6))
 def test_apply_batch_coalesced_equals_sequential(spark, tmp_path_factory,
                                                  initial, ops):
-    """The commit-coalescing path (default, one manifest version per
-    rewrite-run / disjoint-upsert-run) must return the same per-op counts
-    and leave the same final state as the one-version-per-op sequential
-    path — on ARBITRARY op sequences, overlapping id sets included (the
-    coalesced rewrite threads per-row liveness/metadata/EMBEDDING in op
-    order — update_vectors joined the rewrite family in r15 — and
-    overlapping upsert runs must detect the overlap and fall back).
-    State equality covers the embedding column bit-for-bit, so a vector
-    update lost, misordered, or applied to a deleted row fails here."""
+    """One ``apply_batch`` call over the whole sequence (one manifest
+    version per rewrite run / disjoint-upsert run) must return the same
+    per-op counts and leave the same final state as applying each op in
+    its own ``apply_batch([op])`` call — on ARBITRARY op sequences,
+    overlapping id sets included (a group threads per-row
+    liveness/metadata/EMBEDDING in op order, and overlapping upsert runs
+    must detect the overlap and fall back).  State equality covers the
+    embedding column bit-for-bit, so a vector update lost, misordered,
+    or applied to a deleted row fails here."""
     roots = tmp_path_factory.mktemp("store_coal")
     a = VectorStore.create(spark, str(roots / "coalesced"),
                            _row_df(spark, initial))
     b = VectorStore.create(spark, str(roots / "sequential"),
                            _row_df(spark, initial))
     batch = [_to_batch_op(spark, o) for o in ops]
-    got_a = a.apply_batch(batch, coalesce=True)
-    got_b = b.apply_batch(
-        [_to_batch_op(spark, o) for o in ops], coalesce=False
-    )
+    got_a = a.apply_batch(batch)
+    got_b = [
+        n for o in ops for n in b.apply_batch([_to_batch_op(spark, o)])
+    ]
     assert got_a == got_b, (got_a, got_b, ops)
     assert _read_state(a) == _read_state(b), ops
     # coalescing only ever reduces the number of published versions

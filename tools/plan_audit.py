@@ -20,8 +20,10 @@ from __future__ import annotations
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -91,7 +93,7 @@ def main() -> None:
             out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
             print(f"{name}: ERROR {e}", flush=True)
     if rnd and not names:  # artifact only for full-registry runs
-        path = f"/root/repo/PLANS_r{rnd.zfill(2)}.json"
+        path = REPO / f"PLANS_r{rnd.zfill(2)}.json"
         with open(path, "w") as f:
             json.dump(
                 {

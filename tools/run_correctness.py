@@ -17,8 +17,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -85,7 +87,7 @@ def main() -> None:
             "fail": list(bad),
             "queries": results,
         }
-        path = f"/root/repo/CORRECTNESS_LOCAL_r{write_round}.json"
+        path = REPO / f"CORRECTNESS_LOCAL_r{write_round}.json"
         with open(path, "w") as f:
             json.dump(artifact, f, indent=1)
         print("wrote", path)
