@@ -9,6 +9,7 @@ bit-for-bit against the DuckDB oracle (DuckDB timestamps are UTC-naive).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from collections.abc import Iterable, Sequence
@@ -82,6 +83,18 @@ def get_spark(app_name: str = "robi_biometric_qdrant_vector_db_service_spark", *
     return spark
 
 
+@functools.lru_cache(maxsize=64)
+def _ddl_schemas(ddl: str) -> tuple[StructType, pa.Schema]:
+    """The ``StructType`` a DDL string parses to, and its Arrow schema.
+    ``StructType.fromDDL`` parses on the JVM (a py4j round trip, ~3 ms)
+    and callers pass the same few literal DDLs on every call, so the
+    parse is memoized.  ``createDataFrame`` only reads the struct, and a
+    frame's ``schema`` is parsed afresh from the JVM, so the cached
+    instance never reaches a caller that could change it."""
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
 def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> DataFrame:
     """Driver-held ``rows`` (tuples or Rows in the column order of the DDL
     ``schema``) as a DataFrame that Spark plans as a ``LocalRelation``.
@@ -99,8 +112,7 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> D
     Values convert the way ``pyarrow`` converts them to the schema's Arrow
     types: a ``map`` takes a dict, a naive ``datetime`` is read as UTC.
     This is the package's only ``createDataFrame`` call."""
-    struct = StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(struct)
+    struct, arrow_schema = _ddl_schemas(schema)
     columns = list(zip(*rows)) or [()] * len(struct)
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],

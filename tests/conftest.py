@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -24,6 +25,19 @@ hyp_settings.load_profile(os.environ.get("HYPOTHESIS_PROFILE", "exploratory"))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def jobs_during(spark, run):
+    """Spark job ids started while ``run()`` runs on this thread, and its
+    result (the jobs are tagged with a job group of their own)."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_during")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,5 @@
-"""Differential fuzz of distributed BPE training (`workload_pipeline.
-bpe_train`) against a from-scratch pure-Python reference.
+"""Differential fuzz of BPE training (`workload_pipeline.bpe_train`)
+against a from-scratch pure-Python reference.
 
 The reference implements Sennrich's algorithm the naive way — per-word
 symbol LISTS, pair counting by iteration, greedy left-to-right merge by
@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -105,8 +106,6 @@ def test_bpe_exhaustion_raises_loud(spark):
     docs = spark.createDataFrame(
         [(0, "a b c"), (1, "a b")], "doc_id bigint, text string"
     )
-    import pytest
-
     with pytest.raises(ValueError, match="vocabulary exhausted"):
         bpe_train(word_vocab(docs), 1)
 
@@ -173,8 +172,6 @@ def test_bpe_encode_matches_pure_python_reference(spark, words, k):
 
 
 def test_bpe_encode_rejects_unsafe_merge_list(spark):
-    import pytest
-
     from robi_biometric_qdrant_vector_db_service_spark.workload_pipeline import (
         bpe_encode_vocab,
     )
@@ -187,35 +184,21 @@ def test_bpe_encode_rejects_unsafe_merge_list(spark):
 def test_bpe_encode_corpus_zero_word_docs(spark):
     """Docs with no [a-z]+ words must appear with zero counts (the packing
     feed needs every doc present)."""
-    import pandas as pd
-
     from robi_biometric_qdrant_vector_db_service_spark.workload_pipeline import (
-        bpe_encode_vocab,
-        bpe_train_pairs,
+        _bpe_doc_counts,
     )
-    from pyspark.sql import functions as F
 
     docs = spark.createDataFrame(
         [(0, "aa ab"), (1, "123 !?"), (2, "b")], "doc_id bigint, text string"
     )
-    vocab = word_vocab(docs)
-    enc = bpe_encode_vocab(vocab, bpe_train_pairs(vocab, 1))
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word").rlike("^[a-z]+$"))
-    cnt = (
-        words.join(enc.select("word", "n_sym"), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("n_sym").alias("n"))
-    )
     out = {
-        r["doc_id"]: r["n"]
-        for r in docs.select("doc_id").join(cnt, "doc_id", "left").collect()
+        r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
+        for r in _bpe_doc_counts(docs, 1).collect()
     }
     # merge 1 is (a, a) or (a, b) by tie-break: count (a,b)=1 in "ab",
     # (a,a)=1 in "aa" -> tie broken to (a,a); "aa"->1 tok, "ab"->2, "b"->1
-    assert out[1] is None  # no gated words
-    assert out[0] == 3 and out[2] == 1
+    assert out[1] == (0, 0)  # no gated words
+    assert out[0] == (2, 3) and out[2] == (1, 1)
 
 
 @settings(max_examples=6, deadline=None)
@@ -303,27 +286,103 @@ def test_bpe_encode_replay_crosses_checkpoint_spans(spark):
     assert want["abaab"] == 1 and want["aba"] == 1 and want["abab"] == 2
 
 
-def test_driver_and_distributed_trainers_agree(spark, monkeypatch):
-    """The r19 size dispatch (vocabs within BPE_DRIVER_TRAIN_MAX train
-    driver-side on the collected word-frequency table): both trainers
-    must produce byte-identical merge lists — same weighted counts, same
-    (n DESC, l, r) tiebreaks, same per-step token counts — on corpora
-    with overlapping and disjoint adjacency.  Keeps the distributed loop
-    exercised now that fixtures route to the in-driver path."""
-    import robi_biometric_qdrant_vector_db_service_spark.workload_pipeline as WP
+class _Rows:
+    """A stand-in vocab: ``bpe_train_pairs`` reads its (sym, freq) rows
+    with one ``select(...).collect()``, so hypothesis can feed hundreds of
+    examples without a Spark job each."""
+
+    def __init__(self, words: list[str]):
+        self.rows = [
+            {"sym": "⟨" + "⟩⟨".join(w) + "⟩", "freq": n}
+            for w, n in Counter(words).items()
+        ]
+
+    def select(self, *cols):
+        return self
+
+    def collect(self):
+        return self.rows
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    words=st.lists(
+        st.text(alphabet="abc", min_size=1, max_size=8), min_size=20, max_size=120
+    ),
+    k=st.integers(1, 40),
+)
+def test_incremental_trainer_matches_reference(words, k):
+    """The incremental trainer (pair counts updated per merge, a heap with
+    stale entries skipped, a pair → word-ids index) against the
+    recount-every-step reference, on vocabs large enough that merges
+    create and destroy pairs across many words: same pairs, same weighted
+    counts, same (n DESC, l, r) tiebreaks, same per-step token counts, and
+    the exhaustion error exactly where the reference runs out."""
     from robi_biometric_qdrant_vector_db_service_spark.workload_pipeline import (
         bpe_train_pairs,
     )
 
-    docs_rows = ["aaa"] * 3 + ["abab"] * 2 + ["baa", "cc", "cac", "acca"] * 2
-    docs = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(docs_rows)],
-        "doc_id bigint, text string",
+    want = _ref_bpe(words, k)
+    if len(want) < k:
+        with pytest.raises(ValueError, match=f"exhausted after {len(want)} "):
+            bpe_train_pairs(_Rows(words), k)
+        return
+    got = [
+        (step, left + right, n, t)
+        for step, left, right, n, t in bpe_train_pairs(_Rows(words), k)
+    ]
+    assert got == want, (words, k)
+
+
+def test_each_merge_rewrites_only_the_words_holding_its_pair(spark, monkeypatch):
+    """676 distinct two-letter words with distinct frequencies: each pair
+    lives in exactly one word, so each of the 50 merges rewrites exactly
+    one word (a recount-every-step loop rewrites all 676 per merge)."""
+    import robi_biometric_qdrant_vector_db_service_spark.workload_pipeline as WP
+    from robi_biometric_qdrant_vector_db_service_spark.session import local_frame
+
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = local_frame(
+        spark,
+        [
+            (a + b, f"⟨{a}⟩⟨{b}⟩", 1000 + i)
+            for i, (a, b) in enumerate((a, b) for a in letters for b in letters)
+        ],
+        "word string, sym string, freq bigint",
     )
-    local = bpe_train_pairs(word_vocab(docs), 4)
-    monkeypatch.setattr(WP, "BPE_DRIVER_TRAIN_MAX", -1)
-    dist = bpe_train_pairs(word_vocab(docs), 4)
-    assert local == dist
-    assert local == [
-        (s, lf, r, n, t) for (s, lf, r, n, t) in local
-    ]  # shape: (step, left, right, n, n_tokens)
+    calls = []
+    real = WP._bpe_merge_word
+
+    def counting(syms, left, right):
+        calls.append((left, right))
+        return real(syms, left, right)
+
+    monkeypatch.setattr(WP, "_bpe_merge_word", counting)
+    merges = WP.bpe_train_pairs(vocab, 50)
+    assert len(merges) == 50
+    assert len(calls) == 50
+    # highest frequency first: "zz", "zy", ... each merged once
+    assert [(lf, r) for _s, lf, r, _n, _t in merges] == calls
+    assert merges[0][1:4] == ("z", "z", 1000 + 675)
+
+
+def test_training_runs_one_collect_of_the_vocab(spark):
+    """One ``bpe_train_pairs`` call over the sf0.01 documents vocab runs
+    the Spark jobs of a plain collect of the vocab and no more."""
+    from robi_biometric_qdrant_vector_db_service_spark.sources.catalog import (
+        load_table,
+    )
+    from robi_biometric_qdrant_vector_db_service_spark.workload_pipeline import (
+        bpe_train_pairs,
+    )
+    from tests.conftest import SF_ORACLE, jobs_during
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    collect_jobs, _ = jobs_during(spark, lambda: word_vocab(docs).collect())
+    train_jobs, merges = jobs_during(
+        spark, lambda: bpe_train_pairs(word_vocab(docs), 8)
+    )
+    assert len(merges) == 8
+    assert len(collect_jobs) == 2, collect_jobs
+    assert len(train_jobs) == 2, train_jobs
+

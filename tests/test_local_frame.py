@@ -7,12 +7,15 @@
   scan runs Python workers).
 - Nothing else in the package calls ``createDataFrame`` or
   ``sparkContext.parallelize``.
+- A DDL string is parsed once per process, and the shared parse is not
+  changed by the frames built from it.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import uuid
 from decimal import Decimal
 
 import pytest
@@ -98,6 +101,27 @@ def test_local_frame_plans_as_local_relation(spark, case):
     rows, schema = CASES[case]
     plan = _plan(local_frame(spark, rows, schema))
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_local_frame_parses_each_ddl_once(spark, monkeypatch):
+    from pyspark.sql.types import StructType
+
+    from robi_biometric_qdrant_vector_db_service_spark.session import _ddl_schemas
+
+    parsed = []
+    real = StructType.fromDDL
+
+    def counting(cls, ddl):
+        parsed.append(ddl)
+        return real(ddl)
+
+    monkeypatch.setattr(StructType, "fromDDL", classmethod(counting))
+    ddl = f"k_{uuid.uuid4().hex} bigint, v array<double>"
+    frames = [local_frame(spark, [(i, [0.5] * i)], ddl) for i in range(3)]
+    assert parsed == [ddl]
+    before = _ddl_schemas(ddl)[0].json()
+    assert [f.collect()[0][1] for f in frames] == [[], [0.5], [0.5, 0.5]]
+    assert _ddl_schemas(ddl)[0].json() == before == real(ddl).json()
 
 
 def test_search_probe_plans_as_local_relation(spark, tmp_path, monkeypatch):

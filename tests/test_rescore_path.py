@@ -10,15 +10,13 @@
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from robi_biometric_qdrant_vector_db_service_spark.operators import ann
 from robi_biometric_qdrant_vector_db_service_spark.sources.catalog import load_table
 from robi_biometric_qdrant_vector_db_service_spark.workload import _probes
 from robi_biometric_qdrant_vector_db_service_spark.workload_ann import _companion_corpus
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_during
 
 OPERATORS = {
     "int8": lambda c, p: ann.int8_rescore_topk(c, p, k=10, oversample=3),
@@ -27,18 +25,6 @@ OPERATORS = {
     ),
     "bq": lambda c, p: ann.bq_hamming_topk(c, p, k=10, oversample=4),
 }
-
-
-def _jobs_during(spark, build):
-    """Spark job ids started while ``build()`` runs on this thread."""
-    sc = spark.sparkContext
-    group = f"plan-build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "plan build")
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 def test_companion_absent_derives_and_matches_companion_layout(spark):
@@ -62,7 +48,7 @@ def test_rescore_plan_building_starts_no_spark_job(spark, tmp_path, monkeypatch)
     staged = _companion_corpus(spark, SF_SMOKE)
     probes = _probes(spark, SF_SMOKE)
     for name, op in OPERATORS.items():
-        jobs, _ = _jobs_during(spark, lambda: op(staged, probes))
+        jobs, _ = jobs_during(spark, lambda: op(staged, probes))
         assert jobs == [], name
 
     emb = load_table(spark, SF_SMOKE, "embeddings").limit(40)
@@ -76,7 +62,7 @@ def test_rescore_plan_building_starts_no_spark_job(spark, tmp_path, monkeypatch)
         )
     )
     for mode in ("int8", "binary"):
-        jobs, _ = _jobs_during(
+        jobs, _ = jobs_during(
             spark, lambda: svc.store.search(probes, k=5, quantization=mode)
         )
         assert jobs == [], mode
@@ -87,7 +73,7 @@ def test_rescore_plan_building_starts_no_spark_job(spark, tmp_path, monkeypatch)
     real = st.search_corpus
 
     def spy(*args, **kwargs):
-        jobs, out = _jobs_during(spark, lambda: real(*args, **kwargs))
+        jobs, out = jobs_during(spark, lambda: real(*args, **kwargs))
         built.append((kwargs.get("quantization"), jobs))
         return out
 

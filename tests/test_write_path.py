@@ -26,7 +26,7 @@ import pytest
 from robi_biometric_qdrant_vector_db_service_spark.operators import store as store_mod
 from robi_biometric_qdrant_vector_db_service_spark.operators.store import VectorStore
 from robi_biometric_qdrant_vector_db_service_spark.session import local_frame
-from tests.test_rescore_path import _jobs_during
+from tests.conftest import jobs_during
 
 ROWS = (
     "point_id string, embedding array<double>, user_id string, ts double, "
@@ -85,7 +85,7 @@ def test_single_mutations_start_no_more_jobs_than_before(spark, tmp_path):
         ),
     ]
     for name, call, want, bound in calls:
-        jobs, got = _jobs_during(spark, call)
+        jobs, got = jobs_during(spark, call)
         assert got == want, name
         assert len(jobs) <= bound, (name, len(jobs), bound)
     # 40 rows, 2 deleted, 1 upserted new
