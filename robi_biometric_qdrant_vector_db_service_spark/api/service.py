@@ -162,19 +162,20 @@ class VectorService:
             [(0, [float(x) for x in body["embedding"]])],
             "q_id bigint, q_emb array<double>",
         )
-        # Pin ONE manifest snapshot per request (ADVICE r5): search and
-        # payload enrichment must see the same corpus version, or a
-        # concurrent add/delete on another HTTP thread can drop hits from
-        # the inner join or mix payloads from a newer version.  A
-        # "quantization" of "int8" or "binary" serves the reference's
-        # configured quantized search (qdrant_client.py:129-138) over the
-        # same snapshot's at-rest companion columns.
+        # One scan of ONE manifest version per request (ADVICE r5): ``read``
+        # resolves the version once, and the hits carry their payload
+        # (user_id, metadata, ts) through the ranking, as the reference's
+        # results do, so search and payload cannot disagree by
+        # construction — a concurrent add/delete on another HTTP thread
+        # commits a newer version this plan never reads.  A "quantization"
+        # of "int8" or "binary" serves the reference's configured quantized
+        # search (qdrant_client.py:129-138) over the same snapshot's at-rest
+        # companion columns.
         from ..operators.store import search_corpus
 
         quant = body.get("quantization")
         corpus = self.store.read(
             user_id=body.get("user_filter"),
-            version=self.store._current_version(),
             with_index=quant is not None,
         )
         hits = search_corpus(
@@ -184,14 +185,10 @@ class VectorService:
             score_threshold=body.get("threshold"),
             quantization=quant,
             oversample=int(body.get("oversample", 3)),
+            keep=("user_id", "metadata", "ts"),
         )
-        # enrich hits with payload columns, as the reference's results carry
-        # (id, score, user_id, metadata, timestamp)
-        rows = (
-            hits.join(corpus.select("point_id", "user_id", "metadata", "ts"), "point_id")
-            .orderBy("rank")
-            .collect()
-        )
+        # at most k rows: order them here, not with a distributed sort
+        rows = sorted(hits.collect(), key=lambda r: r["rank"])
         ms = self._record("search", t0)
         return {
             "success": True,

@@ -224,21 +224,26 @@ INT8_QUANT_EXPR = (
 
 
 def _rescore_survivors(
-    corpus: DataFrame, survivors: DataFrame, k: int
+    corpus: DataFrame, survivors: DataFrame, k: int, keep: tuple = ()
 ) -> DataFrame:
     """The one exact stage 2 of the two-stage rescore family (INT8,
     matryoshka and BQ here, PQ-ADC and IVFPQ in operators.pq): each
     operator owns only its stage 1, which yields ``survivors``
     (q_id, q_emb, vec_id) — ``queries × oversample × k`` rows,
     request-sized by construction.  They broadcast onto the float column
-    ``corpus.select("vec_id", "embedding")``, are rescored with exact
-    cosine, and are ranked by (score DESC, vec_id), the reference's
+    ``corpus.select("vec_id", "embedding", *keep)``, are rescored with
+    exact cosine, and are ranked by (score DESC, vec_id), the reference's
     rescore=True step (qdrant_client.py:129-138).
+
+    ``keep`` names corpus columns this stage's scan reads and carries
+    unchanged into each ranked row (after ``score``): the hits' payload,
+    so a caller needs no second corpus scan to decorate them.  Stage 1
+    never reads them, and ``keep=()`` leaves the plan as it was.
 
     One lazy plan: building it starts no Spark job, and both stages run
     only when the caller collects (tests/test_rescore_path.py)."""
     rescored = (
-        corpus.select("vec_id", "embedding")
+        corpus.select("vec_id", "embedding", *keep)
         .join(F.broadcast(survivors), "vec_id")
         .withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
     )
@@ -246,7 +251,9 @@ def _rescore_survivors(
     return (
         rescored.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("score", 6).alias("score"))
+        .select(
+            "q_id", "vec_id", "rank", F.round("score", 6).alias("score"), *keep
+        )
     )
 
 
@@ -265,6 +272,7 @@ def int8_rescore_topk(
     probes: DataFrame,
     k: int = 10,
     oversample: int = 3,
+    keep: tuple = (),
 ) -> DataFrame:
     """O4 scalar quantization + rescore (qdrant_client.py:129-138):
     stage 1 ranks by the exact-integer INT8 dot product, stage 2
@@ -274,9 +282,11 @@ def int8_rescore_topk(
     Stage 1 reads the ``e8`` companion column when the corpus carries it
     MATERIALIZED (written by VectorStore at ingest, or the staged rescore
     layout in workload_ann) — the 4× at-rest scan-byte win — and
-    otherwise quantizes ``embedding`` in the scan projection.
+    otherwise quantizes ``embedding`` in the scan projection.  ``keep``
+    goes to stage 2 only (``_rescore_survivors``).
 
-    Returns (q_id, vec_id, rank, score) — final ranking by exact score.
+    Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
+    score.
     """
     p8 = probes.withColumn("p8", F.expr(INT8_QUANT_EXPR.format(col="q_emb")))
     int_dot = "aggregate(zip_with(e8, p8, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
@@ -289,7 +299,7 @@ def int8_rescore_topk(
         .filter(F.col("irank") <= oversample * k)
         .select("q_id", "q_emb", "vec_id")
     )
-    return _rescore_survivors(corpus, survivors, k)
+    return _rescore_survivors(corpus, survivors, k, keep)
 
 
 def matryoshka_rescore_topk(
@@ -392,6 +402,7 @@ def bq_hamming_topk(
     *,
     oversample: int = 4,
     dims: int | None = 64,
+    keep: tuple = (),
 ) -> DataFrame:
     """O4 binary quantization + oversampled exact rescore: stage 1 ranks
     candidates by the HAMMING distance between sign-bit codes (popcount
@@ -410,9 +421,11 @@ def bq_hamming_topk(
     ``dims=None`` switches to the dim-agnostic pack (word count from
     ``size(q_emb)`` at run time) and the store's ``bq_code`` companion
     name — the VectorStore serving path, where the collection dimension
-    is data, not a compile-time literal.
+    is data, not a compile-time literal.  ``keep`` goes to stage 2 only
+    (``_rescore_survivors``).
 
-    Returns (q_id, vec_id, rank, score) — final ranking by exact score.
+    Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
+    score.
     """
 
     def pack(col: str) -> str:
@@ -435,7 +448,7 @@ def bq_hamming_topk(
         .filter(F.col("hrank") <= oversample * k)
         .select("q_id", "q_emb", "vec_id")
     )
-    return _rescore_survivors(corpus, survivors, k)
+    return _rescore_survivors(corpus, survivors, k, keep)
 
 
 def bitext_margin_pairs(

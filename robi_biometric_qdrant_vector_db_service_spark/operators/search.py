@@ -103,6 +103,7 @@ def knn_search(
     query_vec: str = "q_emb",
     metric: str = "cosine",
     offset: int = 0,
+    keep: tuple = (),
 ) -> DataFrame:
     """Q1: per-query top-k under ``metric`` (default cosine, the
     reference's pinned choice; Qdrant's other public metrics — dot,
@@ -132,8 +133,14 @@ def knn_search(
     — Qdrant documents the same caveat (each page re-ranks offset+k
     candidates), so deep pagination belongs to scroll, not offset.
 
-    Returns: (q_id, vec_id, rank, score) — score rounded to 6dp for stable
-    cross-engine comparison; ranking uses the unrounded value.
+    ``keep`` names corpus columns carried unchanged into each ranked row
+    (after ``score``), so a caller that needs the hits' payload reads it
+    from this one scan instead of joining the hits back onto the corpus.
+    The columns ride through the ranking shuffle only after the
+    per-partition top-k limit; ``keep=()`` leaves the plan as it was.
+
+    Returns: (q_id, vec_id, rank, score, *keep) — score rounded to 6dp for
+    stable cross-engine comparison; ranking uses the unrounded value.
     """
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
@@ -174,6 +181,7 @@ def knn_search(
             F.col(corpus_id),
             F.col("rank"),
             F.round("score", 6).alias("score"),
+            *keep,
         )
     )
 

@@ -175,13 +175,19 @@ def search_corpus(
     score_threshold: float | None = None,
     quantization: str | None = None,
     oversample: int = 3,
+    keep: tuple = (),
 ) -> DataFrame:
     """Search one store snapshot — the single search dispatch behind
-    ``VectorStore.search`` and the HTTP facade, which passes its
-    version-pinned ``read`` so payload enrichment joins the same
-    snapshot.  ``corpus`` is a ``VectorStore.read`` frame (read
-    ``with_index=True`` for quantized search), ``queries`` is
-    (q_id, q_emb); returns (q_id, point_id, rank, score).
+    ``VectorStore.search`` and the HTTP facade.  ``corpus`` is a
+    ``VectorStore.read`` frame (read ``with_index=True`` for quantized
+    search), ``queries`` is (q_id, q_emb); returns
+    (q_id, point_id, rank, score, *keep).
+
+    ``keep`` names corpus columns (the payload: ``user_id``, ``metadata``,
+    ``ts``) carried unchanged into each ranked row, read by the same scan
+    that scores the vectors (stage 2's scan for quantized search), so the
+    hits and their payload come from one read of one snapshot with no
+    join back onto the corpus.  ``keep=()`` leaves the plan as it was.
 
     Without ``quantization`` this is exact cosine top-k.  With it, the
     two-stage rescore over the MATERIALIZED companion columns every
@@ -203,16 +209,21 @@ def search_corpus(
             k,
             score_threshold=score_threshold,
             corpus_id="point_id",
+            keep=keep,
         )
     if quantization == "int8":
-        src = corpus.select(F.col("point_id").alias("vec_id"), "embedding", "e8")
-        out = ann.int8_rescore_topk(src, queries, k=k, oversample=oversample)
+        src = corpus.select(
+            F.col("point_id").alias("vec_id"), "embedding", "e8", *keep
+        )
+        out = ann.int8_rescore_topk(
+            src, queries, k=k, oversample=oversample, keep=keep
+        )
     elif quantization == "binary":
         src = corpus.select(
-            F.col("point_id").alias("vec_id"), "embedding", "bq_code"
+            F.col("point_id").alias("vec_id"), "embedding", "bq_code", *keep
         )
         out = ann.bq_hamming_topk(
-            src, queries, k=k, oversample=oversample, dims=None
+            src, queries, k=k, oversample=oversample, dims=None, keep=keep
         )
     else:
         raise ValueError(

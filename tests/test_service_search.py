@@ -1,0 +1,193 @@
+"""``VectorService.search`` reads each hit's payload from the one ranked
+scan (``search_corpus(..., keep=...)``) instead of joining the hits back
+onto a second scan of the corpus and sorting them on the cluster.
+
+- Job counts: an exact search (plain, user filter, threshold) starts at
+  most 3 Spark jobs (the probe broadcast, the scan+score map stage, the
+  rank stage); an int8 or binary search at most 5 (stage 1 adds its own
+  map and rank stages).
+- Plan shape: the exact plan reads the store's parquet files once, with
+  ``embedding`` and the payload in its one ReadSchema; a quantized plan
+  reads them twice, stage 1 without ``embedding``, stage 2 with it and
+  the payload.  No plan range-partitions or joins on ``point_id``.
+- Differential: ``keep=`` returns the rows that joining the hits onto
+  the corpus payload by ``point_id`` returns, on data with a score tie,
+  an empty result and an empty metadata map.
+"""
+
+from __future__ import annotations
+
+import re
+
+import numpy as np
+import pytest
+
+from robi_biometric_qdrant_vector_db_service_spark.api.service import VectorService
+from robi_biometric_qdrant_vector_db_service_spark.operators import store as st
+from robi_biometric_qdrant_vector_db_service_spark.session import local_frame
+from tests.conftest import jobs_during
+
+PAYLOAD = ("user_id", "metadata", "ts")
+N, DIM, K = 40, 16, 5
+# request fields per search kind
+KINDS = {
+    "plain": {},
+    "user_filter": {"user_filter": "u1"},
+    "threshold": {"threshold": 0.2},
+    "int8": {"quantization": "int8"},
+    "binary": {"quantization": "binary"},
+}
+MAX_JOBS = {"plain": 3, "user_filter": 3, "threshold": 3, "int8": 5, "binary": 5}
+VECS = np.random.default_rng(7).normal(size=(N, DIM))
+VECS[1] = VECS[0]
+
+
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+@pytest.fixture(scope="module")
+def svc(spark, tmp_path_factory):
+    """40 points over 4 users; ``p00`` and ``p01`` share one vector (a
+    score tie broken by id) and ``p02`` has an empty metadata map."""
+    service = VectorService(spark, str(tmp_path_factory.mktemp("svc") / "store"))
+    service.add_batch(
+        {
+            "embeddings": VECS.tolist(),
+            "user_ids": [f"u{n % 4}" for n in range(N)],
+            "point_ids": [f"p{n:02d}" for n in range(N)],
+            "metadata_list": [{} if n == 2 else {"n": str(n)} for n in range(N)],
+        }
+    )
+    return service
+
+
+def _body(kind: str) -> dict:
+    return {"embedding": VECS[0].tolist(), "k": K, **KINDS[kind]}
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_search_job_count(spark, svc, kind):
+    svc.search(_body(kind))  # warm the store's manifest memo
+    jobs, resp = jobs_during(spark, lambda: svc.search(_body(kind)))
+    assert resp["total_results"] > 0, kind
+    assert len(jobs) <= MAX_JOBS[kind], (kind, jobs)
+
+
+def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
+    """The plan the service collects is the hits plan ``search_corpus``
+    built: no second corpus scan, no join back on ``point_id``, no
+    range-partitioned sort."""
+    built, collected = [], []
+    frame_cls = type(svc.store.read())  # the session's concrete DataFrame
+    real_search, real_collect = st.search_corpus, frame_cls.collect
+
+    def spy(*args, **kwargs):
+        out = real_search(*args, **kwargs)
+        built.append((kwargs.get("quantization"), out, _plan(out)))
+        return out
+
+    def collect(self):
+        collected.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(st, "search_corpus", spy)
+    monkeypatch.setattr(frame_cls, "collect", collect)
+    for kind in sorted(KINDS):
+        svc.search(_body(kind))
+    assert len(built) == len(collected) == len(KINDS)
+    for (quant, hits, plan), done in zip(built, collected):
+        assert done is hits, quant  # the service collects the hits as built
+        assert "rangepartitioning" not in plan, plan
+        assert not re.search(r"keys \[\d+\]: \[point_id", plan), plan
+        equi_joins = re.findall(
+            r"^\(\d+\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", plan, re.M
+        )
+        schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
+        assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == len(schemas)
+        with_vec = [s for s in schemas if "embedding" in s]
+        assert len(with_vec) == 1, (quant, schemas)
+        assert all(f"{c}:" in with_vec[0] for c in PAYLOAD), with_vec
+        if quant is None:
+            assert len(schemas) == 1, schemas
+            assert equi_joins == [], plan
+        else:
+            # stage 1 scans only (point_id, companion); stage 2's broadcast
+            # survivor join, keyed on vec_id, is the plan's one equi-join
+            assert len(schemas) == 2, schemas
+            (stage1,) = [s for s in schemas if "embedding" not in s]
+            assert stage1 == {
+                "int8": "struct<point_id:string,e8:array<tinyint>>",
+                "binary": "struct<point_id:string,bq_code:array<bigint>>",
+            }[quant], stage1
+            assert equi_joins == ["BroadcastHashJoin"], plan
+            assert re.search(r"Left keys \[1\]: \[vec_id#", plan), plan
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(
+        (
+            r["q_id"],
+            r["rank"],
+            r["point_id"],
+            r["score"],
+            r["user_id"],
+            sorted((r["metadata"] or {}).items()),
+            r["ts"],
+        )
+        for r in df.collect()
+    )
+
+
+def test_keep_matches_the_enrichment_join(spark, svc):
+    probes = local_frame(
+        spark,
+        [(q, v.tolist()) for q, v in enumerate((VECS[0], VECS[2], -VECS[5]))],
+        "q_id bigint, q_emb array<double>",
+    )
+    # q2 matches no point exactly, so a threshold just above its best
+    # score is above every score it has
+    far = probes.filter("q_id = 2")
+    best = max(r["score"] for r in st.search_corpus(svc.store.read(), far, 1).collect())
+    cases = {
+        **{kind: (probes, KINDS[kind]) for kind in KINDS},
+        "threshold_above_all": (far, {"threshold": best + 1e-3}),
+    }
+    for name, (queries, case) in cases.items():
+        quant = case.get("quantization")
+        corpus = svc.store.read(
+            user_id=case.get("user_filter"), with_index=quant is not None
+        )
+
+        def search(**kw):
+            return st.search_corpus(
+                corpus,
+                queries,
+                K,
+                score_threshold=case.get("threshold"),
+                quantization=quant,
+                **kw,
+            )
+
+        carried = _rows(search(keep=PAYLOAD))
+        joined = _rows(search().join(corpus.select("point_id", *PAYLOAD), "point_id"))
+        assert carried == joined, name
+        if name == "threshold_above_all":
+            assert carried == [], carried
+            continue
+        assert carried, name
+        if "user_filter" not in case:
+            # the tie: p00 and p01 share q0's vector, ranked by id
+            assert [r[2] for r in carried if r[0] == 0][:2] == ["p00", "p01"], name
+            # q1 is p02's vector, whose metadata map is empty
+            assert any(r[2] == "p02" and r[5] == [] for r in carried), name
+
+
+def test_service_results_keep_score_then_id_order(svc):
+    for kind in sorted(KINDS):
+        results = svc.search(_body(kind))["results"]
+        assert results, kind
+        keys = [(-r["score"], r["id"]) for r in results]
+        assert keys == sorted(keys), (kind, keys)
+        if kind != "user_filter":
+            assert [r["id"] for r in results[:2]] == ["p00", "p01"], kind
