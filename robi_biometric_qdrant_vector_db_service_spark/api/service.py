@@ -157,11 +157,6 @@ class VectorService:
     def search(self, body: dict) -> dict:
         t0 = time.perf_counter()
         k = int(body.get("k", 10))
-        probe = local_frame(
-            self.spark,
-            [(0, [float(x) for x in body["embedding"]])],
-            "q_id bigint, q_emb array<double>",
-        )
         # One scan of ONE manifest version per request (ADVICE r5): ``read``
         # resolves the version once, and the hits carry their payload
         # (user_id, metadata, ts) through the ranking, as the reference's
@@ -170,7 +165,9 @@ class VectorService:
         # commits a newer version this plan never reads.  A "quantization"
         # of "int8" or "binary" serves the reference's configured quantized
         # search (qdrant_client.py:129-138) over the same snapshot's at-rest
-        # companion columns.
+        # companion columns.  The one embedding goes to ``search_corpus``
+        # as a vector, not a frame: it plans as a folded literal ranked by
+        # TakeOrderedAndProject, one Spark job (two for quantized search).
         from ..operators.store import search_corpus
 
         quant = body.get("quantization")
@@ -180,15 +177,14 @@ class VectorService:
         )
         hits = search_corpus(
             corpus,
-            probe,
+            body["embedding"],
             k,
             score_threshold=body.get("threshold"),
             quantization=quant,
             oversample=int(body.get("oversample", 3)),
             keep=("user_id", "metadata", "ts"),
         )
-        # at most k rows: order them here, not with a distributed sort
-        rows = sorted(hits.collect(), key=lambda r: r["rank"])
+        rows = hits.collect()  # at most k rows, in rank order
         ms = self._record("search", t0)
         return {
             "success": True,

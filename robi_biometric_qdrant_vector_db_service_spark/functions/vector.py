@@ -20,6 +20,10 @@ compares both.  Same semantics, same results.
 
 from __future__ import annotations
 
+import json
+import struct
+from collections.abc import Sequence
+
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +83,31 @@ def l2_distance_sql(a: str, b: str) -> str:
         f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
     )
+
+
+def probe_literal(vec: Sequence[float]) -> Column:
+    """One driver-held vector as an ``array<double>`` Column the optimizer
+    folds to a single ``Literal``: the values travel as one JSON string
+    (one py4j call, where ``F.lit(list)`` makes one per element) and
+    ``from_json`` of a literal is constant-folded before planning.
+
+    ``json.dumps`` writes each float's shortest round-trip repr (and
+    ``NaN``/``Infinity``, which ``from_json`` reads), and the JVM parses
+    the text correctly rounded, so every value arrives bit for bit —
+    -0.0, subnormals and ±1e308 included.  A NaN's sign and payload have
+    no JSON spelling, so a vector whose text does not read back to the
+    same bits raises instead of being altered (pinned in
+    tests/test_probe_literal.py)."""
+    values = [float(x) for x in vec]
+    text = json.dumps(values)
+    back = json.loads(text)
+    for i, (a, b) in enumerate(zip(values, back)):
+        if struct.pack("<d", a) != struct.pack("<d", b):
+            raise ValueError(
+                f"probe element {i} ({struct.pack('>d', a).hex()}) has no "
+                "exact JSON spelling (a NaN with a sign or payload)"
+            )
+    return F.from_json(F.lit(text), "array<double>")
 
 
 def dot(a: str, b: str) -> Column:

@@ -31,11 +31,12 @@ per-query candidate set is corpus/|buckets|, not the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sql, dot_sql, norm_sql
 from ..session import local_frame
+from .search import top_k, with_probe
 
 _DEC12 = "decimal(28,12)"
 
@@ -224,7 +225,13 @@ INT8_QUANT_EXPR = (
 
 
 def _rescore_survivors(
-    corpus: DataFrame, survivors: DataFrame, k: int, keep: tuple = ()
+    corpus: DataFrame,
+    survivors: DataFrame,
+    k: int,
+    keep: tuple = (),
+    *,
+    probe: Column | None = None,
+    score_threshold: float | None = None,
 ) -> DataFrame:
     """The one exact stage 2 of the two-stage rescore family (INT8,
     matryoshka and BQ here, PQ-ADC and IVFPQ in operators.pq): each
@@ -240,21 +247,33 @@ def _rescore_survivors(
     so a caller needs no second corpus scan to decorate them.  Stage 1
     never reads them, and ``keep=()`` leaves the plan as it was.
 
+    With a single ``probe`` Column (``functions.vector.probe_literal``)
+    the survivors are bare (vec_id), the probe is re-attached as a
+    literal, and the ranking is ``top_k``'s take-ordered plan: the
+    returned (vec_id, score, *keep) rows collect in rank order.
+
+    ``score_threshold`` keeps the rows whose rounded score reaches it;
+    the single-probe plan filters before its take, which keeps the same
+    rows because the kept scores are a prefix of the ranking.
+
     One lazy plan: building it starts no Spark job, and both stages run
     only when the caller collects (tests/test_rescore_path.py)."""
-    rescored = (
-        corpus.select("vec_id", "embedding", *keep)
-        .join(F.broadcast(survivors), "vec_id")
-        .withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
+    rescored = corpus.select("vec_id", "embedding", *keep).join(
+        F.broadcast(survivors), "vec_id"
     )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", "vec_id", "rank", F.round("score", 6).alias("score"), *keep
-        )
-    )
+    if probe is not None:
+        rescored = with_probe(rescored, probe)
+    scored = rescored.withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
+    order = [F.desc("score"), F.col("vec_id")]
+    score = F.round("score", 6).alias("score")
+    if probe is not None:
+        if score_threshold is not None:
+            scored = scored.filter(F.round("score", 6) >= score_threshold)
+        return top_k(scored, k, order, ["vec_id", score, *keep], per=None)
+    ranked = top_k(scored, k, order, ["q_id", "vec_id", "rank", score, *keep])
+    if score_threshold is None:
+        return ranked
+    return ranked.filter(F.col("score") >= score_threshold)
 
 
 def _companion(corpus: DataFrame, name: str, derive: str) -> DataFrame:
@@ -267,12 +286,38 @@ def _companion(corpus: DataFrame, name: str, derive: str) -> DataFrame:
     return corpus.select("vec_id", col.alias(name))
 
 
+def _survivors_rescored(
+    corpus: DataFrame,
+    probes: DataFrame | Column,
+    scored: DataFrame,
+    order: list,
+    n: int,
+    k: int,
+    keep: tuple,
+    score_threshold: float | None,
+) -> DataFrame:
+    """Stage 1's ``n`` best rows of ``scored`` under ``order`` as the
+    survivors of ``_rescore_survivors``: (q_id, q_emb, vec_id) per query
+    for a query frame, bare (vec_id) for a single probe Column, whose
+    take-ordered stage 1 then runs inside the job that builds stage 2's
+    broadcast."""
+    probe = probes if isinstance(probes, Column) else None
+    if probe is None:
+        survivors = top_k(scored, n, order, ["q_id", "q_emb", "vec_id"])
+    else:
+        survivors = top_k(scored, n, order, ["vec_id"], per=None)
+    return _rescore_survivors(
+        corpus, survivors, k, keep, probe=probe, score_threshold=score_threshold
+    )
+
+
 def int8_rescore_topk(
     corpus: DataFrame,
-    probes: DataFrame,
+    probes: DataFrame | Column,
     k: int = 10,
     oversample: int = 3,
     keep: tuple = (),
+    score_threshold: float | None = None,
 ) -> DataFrame:
     """O4 scalar quantization + rescore (qdrant_client.py:129-138):
     stage 1 ranks by the exact-integer INT8 dot product, stage 2
@@ -283,23 +328,26 @@ def int8_rescore_topk(
     MATERIALIZED (written by VectorStore at ingest, or the staged rescore
     layout in workload_ann) — the 4× at-rest scan-byte win — and
     otherwise quantizes ``embedding`` in the scan projection.  ``keep``
-    goes to stage 2 only (``_rescore_survivors``).
+    and ``score_threshold`` go to stage 2 only (``_rescore_survivors``).
+
+    ``probes`` is a (q_id, q_emb) frame, or one probe as a
+    ``functions.vector.probe_literal`` Column: stage 1 then takes its
+    ``oversample × k`` in one take-ordered plan under stage 2's broadcast,
+    and the result is (vec_id, score, *keep) in rank order.
 
     Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
     score.
     """
-    p8 = probes.withColumn("p8", F.expr(INT8_QUANT_EXPR.format(col="q_emb")))
     int_dot = "aggregate(zip_with(e8, p8, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
-    w1 = Window.partitionBy("q_id").orderBy(F.desc("iscore"), F.col("vec_id"))
-    survivors = (
-        _companion(corpus, "e8", INT8_QUANT_EXPR.format(col="embedding"))
-        .crossJoin(F.broadcast(p8))
-        .withColumn("iscore", F.expr(int_dot))
-        .withColumn("irank", F.row_number().over(w1))
-        .filter(F.col("irank") <= oversample * k)
-        .select("q_id", "q_emb", "vec_id")
+    scored = with_probe(
+        _companion(corpus, "e8", INT8_QUANT_EXPR.format(col="embedding")),
+        probes,
+        derived={"p8": INT8_QUANT_EXPR.format(col="q_emb")},
+    ).withColumn("iscore", F.expr(int_dot))
+    return _survivors_rescored(
+        corpus, probes, scored, [F.desc("iscore"), F.col("vec_id")],
+        oversample * k, k, keep, score_threshold,
     )
-    return _rescore_survivors(corpus, survivors, k, keep)
 
 
 def matryoshka_rescore_topk(
@@ -339,17 +387,15 @@ def matryoshka_rescore_topk(
             f"matryoshka_rescore_topk: prefix_dims must be >= 1, got {prefix_dims}"
         )
     companion = f"e_pre{prefix_dims}"
-    pp = probes.withColumn("p_pre", F.expr(f"slice(q_emb, 1, {prefix_dims})"))
-    w1 = Window.partitionBy("q_id").orderBy(F.desc("pscore"), F.col("vec_id"))
-    survivors = (
-        _companion(corpus, companion, f"slice(embedding, 1, {prefix_dims})")
-        .crossJoin(F.broadcast(pp))
-        .withColumn("pscore", F.expr(cosine_sql(companion, "p_pre")))
-        .withColumn("prank", F.row_number().over(w1))
-        .filter(F.col("prank") <= oversample * k)
-        .select("q_id", "q_emb", "vec_id")
+    scored = with_probe(
+        _companion(corpus, companion, f"slice(embedding, 1, {prefix_dims})"),
+        probes,
+        derived={"p_pre": f"slice(q_emb, 1, {prefix_dims})"},
+    ).withColumn("pscore", F.expr(cosine_sql(companion, "p_pre")))
+    return _survivors_rescored(
+        corpus, probes, scored, [F.desc("pscore"), F.col("vec_id")],
+        oversample * k, k, (), None,
     )
-    return _rescore_survivors(corpus, survivors, k)
 
 
 # --------------------------------------------------------------------------
@@ -397,12 +443,13 @@ def bq_words_dynamic_expr(col: str) -> str:
 
 def bq_hamming_topk(
     corpus: DataFrame,
-    probes: DataFrame,
+    probes: DataFrame | Column,
     k: int = 10,
     *,
     oversample: int = 4,
     dims: int | None = 64,
     keep: tuple = (),
+    score_threshold: float | None = None,
 ) -> DataFrame:
     """O4 binary quantization + oversampled exact rescore: stage 1 ranks
     candidates by the HAMMING distance between sign-bit codes (popcount
@@ -421,8 +468,9 @@ def bq_hamming_topk(
     ``dims=None`` switches to the dim-agnostic pack (word count from
     ``size(q_emb)`` at run time) and the store's ``bq_code`` companion
     name — the VectorStore serving path, where the collection dimension
-    is data, not a compile-time literal.  ``keep`` goes to stage 2 only
-    (``_rescore_survivors``).
+    is data, not a compile-time literal.  ``keep`` and
+    ``score_threshold`` go to stage 2 only (``_rescore_survivors``), and
+    ``probes`` may be one probe Column, as in ``int8_rescore_topk``.
 
     Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
     score.
@@ -434,21 +482,19 @@ def bq_hamming_topk(
         return bq_words_expr(col, dims)
 
     companion = "bq_code" if dims is None else f"bq{dims}"
-    p = probes.withColumn("q_code", F.expr(pack("q_emb")))
     hamming = (
         f"aggregate(zip_with({companion}, q_code, (a, b) -> bit_count(a ^ b)), "
         "0, (acc, v) -> acc + v)"
     )
-    w1 = Window.partitionBy("q_id").orderBy(F.asc("hamming"), F.col("vec_id"))
-    survivors = (
-        _companion(corpus, companion, pack("embedding"))
-        .crossJoin(F.broadcast(p))
-        .withColumn("hamming", F.expr(hamming))
-        .withColumn("hrank", F.row_number().over(w1))
-        .filter(F.col("hrank") <= oversample * k)
-        .select("q_id", "q_emb", "vec_id")
+    scored = with_probe(
+        _companion(corpus, companion, pack("embedding")),
+        probes,
+        derived={"q_code": pack("q_emb")},
+    ).withColumn("hamming", F.expr(hamming))
+    return _survivors_rescored(
+        corpus, probes, scored, [F.asc("hamming"), F.col("vec_id")],
+        oversample * k, k, keep, score_threshold,
     )
-    return _rescore_survivors(corpus, survivors, k, keep)
 
 
 def bitext_margin_pairs(

@@ -23,11 +23,24 @@ The corpus side is the 100 TB side; the query side is small by construction
 * For corpora above ``plans.strategy.FULL_SCAN_THRESHOLD`` the ANN path
   (operators.ann) pre-buckets candidates; this module is the exact engine
   that also serves as the ANN recall oracle.
+
+A single driver-held probe (the HTTP search request) takes a shorter plan.
+It arrives as one folded ``array<double>`` literal
+(``functions.vector.probe_literal``) instead of a broadcast one-row frame,
+and its ranking is ``orderBy(score, id).limit(k)``, which Spark plans as
+``TakeOrderedAndProject``:
+
+    scan(corpus) → project(score vs literal) → filter(score ≥ t)
+        → TakeOrderedAndProject(k)
+
+Each partition keeps its own top-k and the driver merges them inside the
+collect's one job: no broadcast build, no ``Exchange``, no rank column (the
+rows collect in rank order).  ``top_k`` holds both rankings.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sql, dot_sql, l1_distance_sql, l2_distance_sql
@@ -82,10 +95,63 @@ def score_pairs(
     (any of ``METRICS``; default cosine, the reference's pinned choice).
 
     Query side is broadcast (small); scoring stays in whole-stage codegen.
+    A single probe ``Column`` (``probe_literal``) is attached to every
+    corpus row as ``query_vec`` instead, with no join.
     """
     expr_builder, _ = resolve_metric(metric)
-    return corpus.crossJoin(F.broadcast(queries)).withColumn(
+    return with_probe(corpus, queries, query_vec).withColumn(
         "score", F.expr(expr_builder(corpus_vec, query_vec))
+    )
+
+
+def with_probe(
+    corpus: DataFrame,
+    queries,
+    query_vec: str = "q_emb",
+    derived: dict | None = None,
+) -> DataFrame:
+    """Every corpus row paired with every query, plus the probe-side
+    columns ``derived`` (name → SQL over ``query_vec``): a query frame
+    gets them and is broadcast and cross-joined; a single probe
+    ``Column`` becomes the column ``query_vec``, which the optimizer
+    inlines as a literal, and ``derived`` is evaluated on each row."""
+    derived = {c: F.expr(e) for c, e in (derived or {}).items()}
+    if isinstance(queries, Column):
+        out = corpus.withColumn(query_vec, queries)
+        return out.withColumns(derived) if derived else out
+    probes = queries.withColumns(derived) if derived else queries
+    return corpus.crossJoin(F.broadcast(probes))
+
+
+def top_k(
+    scored: DataFrame,
+    n: int,
+    order: list,
+    cols: list,
+    *,
+    per: str | None = "q_id",
+    offset: int | None = None,
+) -> DataFrame:
+    """The rows ranked ``offset+1 … offset+n`` of ``scored`` under
+    ``order`` (sort Columns, a unique key last, so ties resolve the same
+    way on every run), projected to ``cols``.
+
+    With ``per`` (a query id column) each query is ranked by a
+    ``row_number`` window partitioned on it, and ``cols`` may name the
+    ``rank`` column.  With ``per=None`` (one probe) the ranking is
+    ``orderBy(order).select(cols).limit(n)``, planned as
+    ``TakeOrderedAndProject``: a per-partition top-n merged in the one job
+    that collects it, no shuffle.  That plan has no rank column; its rows
+    collect in rank order."""
+    if per is None:
+        ranked = scored.orderBy(*order).select(*cols)
+        return (ranked.offset(offset) if offset else ranked).limit(n)
+    w = Window.partitionBy(per).orderBy(*order)
+    keep = F.col("rank") <= n + (offset or 0)
+    if offset is not None:
+        keep = keep & (F.col("rank") > offset)
+    return (
+        scored.withColumn("rank", F.row_number().over(w)).filter(keep).select(*cols)
     )
 
 
@@ -139,6 +205,10 @@ def knn_search(
     The columns ride through the ranking shuffle only after the
     per-partition top-k limit; ``keep=()`` leaves the plan as it was.
 
+    ``queries`` is a (q_id, q_emb) frame, or one probe as a
+    ``probe_literal`` Column, which takes the single-probe plan (module
+    docstring) and returns (vec_id, score, *keep) in rank order.
+
     Returns: (q_id, vec_id, rank, score, *keep) — score rounded to 6dp for
     stable cross-engine comparison; ranking uses the unrounded value.
     """
@@ -171,18 +241,13 @@ def knn_search(
             scored = scored.filter(F.col("score") <= float(score_threshold))
         else:
             scored = scored.filter(F.col("score") >= float(score_threshold))
-    order = F.asc("score") if lower_is_better else F.desc("score")
-    w = Window.partitionBy(query_id).orderBy(order, F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k + offset) & (F.col("rank") > offset))
-        .select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.col("rank"),
-            F.round("score", 6).alias("score"),
-            *keep,
-        )
+    order = [F.asc("score") if lower_is_better else F.desc("score"), F.col(corpus_id)]
+    score = F.round("score", 6).alias("score")
+    if isinstance(queries, Column):
+        return top_k(scored, k, order, [corpus_id, score, *keep], per=None, offset=offset)
+    return top_k(
+        scored, k, order, [query_id, corpus_id, "rank", score, *keep],
+        per=query_id, offset=offset,
     )
 
 

@@ -59,13 +59,14 @@ import shutil
 import threading
 import uuid
 import zlib
+from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_normalize_sql
+from ..functions.vector import l2_normalize_sql, probe_literal
 from ..session import local_frame
 
 POINT_SCHEMA = (
@@ -111,7 +112,12 @@ def _num_input_partitions(df: DataFrame) -> int:
     the plan in a Python-pickler conversion).  ``_jdf`` is a private
     PySpark attribute absent under Spark Connect, so fall back to the
     public (slower) probe rather than failing every segment write
-    (ADVICE r18)."""
+    (ADVICE r18).
+
+    The probe builds the plan's RDD, and building a broadcast join's RDD
+    runs the broadcast's job; a plan of scans, filters and projections
+    starts none.  So callers whose write plan broadcasts probe its
+    streamed scan instead (``_write_segment``'s ``in_parts``)."""
     try:
         return df._jdf.rdd().getNumPartitions()
     except AttributeError:
@@ -169,7 +175,7 @@ def _bucket_col(n_buckets: int):
 
 def search_corpus(
     corpus: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | Sequence[float],
     k: int = 10,
     *,
     score_threshold: float | None = None,
@@ -182,6 +188,15 @@ def search_corpus(
     ``VectorStore.read`` frame (read ``with_index=True`` for quantized
     search), ``queries`` is (q_id, q_emb); returns
     (q_id, point_id, rank, score, *keep).
+
+    ``queries`` may instead be ONE driver-held vector (a sequence of
+    floats, the HTTP request's embedding).  It becomes a folded
+    ``array<double>`` literal (``functions.vector.probe_literal``) and
+    the ranking becomes ``TakeOrderedAndProject`` (``search.top_k``):
+    an exact search is one Spark job (scan, score, threshold, take), a
+    quantized one two (stage 1's take builds stage 2's broadcast).  The
+    result is (point_id, score, *keep), collected in rank order; the
+    rows are the frame form's for that query (tests/test_service_search.py).
 
     ``keep`` names corpus columns (the payload: ``user_id``, ``metadata``,
     ``ts``) carried unchanged into each ranked row, read by the same scan
@@ -202,6 +217,8 @@ def search_corpus(
     from . import ann
     from .search import knn_search
 
+    if not isinstance(queries, DataFrame):
+        queries = probe_literal(queries)
     if quantization is None:
         return knn_search(
             corpus,
@@ -216,24 +233,23 @@ def search_corpus(
             F.col("point_id").alias("vec_id"), "embedding", "e8", *keep
         )
         out = ann.int8_rescore_topk(
-            src, queries, k=k, oversample=oversample, keep=keep
+            src, queries, k=k, oversample=oversample, keep=keep,
+            score_threshold=score_threshold,
         )
     elif quantization == "binary":
         src = corpus.select(
             F.col("point_id").alias("vec_id"), "embedding", "bq_code", *keep
         )
         out = ann.bq_hamming_topk(
-            src, queries, k=k, oversample=oversample, dims=None, keep=keep
+            src, queries, k=k, oversample=oversample, dims=None, keep=keep,
+            score_threshold=score_threshold,
         )
     else:
         raise ValueError(
             f"quantization must be 'int8', 'binary' or None, got "
             f"{quantization!r}"
         )
-    out = out.withColumnRenamed("vec_id", "point_id")
-    if score_threshold is not None:
-        out = out.filter(F.col("score") >= score_threshold)
-    return out
+    return out.withColumnRenamed("vec_id", "point_id")
 
 
 class VectorStore:
@@ -339,7 +355,7 @@ class VectorStore:
         return new_v
 
     def _write_segment(
-        self, df: DataFrame
+        self, df: DataFrame, in_parts: int | None = None
     ) -> tuple[dict[int, list[str]], dict[str, list[float]], int]:
         """Write rows (core columns + ubucket) as a new immutable segment,
         one directory per bucket; return (bucket → new files, file →
@@ -350,7 +366,12 @@ class VectorStore:
         just-written parquet FOOTERS — one metadata pass, no re-scan and no
         second evaluation of the write plan (uuid()/normalize are
         non-reexecutable).  If the write or the footer read raises, the
-        partial segment dir is removed before re-raising."""
+        partial segment dir is removed before re-raising.
+
+        ``in_parts`` is ``df``'s partition count when the caller knows it
+        without probing ``df``: a broadcast join keeps the partitions of
+        its streamed side, so a rewrite passes its scan's count and the
+        probe starts no job of its own (``_num_input_partitions``)."""
         from .ann import INT8_QUANT_EXPR, bq_words_dynamic_expr
 
         seg = os.path.join(self.root, f"seg_{uuid.uuid4().hex[:12]}")
@@ -378,7 +399,8 @@ class VectorStore:
 
         spark = df.sparkSession
         # one probe per segment write, on every mutation (see helper)
-        in_parts = _num_input_partitions(df)
+        if in_parts is None:
+            in_parts = _num_input_partitions(df)
         salt_n = max(
             1,
             min(
@@ -410,7 +432,9 @@ class VectorStore:
             raise
         return files, stats, n_rows
 
-    def _write_segments_overlapped(self, dfs: list[DataFrame]) -> list[tuple]:
+    def _write_segments_overlapped(
+        self, dfs: list[DataFrame], in_parts: list[int | None] | None = None
+    ) -> list[tuple]:
         """Run independent ``_write_segment`` jobs concurrently (guide
         §2.6: each writes its own immutable uuid-named segment dir, so
         the jobs commute; the manifest merges the results afterwards).
@@ -418,9 +442,13 @@ class VectorStore:
         siblings' already-written segment dirs are best-effort deleted
         before re-raising — no unreferenced segment is left behind for a
         later vacuum to trip over (ADVICE r18; the old sequential order
-        never wrote the second segment after a failed first)."""
+        never wrote the second segment after a failed first).
+        ``in_parts`` gives each write's ``_write_segment`` ``in_parts``."""
         with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-            futs = [pool.submit(self._write_segment, df) for df in dfs]
+            parts = in_parts or [None] * len(dfs)
+            futs = [
+                pool.submit(self._write_segment, df, p) for df, p in zip(dfs, parts)
+            ]
             results: list[tuple | None] = []
             first_err: BaseException | None = None
             for f in futs:
@@ -1117,11 +1145,12 @@ class VectorStore:
             counts = [sum(r[f"n{k}"] for r in per_bucket) for k in range(len(ops))]
             touched = [r["ubucket"] for r in per_bucket]
             if touched:
-                dj = _flagged(
-                    self._read_files([f for b in touched for f in manifest.get(b, [])])
+                scan = self._read_files(
+                    [f for b in touched for f in manifest.get(b, [])]
                 )
                 survivors = (
-                    dj.filter(alive)
+                    _flagged(scan)
+                    .filter(alive)
                     .withColumn("metadata", meta)
                     .withColumn("embedding", emb)
                     .select(
@@ -1129,7 +1158,9 @@ class VectorStore:
                         "ubucket",
                     )
                 )
-                rewritten, stats, _ = self._write_segment(survivors)
+                rewritten, stats, _ = self._write_segment(
+                    survivors, _num_input_partitions(scan)
+                )
                 for b in touched:
                     manifest[b] = rewritten.get(b, [])
                 self._publish_manifest(manifest, stats)
@@ -1195,14 +1226,15 @@ class VectorStore:
         ]
         new_stats: dict[str, list[float]] = {}
         if touched:
-            survivors = self._read_files(
-                [f for b in touched for f in manifest.get(b, [])]
-            ).join(F.broadcast(ids), "point_id", "left_anti")
+            scan = self._read_files([f for b in touched for f in manifest.get(b, [])])
+            survivors = scan.join(F.broadcast(ids), "point_id", "left_anti")
             # the survivor rewrite and the append are independent jobs
             # into separate segment dirs — overlap them (guide §2.6); the
             # manifest merges both results afterwards
             (rewritten, r_stats, _), (appended, a_stats, n) = (
-                self._write_segments_overlapped([survivors, appended_rows])
+                self._write_segments_overlapped(
+                    [survivors, appended_rows], [_num_input_partitions(scan), None]
+                )
             )
             new_stats.update(r_stats)
             for b in touched:

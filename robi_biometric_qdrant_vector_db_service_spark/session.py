@@ -101,10 +101,12 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> D
 
     A Python list must not reach ``createDataFrame``: PySpark makes it a
     ``LogicalRDD`` over a Python RDD cut into ``defaultParallelism``
-    slices, so every scan of the frame, even of a one-row search probe,
-    runs tasks that round-trip through Python workers (on 4 cores, 4
-    tasks and ~850 ms of executor time; the median search took 726 ms
-    with it and 437 ms without).  The same rows as a ``pyarrow.Table``
+    slices, so every scan of the frame, even of a one-row probe, runs
+    tasks that round-trip through Python workers (on 4 cores, 4 tasks
+    and ~850 ms of executor time; the median service search took 726 ms
+    with it and 437 ms without).  The service's search probe no longer
+    goes through here: one vector is a folded literal
+    (``functions.vector.probe_literal``), which needs no broadcast job.  The same rows as a ``pyarrow.Table``
     become a JVM ``LocalRelation``: its scan needs no Python worker, and
     the planner sees its exact size.  Above
     ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps the

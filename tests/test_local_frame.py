@@ -2,9 +2,9 @@
 
 - For every column type the package feeds it, ``local_frame`` collects
   exactly what ``createDataFrame(<list>)`` collects.
-- Its frames, and the probe of ``VectorService.search``, plan as a
-  ``LocalRelation`` and never as a ``LogicalRDD`` (a Python RDD whose every
-  scan runs Python workers).
+- Its frames plan as a ``LocalRelation`` and never as a ``LogicalRDD`` (a
+  Python RDD whose every scan runs Python workers).  The probe of
+  ``VectorService.search`` is no frame at all: it plans as a literal.
 - Nothing else in the package calls ``createDataFrame`` or
   ``sparkContext.parallelize``.
 - A DDL string is parsed once per process, and the shared parse is not
@@ -124,7 +124,7 @@ def test_local_frame_parses_each_ddl_once(spark, monkeypatch):
     assert _ddl_schemas(ddl)[0].json() == before == real(ddl).json()
 
 
-def test_search_probe_plans_as_local_relation(spark, tmp_path, monkeypatch):
+def test_search_probe_plans_as_a_literal(spark, tmp_path, monkeypatch):
     from robi_biometric_qdrant_vector_db_service_spark.api.service import (
         VectorService,
     )
@@ -142,7 +142,7 @@ def test_search_probe_plans_as_local_relation(spark, tmp_path, monkeypatch):
 
     def spy(corpus, queries, k, **kwargs):
         hits = real(corpus, queries, k, **kwargs)
-        seen.append((_plan(queries), _plan(hits)))
+        seen.append((queries, _plan(hits)))
         return hits
 
     monkeypatch.setattr(st, "search_corpus", spy)
@@ -152,9 +152,12 @@ def test_search_probe_plans_as_local_relation(spark, tmp_path, monkeypatch):
     ):
         assert svc.search(body)["total_results"] == 2
     assert len(seen) == 2
-    for probe_plan, hits_plan in seen:
-        assert "LocalRelation" in probe_plan, probe_plan
-        assert "LogicalRDD" not in probe_plan + hits_plan, hits_plan
+    for queries, hits_plan in seen:
+        assert queries == [1.0, 0.0, 0.0], queries  # the vector, not a frame
+        assert "LocalRelation" not in hits_plan, hits_plan
+        assert "LogicalRDD" not in hits_plan, hits_plan
+        assert "from_json" not in hits_plan, hits_plan  # folded to a literal
+        assert "[1.0,0.0,0.0]" in hits_plan, hits_plan
 
 
 def test_only_local_frame_creates_frames_from_driver_rows():

@@ -1,18 +1,20 @@
-"""``VectorService.search`` reads each hit's payload from the one ranked
-scan (``search_corpus(..., keep=...)``) instead of joining the hits back
-onto a second scan of the corpus and sorting them on the cluster.
+"""``VectorService.search`` sends its one embedding to ``search_corpus``
+as a vector: a folded literal probe, ranked by ``TakeOrderedAndProject``,
+with each hit's payload read by the one ranked scan.
 
-- Job counts: an exact search (plain, user filter, threshold) starts at
-  most 3 Spark jobs (the probe broadcast, the scan+score map stage, the
-  rank stage); an int8 or binary search at most 5 (stage 1 adds its own
-  map and rank stages).
+- Job counts: an exact search (plain, user filter, threshold) starts one
+  Spark job (scan, score, threshold, take); an int8 or binary search two
+  (stage 1's take builds stage 2's broadcast).
 - Plan shape: the exact plan reads the store's parquet files once, with
-  ``embedding`` and the payload in its one ReadSchema; a quantized plan
-  reads them twice, stage 1 without ``embedding``, stage 2 with it and
-  the payload.  No plan range-partitions or joins on ``point_id``.
+  ``embedding`` and the payload in its one ReadSchema, and has no
+  exchange of any kind; a quantized plan reads them twice, stage 1
+  without ``embedding``, stage 2 with it and the payload, joined by one
+  broadcast hash join on ``vec_id``.  No plan partitions on ``q_id``,
+  range-partitions, or joins on ``point_id``.
 - Differential: ``keep=`` returns the rows that joining the hits onto
-  the corpus payload by ``point_id`` returns, on data with a score tie,
-  an empty result and an empty metadata map.
+  the corpus payload by ``point_id`` returns, and the single-vector form
+  returns the frame form's rows, on data with a score tie, an empty
+  result and an empty metadata map.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ KINDS = {
     "int8": {"quantization": "int8"},
     "binary": {"quantization": "binary"},
 }
-MAX_JOBS = {"plain": 3, "user_filter": 3, "threshold": 3, "int8": 5, "binary": 5}
+MAX_JOBS = {"plain": 1, "user_filter": 1, "threshold": 1, "int8": 2, "binary": 2}
 VECS = np.random.default_rng(7).normal(size=(N, DIM))
 VECS[1] = VECS[0]
 
@@ -76,8 +78,8 @@ def test_search_job_count(spark, svc, kind):
 
 def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
     """The plan the service collects is the hits plan ``search_corpus``
-    built: no second corpus scan, no join back on ``point_id``, no
-    range-partitioned sort."""
+    built from the request's vector: no second corpus scan, no join back
+    on ``point_id``, no range-partitioned sort, no per-query shuffle."""
     built, collected = [], []
     frame_cls = type(svc.store.read())  # the session's concrete DataFrame
     real_search, real_collect = st.search_corpus, frame_cls.collect
@@ -99,6 +101,8 @@ def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
     for (quant, hits, plan), done in zip(built, collected):
         assert done is hits, quant  # the service collects the hits as built
         assert "rangepartitioning" not in plan, plan
+        assert "hashpartitioning(q_id" not in plan, plan
+        takes = re.findall(r"^\(\d+\) TakeOrderedAndProject", plan, re.M)
         assert not re.search(r"keys \[\d+\]: \[point_id", plan), plan
         equi_joins = re.findall(
             r"^\(\d+\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", plan, re.M
@@ -111,6 +115,9 @@ def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
         if quant is None:
             assert len(schemas) == 1, schemas
             assert equi_joins == [], plan
+            # scan → score → threshold → take: no shuffle, no broadcast
+            assert "Exchange" not in plan, plan
+            assert len(takes) == 1, plan
         else:
             # stage 1 scans only (point_id, companion); stage 2's broadcast
             # survivor join, keyed on vec_id, is the plan's one equi-join
@@ -191,3 +198,89 @@ def test_service_results_keep_score_then_id_order(svc):
         assert keys == sorted(keys), (kind, keys)
         if kind != "user_filter":
             assert [r["id"] for r in results[:2]] == ["p00", "p01"], kind
+
+
+def test_single_vector_matches_the_frame_form(spark, svc):
+    """``search_corpus(corpus, vector)`` returns, in rank order, the rows
+    the frame form ranks for that vector as its one query, with equal
+    scores and payload; ``knn_search`` pages by ``offset`` alike."""
+    from robi_biometric_qdrant_vector_db_service_spark.functions.vector import (
+        probe_literal,
+    )
+    from robi_biometric_qdrant_vector_db_service_spark.operators.search import (
+        knn_search,
+    )
+
+    far = (-VECS[5]).tolist()
+    best = max(
+        r["score"] for r in st.search_corpus(svc.store.read(), far, 1).collect()
+    )
+    cases = {
+        **KINDS,
+        "int8_threshold": {"quantization": "int8", "threshold": 0.2},
+        "binary_threshold": {"quantization": "binary", "threshold": 0.2},
+        "no_such_user": {"user_filter": "nobody"},
+        "int8_no_such_user": {"user_filter": "nobody", "quantization": "int8"},
+    }
+    runs = [(name, v, case) for name, case in cases.items() for v in (0, 2)]
+    runs += [
+        (name, "far", {**case, "threshold": best + 1e-3})
+        for name, case in (("exact_above_all", {}), ("int8_above_all", KINDS["int8"]))
+    ]
+    for name, which, case in runs:
+        vec = far if which == "far" else VECS[which].tolist()
+        quant = case.get("quantization")
+        corpus = svc.store.read(
+            user_id=case.get("user_filter"), with_index=quant is not None
+        )
+
+        def search(queries):
+            return st.search_corpus(
+                corpus,
+                queries,
+                K,
+                score_threshold=case.get("threshold"),
+                quantization=quant,
+                keep=PAYLOAD,
+            )
+
+        single = search(vec)
+        assert single.columns == ["point_id", "score", *PAYLOAD], single.columns
+        got = [
+            (rank, *_payload_row(r)) for rank, r in enumerate(single.collect(), 1)
+        ]
+        probe = local_frame(spark, [(0, vec)], "q_id bigint, q_emb array<double>")
+        want = sorted((r["rank"], *_payload_row(r)) for r in search(probe).collect())
+        assert got == want, (name, which)
+        if case.get("user_filter") == "nobody" or which == "far":
+            assert got == [], (name, got)
+            continue
+        assert got, (name, which)
+        if which == 0 and "user_filter" not in case:
+            assert [r[1] for r in got[:2]] == ["p00", "p01"], name  # the tie
+        if which == 2 and "user_filter" not in case:
+            assert got[0][1] == "p02" and got[0][4] == [], name  # empty map
+
+    corpus = svc.store.read()
+    vec = VECS[0].tolist()
+    paged = knn_search(corpus, probe_literal(vec), 3, offset=2, corpus_id="point_id")
+    frame = knn_search(
+        corpus,
+        local_frame(spark, [(0, vec)], "q_id bigint, q_emb array<double>"),
+        3,
+        offset=2,
+        corpus_id="point_id",
+    )
+    assert [(r["point_id"], r["score"]) for r in paged.collect()] == [
+        (r["point_id"], r["score"]) for r in sorted(frame.collect(), key=lambda r: r["rank"])
+    ]
+
+
+def _payload_row(r) -> tuple:
+    return (
+        r["point_id"],
+        r["score"],
+        r["user_id"],
+        sorted((r["metadata"] or {}).items()),
+        r["ts"],
+    )

@@ -7,7 +7,9 @@ four payload calls, ``update_vectors``) is a one-op
 
 - each single mutation starts no more Spark jobs than the former per-method
   implementations did on the same small store (the bounds below were
-  measured on those implementations, 4 and 8 local cores alike);
+  measured on those implementations, 4 and 8 local cores alike), and
+  ``update_vectors`` one fewer: its segment write takes the partition count
+  of its scan, so probing it no longer runs the flag frame's broadcast;
 - only the commit sites named below publish a manifest version;
 - a solo IN-list or predicate op still reaches the parquet scan as a pushed
   filter;
@@ -81,7 +83,7 @@ def test_single_mutations_start_no_more_jobs_than_before(spark, tmp_path):
                 )
             ),
             2,
-            10,
+            9,
         ),
     ]
     for name, call, want, bound in calls:
