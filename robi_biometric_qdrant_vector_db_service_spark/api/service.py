@@ -42,14 +42,23 @@ import threading
 import time
 import urllib.parse
 import uuid
-from collections import deque
+from collections import Counter, deque
+from collections.abc import Iterator
+from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import local_frame
 
 PREFIX = "/api/v1"
+# A version's rows are persisted once it or the version before it has
+# served more than this many searches: filling the cache costs the search
+# that fills it about as much as one and a half warm searches save
+# (serve_search store shape, 4 cores), so with fewer searches per version
+# reading the files is cheaper.
+SNAPSHOT_AFTER_SEARCHES = 2
 
 
 class VectorService:
@@ -75,6 +84,23 @@ class VectorService:
         self._op_recent: dict[str, deque] = {}
         self._started = time.time()
         self._errors: dict[str, int] = {}  # error_type -> count (main.py /metrics)
+        # the warm snapshot searches share (``_snapshot``): the newest
+        # version's persisted read, plus replaced ones that searches still
+        # hold, by version, with a hold count each; swapped on a lock of its
+        # own, so that no search waits on a commit holding _write_lock.
+        # The searches of the newest version searched and of the one before
+        # it decide whether that version is persisted.  builds/reuses/uncached
+        # feed /stats and /metrics
+        self._snap_lock = threading.Lock()
+        self._snap_version: int | None = None
+        self._frames: dict[int, DataFrame] = {}
+        self._holds: Counter[int] = Counter()
+        self._seen_version: int | None = None
+        self._seen_searches = 0
+        self._prev_searches = 0
+        self._snap_builds = 0
+        self._snap_reuses = 0
+        self._snap_uncached = 0
 
     # -- engine calls -------------------------------------------------------
 
@@ -154,37 +180,116 @@ class VectorService:
             "timestamp": time.time(),
         }
 
+    @contextmanager
+    def _snapshot(self, user: str | None, quantized: bool) -> Iterator[DataFrame]:
+        """The corpus of the one manifest version this request reads
+        (only ``user``'s points if given), held while the request plans and
+        runs on it.  Under ``_snap_lock`` the ``_LATEST`` pointer is read
+        once (commits only move it forward, so it is never older than the
+        live snapshot).  A snapshot of that version is reused; otherwise
+        one is built as ``read(version=v, with_index=True).persist()``,
+        filled lazily by the search's own jobs, once the version or the one
+        before it has served more than ``SNAPSHOT_AFTER_SEARCHES``
+        searches; until then the search reads the version's files (only
+        ``user``'s bucket, with a user), so with a write before every
+        search or every other search nothing is persisted.  A replaced
+        snapshot is unpersisted when no search holds it any more: a search
+        that plans over a cached frame and runs after its unpersist would
+        fill the cache again, and nothing would release those blocks."""
+        with self._snap_lock:
+            v = self.store._current_version()
+            if v != self._seen_version:
+                self._prev_searches, self._seen_searches = self._seen_searches, 0
+                self._seen_version = v
+            self._seen_searches += 1
+            searched = max(self._seen_searches, self._prev_searches)
+            frame = self._frames.get(v)
+            if frame is not None:
+                self._snap_reuses += 1
+            elif searched > SNAPSHOT_AFTER_SEARCHES:
+                frame = self._frames[v] = self.store.read(
+                    version=v, with_index=True
+                ).persist()
+                self._snap_builds += 1
+            else:
+                self._snap_uncached += 1
+            self._snap_version = None if frame is None else v
+            if frame is not None:
+                self._holds[v] += 1
+            self._release_unheld()
+        if frame is None:
+            yield self.store.read(version=v, user_id=user, with_index=quantized)
+            return
+        try:
+            yield frame if user is None else frame.filter(F.col("user_id") == user)
+        finally:
+            with self._snap_lock:
+                self._holds[v] -= 1
+                self._release_unheld()
+
+    def _release_unheld(self) -> None:
+        """Unpersist every replaced snapshot no search holds.  Runs under
+        ``_snap_lock``, so no search can plan over a frame as it goes."""
+        for v in list(self._frames):
+            if v == self._snap_version or self._holds[v]:
+                continue
+            self._holds.pop(v, None)
+            self._frames.pop(v).unpersist(blocking=False)
+
+    def snapshot_info(self) -> dict:
+        """The warm snapshot's manifest version (None while the newest
+        version searched is not persisted, and after ``close``) and how
+        many searches built a snapshot, reused one, or read the files."""
+        with self._snap_lock:
+            return {
+                "version": self._snap_version,
+                "builds": self._snap_builds,
+                "reuses": self._snap_reuses,
+                "uncached": self._snap_uncached,
+            }
+
+    def close(self) -> None:
+        """Release the warm snapshot (a search still holding it releases
+        it when it ends).  A later search builds a new one, and a search
+        of the same version meanwhile makes the held one live again."""
+        with self._snap_lock:
+            self._snap_version = None
+            self._release_unheld()
+
     def search(self, body: dict) -> dict:
         t0 = time.perf_counter()
         k = int(body.get("k", 10))
-        # One scan of ONE manifest version per request (ADVICE r5): ``read``
-        # resolves the version once, and the hits carry their payload
-        # (user_id, metadata, ts) through the ranking, as the reference's
-        # results do, so search and payload cannot disagree by
-        # construction — a concurrent add/delete on another HTTP thread
-        # commits a newer version this plan never reads.  A "quantization"
-        # of "int8" or "binary" serves the reference's configured quantized
-        # search (qdrant_client.py:129-138) over the same snapshot's at-rest
+        # One scan of ONE manifest version per request (ADVICE r5):
+        # ``_snapshot`` resolves the version once, and the hits carry
+        # their payload (user_id, metadata, ts) through the ranking, as
+        # the reference's results do, so search and payload cannot
+        # disagree by construction — a concurrent add/delete on another
+        # HTTP thread commits a newer version this plan never reads.  The
+        # version's rows stay persisted between requests (the reference's
+        # collection keeps its INT8 index ``always_ram``, settings.py:48-51)
+        # once it or the version before it has served a few searches
+        # (``_snapshot``), so a warm search lists, plans and decodes no
+        # parquet; a user filter is then a predicate on the snapshot, and
+        # otherwise the user's bucket read from the files.  A "quantization" of
+        # "int8" or "binary" serves the reference's configured quantized
+        # search (qdrant_client.py:129-138) over the same snapshot's
         # companion columns.  The one embedding goes to ``search_corpus``
         # as a vector, not a frame: it plans as a folded literal ranked by
         # TakeOrderedAndProject, one Spark job (two for quantized search).
         from ..operators.store import search_corpus
 
         quant = body.get("quantization")
-        corpus = self.store.read(
-            user_id=body.get("user_filter"),
-            with_index=quant is not None,
-        )
-        hits = search_corpus(
-            corpus,
-            body["embedding"],
-            k,
-            score_threshold=body.get("threshold"),
-            quantization=quant,
-            oversample=int(body.get("oversample", 3)),
-            keep=("user_id", "metadata", "ts"),
-        )
-        rows = hits.collect()  # at most k rows, in rank order
+        with self._snapshot(body.get("user_filter"), quant is not None) as corpus:
+            hits = search_corpus(
+                corpus,
+                body["embedding"],
+                k,
+                score_threshold=body.get("threshold"),
+                quantization=quant,
+                oversample=int(body.get("oversample", 3)),
+                keep=("user_id", "metadata", "ts"),
+            )
+            rows = hits.collect()  # at most k rows, in rank order
         ms = self._record("search", t0)
         return {
             "success": True,
@@ -265,6 +370,7 @@ class VectorService:
             "collection_info": self.store.stats(),
             "performance_stats": self._perf_stats(),
             "gpu_info": {"gpu_available": False, "engine": "spark"},
+            "snapshot": self.snapshot_info(),
             "timestamp": time.time(),
         }
 
@@ -356,6 +462,24 @@ class VectorService:
                     )
             lines.append(f'qdrant_op_duration_seconds_sum{{operation="{op}"}} {tot / 1000.0:.6f}')
             lines.append(f'qdrant_op_duration_seconds_count{{operation="{op}"}} {c}')
+        snap = self.snapshot_info()
+        fam(
+            "service_snapshot_version",
+            "gauge",
+            "Manifest version of the warm search snapshot (-1 when none is persisted)",
+        )
+        v = snap["version"]
+        lines.append(f"service_snapshot_version {-1 if v is None else v}")
+        fam("service_snapshot_builds_total", "counter", "Searches that built the warm snapshot")
+        lines.append(f"service_snapshot_builds_total {snap['builds']}")
+        fam("service_snapshot_reuses_total", "counter", "Searches served by the warm snapshot")
+        lines.append(f"service_snapshot_reuses_total {snap['reuses']}")
+        fam(
+            "service_snapshot_uncached_total",
+            "counter",
+            "Searches that read the store's files instead of a snapshot",
+        )
+        lines.append(f"service_snapshot_uncached_total {snap['uncached']}")
         fam("service_uptime_seconds", "gauge", "Seconds since service start")
         lines.append(f"service_uptime_seconds {time.time() - self._started:.3f}")
         return "\n".join(lines) + "\n"

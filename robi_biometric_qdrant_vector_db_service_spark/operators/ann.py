@@ -31,10 +31,14 @@ per-query candidate set is corpus/|buckets|, not the corpus.
 
 from __future__ import annotations
 
+import json
+import math
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_sql, dot_sql, norm_sql
+from ..functions.vector import cosine_sql, dot_sql, norm_sql, probe_literal
 from ..session import local_frame
 from .search import top_k, with_probe
 
@@ -224,6 +228,27 @@ INT8_QUANT_EXPR = (
 )
 
 
+def int8_codes(vec: Sequence[float]) -> list[int]:
+    """``INT8_QUANT_EXPR`` evaluated on the driver for one probe vector:
+    ``x * 127`` rounded half away from zero (Spark's ``round`` of a
+    DOUBLE is HALF_UP), clamped to ±127.  Spark orders NaN above every
+    number, so ``least(NaN, 127)`` is 127 and a NaN element codes as 127;
+    ±inf clamp like any large value.  Clamping first is exact because
+    the bounds are integers, and ``a - floor(a)`` is exact for
+    ``|a| <= 127``.  Pinned against Spark in tests/test_probe_codes.py."""
+    out = []
+    for x in vec:
+        v = float(x) * 127
+        if math.isnan(v):
+            out.append(127)
+            continue
+        a = min(abs(v), 127.0)
+        r = math.floor(a)
+        r += a - r >= 0.5
+        out.append(-r if v < 0 else r)
+    return out
+
+
 def _rescore_survivors(
     corpus: DataFrame,
     survivors: DataFrame,
@@ -313,7 +338,7 @@ def _survivors_rescored(
 
 def int8_rescore_topk(
     corpus: DataFrame,
-    probes: DataFrame | Column,
+    probes: DataFrame | Sequence[float],
     k: int = 10,
     oversample: int = 3,
     keep: tuple = (),
@@ -330,8 +355,10 @@ def int8_rescore_topk(
     otherwise quantizes ``embedding`` in the scan projection.  ``keep``
     and ``score_threshold`` go to stage 2 only (``_rescore_survivors``).
 
-    ``probes`` is a (q_id, q_emb) frame, or one probe as a
-    ``functions.vector.probe_literal`` Column: stage 1 then takes its
+    ``probes`` is a (q_id, q_emb) frame, or one driver-held vector: it
+    becomes a ``functions.vector.probe_literal`` Column, its INT8 codes
+    fold to one literal computed by ``int8_codes`` (so stage 1 does not
+    quantize the probe once per corpus row), stage 1 takes its
     ``oversample × k`` in one take-ordered plan under stage 2's broadcast,
     and the result is (vec_id, score, *keep) in rank order.
 
@@ -339,10 +366,13 @@ def int8_rescore_topk(
     score.
     """
     int_dot = "aggregate(zip_with(e8, p8, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
+    probes, p8 = _probe_and_code(
+        probes, INT8_QUANT_EXPR.format(col="q_emb"), int8_codes, "int"
+    )
     scored = with_probe(
         _companion(corpus, "e8", INT8_QUANT_EXPR.format(col="embedding")),
         probes,
-        derived={"p8": INT8_QUANT_EXPR.format(col="q_emb")},
+        derived={"p8": p8},
     ).withColumn("iscore", F.expr(int_dot))
     return _survivors_rescored(
         corpus, probes, scored, [F.desc("iscore"), F.col("vec_id")],
@@ -441,9 +471,47 @@ def bq_words_dynamic_expr(col: str) -> str:
     )
 
 
+def bq_words(vec: Sequence[float]) -> list[int]:
+    """``bq_words_dynamic_expr`` evaluated on the driver for one probe
+    vector: bit ``i`` of word ``w`` is set when element ``w*32 + i`` is
+    ``> 0.0`` under Spark's ordering, where NaN is above every number
+    (so a NaN sets its bit and -0.0 does not).  The word count is
+    ``(size - 1) div 32 + 1`` with truncating ``div``, so an empty
+    vector packs to one zero word, as in Spark.  Pinned against Spark in
+    tests/test_probe_codes.py."""
+    values = [float(x) for x in vec]
+    words = []
+    for w in range(max(1, -(-len(values) // BQ_WORD_BITS))):
+        word = 0
+        for i, x in enumerate(values[w * BQ_WORD_BITS : (w + 1) * BQ_WORD_BITS]):
+            if x > 0.0 or math.isnan(x):
+                word |= 1 << i
+        words.append(word)
+    return words
+
+
+def _probe_and_code(
+    probes: DataFrame | Sequence[float],
+    derive: str,
+    twin: Callable[[Sequence[float]], list[int]],
+    elem: str,
+) -> tuple[DataFrame | Column, str | Column]:
+    """Stage 1's probe and its quantized code.  A query frame keeps its
+    plan: the code is ``derive`` (SQL over ``q_emb``) per query.  One
+    driver-held vector becomes a ``probe_literal`` Column, and its code
+    is computed on the driver by ``twin`` and folded to one
+    ``array<elem>`` literal, so no corpus row re-derives it."""
+    if isinstance(probes, DataFrame):
+        return probes, derive
+    vec = [float(x) for x in probes]
+    probe = probe_literal(vec)  # rejects what has no exact spelling
+    code = F.from_json(F.lit(json.dumps(twin(vec))), f"array<{elem}>")
+    return probe, code
+
+
 def bq_hamming_topk(
     corpus: DataFrame,
-    probes: DataFrame | Column,
+    probes: DataFrame | Sequence[float],
     k: int = 10,
     *,
     oversample: int = 4,
@@ -470,7 +538,9 @@ def bq_hamming_topk(
     name — the VectorStore serving path, where the collection dimension
     is data, not a compile-time literal.  ``keep`` and
     ``score_threshold`` go to stage 2 only (``_rescore_survivors``), and
-    ``probes`` may be one probe Column, as in ``int8_rescore_topk``.
+    ``probes`` may be one driver-held vector, as in ``int8_rescore_topk``,
+    whose sign-bit words fold to one literal (``bq_words``; the
+    dim-agnostic pack, so only with ``dims=None``).
 
     Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
     score.
@@ -486,10 +556,13 @@ def bq_hamming_topk(
         f"aggregate(zip_with({companion}, q_code, (a, b) -> bit_count(a ^ b)), "
         "0, (acc, v) -> acc + v)"
     )
+    if dims is not None and not isinstance(probes, DataFrame):
+        raise ValueError("a single probe vector takes dims=None")
+    probes, q_code = _probe_and_code(probes, pack("q_emb"), bq_words, "bigint")
     scored = with_probe(
         _companion(corpus, companion, pack("embedding")),
         probes,
-        derived={"q_code": pack("q_emb")},
+        derived={"q_code": q_code},
     ).withColumn("hamming", F.expr(hamming))
     return _survivors_rescored(
         corpus, probes, scored, [F.asc("hamming"), F.col("vec_id")],

@@ -111,11 +111,15 @@ def with_probe(
     derived: dict | None = None,
 ) -> DataFrame:
     """Every corpus row paired with every query, plus the probe-side
-    columns ``derived`` (name → SQL over ``query_vec``): a query frame
+    columns ``derived`` (name → SQL over ``query_vec``, or a Column such
+    as a literal computed on the driver): a query frame
     gets them and is broadcast and cross-joined; a single probe
     ``Column`` becomes the column ``query_vec``, which the optimizer
     inlines as a literal, and ``derived`` is evaluated on each row."""
-    derived = {c: F.expr(e) for c, e in (derived or {}).items()}
+    derived = {
+        c: e if isinstance(e, Column) else F.expr(e)
+        for c, e in (derived or {}).items()
+    }
     if isinstance(queries, Column):
         out = corpus.withColumn(query_vec, queries)
         return out.withColumns(derived) if derived else out

@@ -191,8 +191,10 @@ def search_corpus(
 
     ``queries`` may instead be ONE driver-held vector (a sequence of
     floats, the HTTP request's embedding).  It becomes a folded
-    ``array<double>`` literal (``functions.vector.probe_literal``) and
-    the ranking becomes ``TakeOrderedAndProject`` (``search.top_k``):
+    ``array<double>`` literal (``functions.vector.probe_literal``; a
+    quantized search also folds the probe's INT8 codes or sign-bit words,
+    computed on the driver) and the ranking becomes
+    ``TakeOrderedAndProject`` (``search.top_k``):
     an exact search is one Spark job (scan, score, threshold, take), a
     quantized one two (stage 1's take builds stage 2's broadcast).  The
     result is (point_id, score, *keep), collected in rank order; the
@@ -217,12 +219,10 @@ def search_corpus(
     from . import ann
     from .search import knn_search
 
-    if not isinstance(queries, DataFrame):
-        queries = probe_literal(queries)
     if quantization is None:
         return knn_search(
             corpus,
-            queries,
+            queries if isinstance(queries, DataFrame) else probe_literal(queries),
             k,
             score_threshold=score_threshold,
             corpus_id="point_id",
@@ -349,8 +349,11 @@ class VectorStore:
         }
         with open(self._manifest_path(new_v), "w") as f:
             json.dump(payload, f)
-        with open(self._pointer(), "w") as f:
+        # flip the pointer with temp + replace: a reader never sees it empty
+        tmp = self._pointer() + f".tmp_{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
             f.write(str(new_v))
+        os.replace(tmp, self._pointer())
         self._memoize(new_v, payload)
         return new_v
 

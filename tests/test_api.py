@@ -32,6 +32,7 @@ def served(spark, tmp_path_factory):
     srv, port = svc.start_background()
     yield svc, port
     srv.shutdown()
+    svc.close()
 
 
 def test_http_add_search_delete_roundtrip(served):
@@ -327,3 +328,4 @@ def test_http_quantized_search(spark, tmp_path_factory):
         assert e.value.code == 422
     finally:
         srv.shutdown()
+        svc.close()

@@ -146,11 +146,14 @@ def test_search_probe_plans_as_a_literal(spark, tmp_path, monkeypatch):
         return hits
 
     monkeypatch.setattr(st, "search_corpus", spy)
-    for body in (
-        {"embedding": [1.0, 0.0, 0.0], "k": 2},
-        {"embedding": [1.0, 0.0, 0.0], "k": 2, "quantization": "int8"},
-    ):
-        assert svc.search(body)["total_results"] == 2
+    try:
+        for body in (
+            {"embedding": [1.0, 0.0, 0.0], "k": 2},
+            {"embedding": [1.0, 0.0, 0.0], "k": 2, "quantization": "int8"},
+        ):
+            assert svc.search(body)["total_results"] == 2
+    finally:
+        svc.close()
     assert len(seen) == 2
     for queries, hits_plan in seen:
         assert queries == [1.0, 0.0, 0.0], queries  # the vector, not a frame

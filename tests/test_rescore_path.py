@@ -79,7 +79,10 @@ def test_rescore_plan_building_starts_no_spark_job(spark, tmp_path, monkeypatch)
 
     monkeypatch.setattr(st, "search_corpus", spy)
     probe = [float(x) for x in emb.first()["embedding"]]
-    for mode in ("int8", "binary"):
-        resp = svc.search({"embedding": probe, "k": 3, "quantization": mode})
-        assert resp["total_results"] == 3, mode
+    try:
+        for mode in ("int8", "binary"):
+            resp = svc.search({"embedding": probe, "k": 3, "quantization": mode})
+            assert resp["total_results"] == 3, mode
+    finally:
+        svc.close()
     assert built == [("int8", []), ("binary", [])], built

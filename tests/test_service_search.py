@@ -1,16 +1,24 @@
 """``VectorService.search`` sends its one embedding to ``search_corpus``
 as a vector: a folded literal probe, ranked by ``TakeOrderedAndProject``,
-with each hit's payload read by the one ranked scan.
+with each hit's payload read by the one ranked scan of the service's warm
+snapshot (the current version's rows, persisted in memory).
 
-- Job counts: an exact search (plain, user filter, threshold) starts one
-  Spark job (scan, score, threshold, take); an int8 or binary search two
-  (stage 1's take builds stage 2's broadcast).
-- Plan shape: the exact plan reads the store's parquet files once, with
-  ``embedding`` and the payload in its one ReadSchema, and has no
-  exchange of any kind; a quantized plan reads them twice, stage 1
-  without ``embedding``, stage 2 with it and the payload, joined by one
-  broadcast hash join on ``vec_id``.  No plan partitions on ``q_id``,
-  range-partitions, or joins on ``point_id``.
+- Job counts: a warm exact search (plain, user filter, threshold) starts
+  one Spark job (scan, score, threshold, take); a warm int8 or binary
+  search two (stage 1's take builds stage 2's broadcast).  The search
+  that builds a version's snapshot (the first after a write, once the
+  version before served more than ``SNAPSHOT_AFTER_SEARCHES``) fills it
+  inside its own jobs: still one for an exact search, four for a
+  quantized one (adaptive execution materializes each of its two cached
+  scans as a job of its own).  A search that reads the files instead runs
+  the warm job counts.
+- Plan shape: the exact plan scans the cached relation once, with
+  ``embedding`` and the payload in its one output, and has no exchange of
+  any kind; a quantized plan scans it twice, stage 1 reading only
+  (point_id, companion) and no ``embedding``, stage 2 ``embedding`` and
+  the payload, joined by one broadcast hash join on ``vec_id``; the
+  probe's codes are a literal, not derived per row.  No plan partitions
+  on ``q_id``, range-partitions, or joins on ``point_id``.
 - Differential: ``keep=`` returns the rows that joining the hits onto
   the corpus payload by ``point_id`` returns, and the single-vector form
   returns the frame form's rows, on data with a score tie, an empty
@@ -24,7 +32,10 @@ import re
 import numpy as np
 import pytest
 
-from robi_biometric_qdrant_vector_db_service_spark.api.service import VectorService
+from robi_biometric_qdrant_vector_db_service_spark.api.service import (
+    SNAPSHOT_AFTER_SEARCHES,
+    VectorService,
+)
 from robi_biometric_qdrant_vector_db_service_spark.operators import store as st
 from robi_biometric_qdrant_vector_db_service_spark.session import local_frame
 from tests.conftest import jobs_during
@@ -40,6 +51,8 @@ KINDS = {
     "binary": {"quantization": "binary"},
 }
 MAX_JOBS = {"plain": 1, "user_filter": 1, "threshold": 1, "int8": 2, "binary": 2}
+# the first search after a write also fills the new snapshot
+MAX_JOBS_AFTER_WRITE = {**MAX_JOBS, "int8": 4, "binary": 4}
 VECS = np.random.default_rng(7).normal(size=(N, DIM))
 VECS[1] = VECS[0]
 
@@ -61,7 +74,8 @@ def svc(spark, tmp_path_factory):
             "metadata_list": [{} if n == 2 else {"n": str(n)} for n in range(N)],
         }
     )
-    return service
+    yield service
+    service.close()
 
 
 def _body(kind: str) -> dict:
@@ -70,15 +84,49 @@ def _body(kind: str) -> dict:
 
 @pytest.mark.parametrize("kind", sorted(KINDS))
 def test_search_job_count(spark, svc, kind):
-    svc.search(_body(kind))  # warm the store's manifest memo
+    for _ in range(SNAPSHOT_AFTER_SEARCHES + 1):  # persists the version
+        svc.search(_body(kind))
     jobs, resp = jobs_during(spark, lambda: svc.search(_body(kind)))
     assert resp["total_results"] > 0, kind
     assert len(jobs) <= MAX_JOBS[kind], (kind, jobs)
 
 
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_first_search_after_a_write_job_count(spark, tmp_path, kind):
+    """A version's first ``SNAPSHOT_AFTER_SEARCHES`` searches read the
+    files and the next builds the snapshot; after a version searched more
+    often, the next version's first search builds it, and after one
+    searched less often, it reads the files, at a warm search's job
+    count."""
+    service = VectorService(spark, str(tmp_path / "store"))
+
+    def search(builds: int, max_jobs: int) -> None:
+        jobs, resp = jobs_during(spark, lambda: service.search(_body(kind)))
+        assert service.snapshot_info()["builds"] == builds, kind
+        assert resp["total_results"] > 0, kind
+        assert len(jobs) <= max_jobs, (kind, builds, jobs)
+
+    try:
+        service.add({"embedding": VECS[0].tolist(), "user_id": "u1"})
+        for _ in range(SNAPSHOT_AFTER_SEARCHES):
+            search(0, MAX_JOBS[kind])  # the files
+        search(1, MAX_JOBS_AFTER_WRITE[kind])
+        service.add({"embedding": VECS[1].tolist(), "user_id": "u1"})
+        search(2, MAX_JOBS_AFTER_WRITE[kind])  # replaces a warm snapshot
+        for _ in range(SNAPSHOT_AFTER_SEARCHES):
+            search(2, MAX_JOBS[kind])  # warm
+        service.add({"embedding": VECS[2].tolist(), "user_id": "u1"})
+        search(3, MAX_JOBS_AFTER_WRITE[kind])
+        service.add({"embedding": VECS[3].tolist(), "user_id": "u1"})
+        search(3, MAX_JOBS[kind])  # after a version searched once: the files
+    finally:
+        service.close()
+
+
 def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
     """The plan the service collects is the hits plan ``search_corpus``
-    built from the request's vector: no second corpus scan, no join back
+    built from the request's vector over the cached snapshot: no parquet
+    scan outside the cached relation, no second corpus scan, no join back
     on ``point_id``, no range-partitioned sort, no per-query shuffle."""
     built, collected = [], []
     frame_cls = type(svc.store.read())  # the session's concrete DataFrame
@@ -93,6 +141,8 @@ def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
         collected.append(self)
         return real_collect(self)
 
+    for _ in range(SNAPSHOT_AFTER_SEARCHES + 1):  # persists the version
+        svc.search(_body("plain"))
     monkeypatch.setattr(st, "search_corpus", spy)
     monkeypatch.setattr(frame_cls, "collect", collect)
     for kind in sorted(KINDS):
@@ -107,13 +157,24 @@ def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
         equi_joins = re.findall(
             r"^\(\d+\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", plan, re.M
         )
-        schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
-        assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == len(schemas)
-        with_vec = [s for s in schemas if "embedding" in s]
-        assert len(with_vec) == 1, (quant, schemas)
-        assert all(f"{c}:" in with_vec[0] for c in PAYLOAD), with_vec
+        # every stage scans the one cached relation, and the plan's one
+        # parquet scan is the one that fills it
+        relations = re.findall(r"^\(\d+\) InMemoryRelation\n([^\n]*)", plan, re.M)
+        assert len({re.sub(r"#\d+", "", r) for r in relations}) == 1, relations
+        assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+        (cached,) = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
+        assert "e8:" in cached and "bq_code:" in cached, cached
+        scans = [
+            sorted(re.sub(r"#\d+", "", c) for c in cols.split(", "))
+            for cols in re.findall(
+                r"^\(\d+\) InMemoryTableScan\nOutput \[\d+\]: \[([^\]]*)\]", plan, re.M
+            )
+        ]
+        with_vec = [c for c in scans if "embedding" in c]
+        assert len(with_vec) == 1, (quant, scans)
+        assert set(PAYLOAD) <= set(with_vec[0]), with_vec
         if quant is None:
-            assert len(schemas) == 1, schemas
+            assert len(scans) == 1, scans
             assert equi_joins == [], plan
             # scan → score → threshold → take: no shuffle, no broadcast
             assert "Exchange" not in plan, plan
@@ -121,14 +182,14 @@ def test_search_reads_the_corpus_once_per_stage(svc, monkeypatch):
         else:
             # stage 1 scans only (point_id, companion); stage 2's broadcast
             # survivor join, keyed on vec_id, is the plan's one equi-join
-            assert len(schemas) == 2, schemas
-            (stage1,) = [s for s in schemas if "embedding" not in s]
-            assert stage1 == {
-                "int8": "struct<point_id:string,e8:array<tinyint>>",
-                "binary": "struct<point_id:string,bq_code:array<bigint>>",
-            }[quant], stage1
+            assert len(scans) == 2, scans
+            (stage1,) = [c for c in scans if "embedding" not in c]
+            assert stage1 == sorted(["point_id", {"int8": "e8", "binary": "bq_code"}[quant]])
             assert equi_joins == ["BroadcastHashJoin"], plan
             assert re.search(r"Left keys \[1\]: \[vec_id#", plan), plan
+            # the probe's codes are one literal computed on the driver,
+            # not a quantization of the probe evaluated on every row
+            assert "transform(" not in plan, plan
 
 
 def _rows(df) -> list[tuple]:
