@@ -275,7 +275,9 @@ class VectorService:
         # search (qdrant_client.py:129-138) over the same snapshot's
         # companion columns.  The one embedding goes to ``search_corpus``
         # as a vector, not a frame: it plans as a folded literal ranked by
-        # TakeOrderedAndProject, one Spark job (two for quantized search).
+        # TakeOrderedAndProject, one Spark job for every kind of search
+        # (a quantized one rescores the rows its stage-1 take carries),
+        # also the one that fills a new snapshot.
         from ..operators.store import search_corpus
 
         quant = body.get("quantization")

@@ -21,6 +21,7 @@ compares both.  Same semantics, same results.
 from __future__ import annotations
 
 import json
+import math
 import struct
 from collections.abc import Sequence
 
@@ -49,9 +50,38 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def cosine_sql(a: str, b: str) -> str:
-    """Full cosine (normalizes both sides; safe for un-normalized input)."""
-    return f"({dot_sql(a, b)} / (greatest({norm_sql(a)}, 1e-12) * greatest({norm_sql(b)}, 1e-12)))"
+def cosine_sql(a: str, b: str, b_norm: str | None = None) -> str:
+    """Full cosine (normalizes both sides; safe for un-normalized input).
+
+    ``b_norm`` replaces ``norm_sql(b)`` with a SQL fragment of the same
+    value: ``probe_norm_sql`` of a single driver-held probe, so its norm
+    is one literal instead of a fold over the probe on every row (lambda
+    functions block constant folding)."""
+    nb = norm_sql(b) if b_norm is None else b_norm
+    return f"({dot_sql(a, b)} / (greatest({norm_sql(a)}, 1e-12) * greatest({nb}, 1e-12)))"
+
+
+def probe_norm_sql(vec: Sequence[float]) -> str:
+    """``norm_sql`` of one driver-held vector, evaluated on the driver and
+    spelled as a DOUBLE literal for ``cosine_sql(..., b_norm=...)``.
+
+    The twin is the same left fold of ``x * x`` in float64 from 0.0, then
+    a correctly rounded ``sqrt`` (Java's and C's both are), so the value
+    is bit-equal to Spark's.  ``repr`` is the shortest spelling that
+    parses back to the same double, and the ``D`` suffix makes Spark parse
+    it as a DOUBLE (not a DECIMAL); the norm is never negative, and NaN
+    and +inf are spelled as casts.  Pinned against Spark in
+    tests/test_probe_norm.py."""
+    acc = 0.0
+    for x in vec:
+        x = float(x)
+        acc += x * x
+    n = math.sqrt(acc)
+    if math.isnan(n):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(n):
+        return "CAST('Infinity' AS DOUBLE)"
+    return f"{n!r}D"
 
 
 def l2_normalize_sql(a: str) -> str:

@@ -38,7 +38,13 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_sql, dot_sql, norm_sql, probe_literal
+from ..functions.vector import (
+    cosine_sql,
+    dot_sql,
+    norm_sql,
+    probe_literal,
+    probe_norm_sql,
+)
 from ..session import local_frame
 from .search import top_k, with_probe
 
@@ -255,60 +261,67 @@ def _rescore_survivors(
     k: int,
     keep: tuple = (),
     *,
-    probe: Column | None = None,
     score_threshold: float | None = None,
 ) -> DataFrame:
-    """The one exact stage 2 of the two-stage rescore family (INT8,
-    matryoshka and BQ here, PQ-ADC and IVFPQ in operators.pq): each
-    operator owns only its stage 1, which yields ``survivors``
-    (q_id, q_emb, vec_id) — ``queries × oversample × k`` rows,
-    request-sized by construction.  They broadcast onto the float column
-    ``corpus.select("vec_id", "embedding", *keep)``, are rescored with
-    exact cosine, and are ranked by (score DESC, vec_id), the reference's
-    rescore=True step (qdrant_client.py:129-138).
+    """The one exact stage 2 of the two-stage rescore family for query
+    frames (INT8, matryoshka and BQ here, PQ-ADC and IVFPQ in
+    operators.pq): each operator owns only its stage 1, which yields
+    ``survivors`` (q_id, q_emb, vec_id) — ``queries × oversample × k``
+    rows, request-sized by construction.  They broadcast onto the float
+    column ``corpus.select("vec_id", "embedding", *keep)``, are rescored
+    with exact cosine, and are ranked by (score DESC, vec_id), the
+    reference's rescore=True step (qdrant_client.py:129-138).
 
     ``keep`` names corpus columns this stage's scan reads and carries
     unchanged into each ranked row (after ``score``): the hits' payload,
     so a caller needs no second corpus scan to decorate them.  Stage 1
     never reads them, and ``keep=()`` leaves the plan as it was.
+    ``score_threshold`` keeps the ranked rows whose rounded score
+    reaches it.
 
-    With a single ``probe`` Column (``functions.vector.probe_literal``)
-    the survivors are bare (vec_id), the probe is re-attached as a
-    literal, and the ranking is ``top_k``'s take-ordered plan: the
-    returned (vec_id, score, *keep) rows collect in rank order.
-
-    ``score_threshold`` keeps the rows whose rounded score reaches it;
-    the single-probe plan filters before its take, which keeps the same
-    rows because the kept scores are a prefix of the ranking.
+    A single driver-held probe does not come here: its stage 1 carries
+    the survivors' vectors and payload, and ``_survivors_rescored``
+    rescores them in place, with no broadcast, join or second scan.
 
     One lazy plan: building it starts no Spark job, and both stages run
     only when the caller collects (tests/test_rescore_path.py)."""
     rescored = corpus.select("vec_id", "embedding", *keep).join(
         F.broadcast(survivors), "vec_id"
     )
-    if probe is not None:
-        rescored = with_probe(rescored, probe)
     scored = rescored.withColumn("score", F.expr(cosine_sql("embedding", "q_emb")))
     order = [F.desc("score"), F.col("vec_id")]
     score = F.round("score", 6).alias("score")
-    if probe is not None:
-        if score_threshold is not None:
-            scored = scored.filter(F.round("score", 6) >= score_threshold)
-        return top_k(scored, k, order, ["vec_id", score, *keep], per=None)
     ranked = top_k(scored, k, order, ["q_id", "vec_id", "rank", score, *keep])
     if score_threshold is None:
         return ranked
     return ranked.filter(F.col("score") >= score_threshold)
 
 
-def _companion(corpus: DataFrame, name: str, derive: str) -> DataFrame:
-    """Stage 1's input column: the MATERIALIZED companion ``name`` when
-    the corpus carries it (stage 1 then scans only (vec_id, companion) —
-    ReadSchema excludes ``embedding``, pinned in tests/test_plans.py),
-    else ``derive`` folded into the scan projection.  Both give the same
-    values, so both feed the same stage 2."""
-    col = F.col(name) if name in corpus.columns else F.expr(derive)
-    return corpus.select("vec_id", col.alias(name))
+def _stage1(
+    corpus: DataFrame,
+    probes: DataFrame | Column,
+    companion: str,
+    derive: str,
+    derived: dict,
+) -> DataFrame:
+    """Stage 1's input rows: (vec_id, ``companion``) per corpus row and
+    the probe-side ``derived`` columns (``with_probe``), for the caller to
+    add its stage-1 score to.  The companion is the MATERIALIZED column
+    when the corpus carries it (stage 1 then scans only (vec_id,
+    companion) — ReadSchema excludes ``embedding``, pinned in
+    tests/test_plans.py), else ``derive`` folded into the scan
+    projection; both give the same values.
+
+    A single probe Column keeps every corpus column beside them, and the
+    probe as ``q_emb``: stage 2 rescores the survivors from stage 1's take
+    (``_survivors_rescored``), so the one scan reads what both stages
+    need, and the optimizer prunes the rest."""
+    col = F.col(companion) if companion in corpus.columns else F.expr(derive)
+    if isinstance(probes, DataFrame):
+        return with_probe(
+            corpus.select("vec_id", col.alias(companion)), probes, derived=derived
+        )
+    return corpus.withColumns({companion: col, "q_emb": probes, **derived})
 
 
 def _survivors_rescored(
@@ -320,20 +333,40 @@ def _survivors_rescored(
     k: int,
     keep: tuple,
     score_threshold: float | None,
+    probe_norm: str | None = None,
 ) -> DataFrame:
-    """Stage 1's ``n`` best rows of ``scored`` under ``order`` as the
-    survivors of ``_rescore_survivors``: (q_id, q_emb, vec_id) per query
-    for a query frame, bare (vec_id) for a single probe Column, whose
-    take-ordered stage 1 then runs inside the job that builds stage 2's
-    broadcast."""
-    probe = probes if isinstance(probes, Column) else None
-    if probe is None:
+    """Stage 1's ``n`` best rows of ``scored`` under ``order``, rescored
+    with exact cosine and ranked by (score DESC, vec_id).
+
+    For a query frame they are the survivors (q_id, q_emb, vec_id) of
+    ``_rescore_survivors``.  For a single probe Column the take itself
+    projects (vec_id, embedding, q_emb, *keep), so its ≤ ``n`` rows are
+    scored against the probe (its norm ``probe_norm`` a literal,
+    ``functions.vector.probe_norm_sql``) and ranked by a second take:
+    ``TakeOrderedAndProject(k)`` over ``TakeOrderedAndProject(n)`` over
+    one scan, one Spark job with no exchange.  ``score_threshold``
+    filters the k ranked rows on their rounded score; the rows that pass
+    are a prefix of the ranking, so they are the rows a filter before the
+    take keeps, and each survivor is scored once.  The result is
+    (vec_id, score, *keep) in rank order."""
+    if isinstance(probes, DataFrame):
         survivors = top_k(scored, n, order, ["q_id", "q_emb", "vec_id"])
-    else:
-        survivors = top_k(scored, n, order, ["vec_id"], per=None)
-    return _rescore_survivors(
-        corpus, survivors, k, keep, probe=probe, score_threshold=score_threshold
+        return _rescore_survivors(
+            corpus, survivors, k, keep, score_threshold=score_threshold
+        )
+    survivors = top_k(
+        scored, n, order, ["vec_id", "embedding", "q_emb", *keep], per=None
     )
+    rescored = survivors.withColumn(
+        "score", F.expr(cosine_sql("embedding", "q_emb", probe_norm))
+    )
+    ranked = top_k(
+        rescored, k, [F.desc("score"), F.col("vec_id")],
+        ["vec_id", F.round("score", 6).alias("score"), *keep], per=None,
+    )
+    if score_threshold is None:
+        return ranked
+    return ranked.filter(F.col("score") >= score_threshold)
 
 
 def int8_rescore_topk(
@@ -346,37 +379,37 @@ def int8_rescore_topk(
 ) -> DataFrame:
     """O4 scalar quantization + rescore (qdrant_client.py:129-138):
     stage 1 ranks by the exact-integer INT8 dot product, stage 2
-    (``_rescore_survivors``) rescores the surviving ``oversample × k``
-    with full-precision cosine.
+    rescores the surviving ``oversample × k`` with full-precision cosine.
 
     Stage 1 reads the ``e8`` companion column when the corpus carries it
     MATERIALIZED (written by VectorStore at ingest, or the staged rescore
     layout in workload_ann) — the 4× at-rest scan-byte win — and
     otherwise quantizes ``embedding`` in the scan projection.  ``keep``
-    and ``score_threshold`` go to stage 2 only (``_rescore_survivors``).
+    and ``score_threshold`` apply to stage 2's ranked rows.
 
-    ``probes`` is a (q_id, q_emb) frame, or one driver-held vector: it
-    becomes a ``functions.vector.probe_literal`` Column, its INT8 codes
-    fold to one literal computed by ``int8_codes`` (so stage 1 does not
-    quantize the probe once per corpus row), stage 1 takes its
-    ``oversample × k`` in one take-ordered plan under stage 2's broadcast,
+    ``probes`` is a (q_id, q_emb) frame, whose survivors stage 2
+    (``_rescore_survivors``) broadcasts onto a second scan of the float
+    vectors, or one driver-held vector: it becomes a
+    ``functions.vector.probe_literal`` Column, its INT8 codes fold to one
+    literal computed by ``int8_codes`` (so stage 1 does not quantize the
+    probe once per corpus row), stage 1's take carries its
+    ``oversample × k`` rows' ``embedding`` and ``keep`` to a rescore of
+    just those rows (``_survivors_rescored``: one scan, one Spark job),
     and the result is (vec_id, score, *keep) in rank order.
 
     Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
     score.
     """
     int_dot = "aggregate(zip_with(e8, p8, (x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
-    probes, p8 = _probe_and_code(
+    probes, p8, p_norm = _probe_and_code(
         probes, INT8_QUANT_EXPR.format(col="q_emb"), int8_codes, "int"
     )
-    scored = with_probe(
-        _companion(corpus, "e8", INT8_QUANT_EXPR.format(col="embedding")),
-        probes,
-        derived={"p8": p8},
+    scored = _stage1(
+        corpus, probes, "e8", INT8_QUANT_EXPR.format(col="embedding"), {"p8": p8}
     ).withColumn("iscore", F.expr(int_dot))
     return _survivors_rescored(
         corpus, probes, scored, [F.desc("iscore"), F.col("vec_id")],
-        oversample * k, k, keep, score_threshold,
+        oversample * k, k, keep, score_threshold, p_norm,
     )
 
 
@@ -417,10 +450,9 @@ def matryoshka_rescore_topk(
             f"matryoshka_rescore_topk: prefix_dims must be >= 1, got {prefix_dims}"
         )
     companion = f"e_pre{prefix_dims}"
-    scored = with_probe(
-        _companion(corpus, companion, f"slice(embedding, 1, {prefix_dims})"),
-        probes,
-        derived={"p_pre": f"slice(q_emb, 1, {prefix_dims})"},
+    scored = _stage1(
+        corpus, probes, companion, f"slice(embedding, 1, {prefix_dims})",
+        {"p_pre": f"slice(q_emb, 1, {prefix_dims})"},
     ).withColumn("pscore", F.expr(cosine_sql(companion, "p_pre")))
     return _survivors_rescored(
         corpus, probes, scored, [F.desc("pscore"), F.col("vec_id")],
@@ -495,18 +527,20 @@ def _probe_and_code(
     derive: str,
     twin: Callable[[Sequence[float]], list[int]],
     elem: str,
-) -> tuple[DataFrame | Column, str | Column]:
-    """Stage 1's probe and its quantized code.  A query frame keeps its
-    plan: the code is ``derive`` (SQL over ``q_emb``) per query.  One
-    driver-held vector becomes a ``probe_literal`` Column, and its code
-    is computed on the driver by ``twin`` and folded to one
-    ``array<elem>`` literal, so no corpus row re-derives it."""
+) -> tuple[DataFrame | Column, str | Column, str | None]:
+    """Stage 1's probe, its quantized code and its norm for stage 2.  A
+    query frame keeps its plan: the code is ``derive`` (SQL over
+    ``q_emb``) per query, and stage 2 folds each probe's norm.  One
+    driver-held vector becomes a ``probe_literal`` Column, its code is
+    computed on the driver by ``twin`` and folded to one ``array<elem>``
+    literal, so no corpus row re-derives it, and its norm is a literal
+    (``probe_norm_sql``)."""
     if isinstance(probes, DataFrame):
-        return probes, derive
+        return probes, derive, None
     vec = [float(x) for x in probes]
     probe = probe_literal(vec)  # rejects what has no exact spelling
     code = F.from_json(F.lit(json.dumps(twin(vec))), f"array<{elem}>")
-    return probe, code
+    return probe, code, probe_norm_sql(vec)
 
 
 def bq_hamming_topk(
@@ -523,24 +557,26 @@ def bq_hamming_topk(
     candidates by the HAMMING distance between sign-bit codes (popcount
     of XOR — integer-exact on both engines, so survivors are
     deterministic with the (hamming, vec_id) tiebreak), stage 2
-    (``_rescore_survivors``) rescores the surviving ``oversample × k``
-    with full-precision cosine.
+    rescores the surviving ``oversample × k`` with full-precision cosine
+    (``_survivors_rescored``, as in ``int8_rescore_topk``).
 
-    Plan shape: probe codes broadcast; stage 1 reads the ``bq{dims}``
-    companion column when the corpus carries it MATERIALIZED (written by
-    VectorStore at ingest or the staged rescore layout in workload_ann)
-    — 1 BIGINT word per 32 dims, the 32× at-rest scan-byte win — and
-    otherwise packs ``embedding`` in the scan projection.  The two
-    ranking windows are the only shuffles, same as ``int8_rescore_topk``.
+    Plan shape (query frame): probe codes broadcast; stage 1 reads the
+    ``bq{dims}`` companion column when the corpus carries it MATERIALIZED
+    (written by VectorStore at ingest or the staged rescore layout in
+    workload_ann) — 1 BIGINT word per 32 dims, the 32× at-rest scan-byte
+    win — and otherwise packs ``embedding`` in the scan projection.  The
+    two ranking windows are the only shuffles, same as
+    ``int8_rescore_topk``.
 
     ``dims=None`` switches to the dim-agnostic pack (word count from
     ``size(q_emb)`` at run time) and the store's ``bq_code`` companion
     name — the VectorStore serving path, where the collection dimension
     is data, not a compile-time literal.  ``keep`` and
-    ``score_threshold`` go to stage 2 only (``_rescore_survivors``), and
-    ``probes`` may be one driver-held vector, as in ``int8_rescore_topk``,
-    whose sign-bit words fold to one literal (``bq_words``; the
-    dim-agnostic pack, so only with ``dims=None``).
+    ``score_threshold`` apply to stage 2's ranked rows, and ``probes``
+    may be one driver-held vector, as in ``int8_rescore_topk``: its
+    sign-bit words fold to one literal (``bq_words``; the dim-agnostic
+    pack, so only with ``dims=None``), and stage 1's take carries its
+    survivors' vectors and payload to their rescore (one Spark job).
 
     Returns (q_id, vec_id, rank, score, *keep) — final ranking by exact
     score.
@@ -558,15 +594,15 @@ def bq_hamming_topk(
     )
     if dims is not None and not isinstance(probes, DataFrame):
         raise ValueError("a single probe vector takes dims=None")
-    probes, q_code = _probe_and_code(probes, pack("q_emb"), bq_words, "bigint")
-    scored = with_probe(
-        _companion(corpus, companion, pack("embedding")),
-        probes,
-        derived={"q_code": q_code},
+    probes, q_code, p_norm = _probe_and_code(
+        probes, pack("q_emb"), bq_words, "bigint"
+    )
+    scored = _stage1(
+        corpus, probes, companion, pack("embedding"), {"q_code": q_code}
     ).withColumn("hamming", F.expr(hamming))
     return _survivors_rescored(
         corpus, probes, scored, [F.asc("hamming"), F.col("vec_id")],
-        oversample * k, k, keep, score_threshold,
+        oversample * k, k, keep, score_threshold, p_norm,
     )
 
 

@@ -35,15 +35,27 @@ and its ranking is ``orderBy(score, id).limit(k)``, which Spark plans as
 
 Each partition keeps its own top-k and the driver merges them inside the
 collect's one job: no broadcast build, no ``Exchange``, no rank column (the
-rows collect in rank order).  ``top_k`` holds both rankings.
+rows collect in rank order).  ``top_k`` holds both rankings.  The probe's
+cosine norm is a literal computed on the driver, and a thresholded score
+comes from a generator the filter cannot be pushed through
+(``score_pairs``), so each corpus row runs one dot fold and one norm fold.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_sql, dot_sql, l1_distance_sql, l2_distance_sql
+from ..functions.vector import (
+    cosine_sql,
+    dot_sql,
+    l1_distance_sql,
+    l2_distance_sql,
+    probe_literal,
+    probe_norm_sql,
+)
 
 DEFAULT_SCORE_THRESHOLD = 0.65  # settings.similarity_threshold (settings.py:22)
 MAX_K = 100  # SearchRequest bound (src/api/schemas.py:64)
@@ -85,23 +97,43 @@ def resolve_metric(metric: str):
 
 def score_pairs(
     corpus: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | Sequence[float],
     *,
     corpus_vec: str = "embedding",
     query_vec: str = "q_emb",
     metric: str = "cosine",
+    filtered: bool = False,
 ) -> DataFrame:
     """Cross-score every (corpus row × query row) under ``metric``
     (any of ``METRICS``; default cosine, the reference's pinned choice).
 
     Query side is broadcast (small); scoring stays in whole-stage codegen.
-    A single probe ``Column`` (``probe_literal``) is attached to every
-    corpus row as ``query_vec`` instead, with no join.
+    One driver-held vector (a sequence of floats) is attached to every
+    corpus row as ``query_vec`` instead, a folded literal
+    (``probe_literal``) with no join; under cosine its norm is a literal
+    too (``probe_norm_sql``), so each row folds only its own vector.
+
+    ``filtered`` (a single probe whose caller filters on ``score``) emits
+    the score from a one-element ``explode``.  A filter on a projected
+    score is pushed below the projection with the score expression
+    substituted, and its inferred ``isnotnull`` repeats it, so every row
+    would be scored twice in the filter and each passing row once more in
+    the projection; a generator's output is not substituted, so each row
+    is scored once.
     """
     expr_builder, _ = resolve_metric(metric)
-    return with_probe(corpus, queries, query_vec).withColumn(
-        "score", F.expr(expr_builder(corpus_vec, query_vec))
-    )
+    if isinstance(queries, DataFrame):
+        score = expr_builder(corpus_vec, query_vec)
+        return with_probe(corpus, queries, query_vec).withColumn("score", F.expr(score))
+    vec = [float(x) for x in queries]
+    if expr_builder is cosine_sql:
+        score = cosine_sql(corpus_vec, query_vec, probe_norm_sql(vec))
+    else:
+        score = expr_builder(corpus_vec, query_vec)
+    probed = with_probe(corpus, probe_literal(vec), query_vec)
+    if filtered:
+        return probed.select("*", F.expr(f"explode(array({score})) AS score"))
+    return probed.withColumn("score", F.expr(score))
 
 
 def with_probe(
@@ -209,9 +241,9 @@ def knn_search(
     The columns ride through the ranking shuffle only after the
     per-partition top-k limit; ``keep=()`` leaves the plan as it was.
 
-    ``queries`` is a (q_id, q_emb) frame, or one probe as a
-    ``probe_literal`` Column, which takes the single-probe plan (module
-    docstring) and returns (vec_id, score, *keep) in rank order.
+    ``queries`` is a (q_id, q_emb) frame, or one driver-held vector,
+    which takes the single-probe plan (module docstring) and returns
+    (vec_id, score, *keep) in rank order.
 
     Returns: (q_id, vec_id, rank, score, *keep) — score rounded to 6dp for
     stable cross-engine comparison; ranking uses the unrounded value.
@@ -238,7 +270,8 @@ def knn_search(
             build_filter(query_filter, id_col=corpus_id, schema=corpus.schema)
         )
     scored = score_pairs(
-        corpus, queries, corpus_vec=corpus_vec, query_vec=query_vec, metric=metric
+        corpus, queries, corpus_vec=corpus_vec, query_vec=query_vec, metric=metric,
+        filtered=score_threshold is not None,
     )
     if score_threshold is not None:
         if lower_is_better:
@@ -247,7 +280,7 @@ def knn_search(
             scored = scored.filter(F.col("score") >= float(score_threshold))
     order = [F.asc("score") if lower_is_better else F.desc("score"), F.col(corpus_id)]
     score = F.round("score", 6).alias("score")
-    if isinstance(queries, Column):
+    if not isinstance(queries, DataFrame):
         return top_k(scored, k, order, [corpus_id, score, *keep], per=None, offset=offset)
     return top_k(
         scored, k, order, [query_id, corpus_id, "rank", score, *keep],

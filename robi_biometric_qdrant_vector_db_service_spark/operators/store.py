@@ -66,7 +66,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_normalize_sql, probe_literal
+from ..functions.vector import l2_normalize_sql
 from ..session import local_frame
 
 POINT_SCHEMA = (
@@ -191,20 +191,23 @@ def search_corpus(
 
     ``queries`` may instead be ONE driver-held vector (a sequence of
     floats, the HTTP request's embedding).  It becomes a folded
-    ``array<double>`` literal (``functions.vector.probe_literal``; a
-    quantized search also folds the probe's INT8 codes or sign-bit words,
-    computed on the driver) and the ranking becomes
-    ``TakeOrderedAndProject`` (``search.top_k``):
-    an exact search is one Spark job (scan, score, threshold, take), a
-    quantized one two (stage 1's take builds stage 2's broadcast).  The
-    result is (point_id, score, *keep), collected in rank order; the
-    rows are the frame form's for that query (tests/test_service_search.py).
+    ``array<double>`` literal (``functions.vector.probe_literal``; its
+    cosine norm, and for a quantized search its INT8 codes or sign-bit
+    words, are computed on the driver and folded too) and the ranking
+    becomes ``TakeOrderedAndProject`` (``search.top_k``).  Either search
+    is one Spark job with no exchange: an exact one scans, scores,
+    thresholds and takes; a quantized one takes stage 1's
+    ``oversample × k`` best rows with their vectors and payload, rescores
+    just those and takes again.  The result is (point_id, score, *keep),
+    collected in rank order; the rows are the frame form's for that query
+    (tests/test_service_search.py).
 
     ``keep`` names corpus columns (the payload: ``user_id``, ``metadata``,
     ``ts``) carried unchanged into each ranked row, read by the same scan
-    that scores the vectors (stage 2's scan for quantized search), so the
-    hits and their payload come from one read of one snapshot with no
-    join back onto the corpus.  ``keep=()`` leaves the plan as it was.
+    that scores the vectors (stage 2's scan for a quantized query frame,
+    the one scan for a single vector), so the hits and their payload come
+    from one read of one snapshot with no join back onto the corpus.
+    ``keep=()`` leaves the plan as it was.
 
     Without ``quantization`` this is exact cosine top-k.  With it, the
     two-stage rescore over the MATERIALIZED companion columns every
@@ -212,9 +215,10 @@ def search_corpus(
     INT8 scalar quantization, ``oversampling`` 3.0, ``rescore`` True):
     ``"int8"`` prescreens by integer dot product over the at-rest ``e8``
     column, ``"binary"`` by Hamming distance over ``bq_code``; both
-    rescore the ``oversample × k`` survivors with exact cosine
-    (``ann._rescore_survivors``), and stage 1 never reads the float
-    vectors (ReadSchema pinned in tests/test_plans.py).
+    rescore the ``oversample × k`` survivors with exact cosine.  For a
+    query frame stage 1 never reads the float vectors (ReadSchema pinned
+    in tests/test_plans.py) and stage 2 (``ann._rescore_survivors``)
+    joins its survivors back onto them.
     ``score_threshold`` applies to the exact score, as in Qdrant."""
     from . import ann
     from .search import knn_search
@@ -222,24 +226,19 @@ def search_corpus(
     if quantization is None:
         return knn_search(
             corpus,
-            queries if isinstance(queries, DataFrame) else probe_literal(queries),
+            queries,
             k,
             score_threshold=score_threshold,
             corpus_id="point_id",
             keep=keep,
         )
+    src = corpus.withColumnRenamed("point_id", "vec_id")
     if quantization == "int8":
-        src = corpus.select(
-            F.col("point_id").alias("vec_id"), "embedding", "e8", *keep
-        )
         out = ann.int8_rescore_topk(
             src, queries, k=k, oversample=oversample, keep=keep,
             score_threshold=score_threshold,
         )
     elif quantization == "binary":
-        src = corpus.select(
-            F.col("point_id").alias("vec_id"), "embedding", "bq_code", *keep
-        )
         out = ann.bq_hamming_topk(
             src, queries, k=k, oversample=oversample, dims=None, keep=keep,
             score_threshold=score_threshold,

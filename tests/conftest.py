@@ -40,6 +40,13 @@ def jobs_during(spark, run):
     return list(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def stages_of(spark, jobs) -> int:
+    """How many stages the finished Spark ``jobs`` ran (a stage an earlier
+    job already ran counts too: its job lists it as skipped)."""
+    tracker = spark.sparkContext.statusTracker()
+    return sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from robi_biometric_qdrant_vector_db_service_spark.session import get_spark
